@@ -42,16 +42,6 @@ object Bench {
     "events_resample_daily", "multimodal_decode_png", "scalar_math",
     "search_mmr_rerank")
 
-  /** Collapsed reporting family: every `q<digits>_*` TPC-H query shares
-    * the "q" window (22 one-query windows would waste probe chars); all
-    * other names report under their release-boundary family prefix.
-    */
-  private def group(name: String): String = {
-    val fam = name.takeWhile(_ != '_')
-    if (fam.length > 1 && fam.head == 'q' && fam.tail.forall(_.isDigit)) "q"
-    else fam
-  }
-
   // Locale.ROOT: the default-locale f-interpolator would render comma
   // decimal separators (e.g. under LANG=de_DE) and break the JSON line
   private def fmt(v: Double): String =
@@ -120,29 +110,22 @@ object Bench {
     // memory floor and makes tail queries hostage to co-tenant load
     // (round-2 bench recorded 41 s for a 0.2 s query that way).
     //
-    // r18: the release boundary is the REPORTING family (group(), which
-    // collapses q<digits> to "q") — the raw takeWhile('_') prefix made
-    // every TPC-H query its own one-query window, so the r18 shared
-    // fact-table persists (Tables.lineitemShared et al.) would have been
-    // rebuilt and dropped 22 times across the contiguous q block for
-    // zero reuse. Verify.scala applies the same collapse. Timing
-    // methodology (min of two passes, adaptive third) is unchanged.
-    def family(name: String): String = group(name)
+    // The release boundary is the reporting family (SparkEntry.family,
+    // which collapses q<digits> to "q"), so the shared fact-table
+    // persists (Tables.lineitemShared et al.) serve the whole contiguous
+    // q block. Verify releases by the same rule.
     var prevFamily: String = null
-    var prevGroup: String = null
     var sinceProbe = 0
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val fam = family(name)
-      if (prevFamily != null && fam != prevFamily) CachePool.releaseAll()
-      prevFamily = fam
-      val grp = group(name)
-      if (prevGroup == null) recordProbe(grp, calibPass())
-      else if (grp != prevGroup) {
+      val fam = SparkEntry.family(name)
+      if (prevFamily == null) recordProbe(fam, calibPass())
+      else if (fam != prevFamily) {
+        CachePool.releaseAll()
         // a boundary probe bounds BOTH windows (end of one, start of next)
         val p = calibPass()
-        recordProbe(prevGroup, p); recordProbe(grp, p); sinceProbe = 0
-      } else if (sinceProbe >= 8) { recordProbe(grp, calibPass()); sinceProbe = 0 }
-      prevGroup = grp
+        recordProbe(prevFamily, p); recordProbe(fam, p); sinceProbe = 0
+      } else if (sinceProbe >= 8) { recordProbe(fam, calibPass()); sinceProbe = 0 }
+      prevFamily = fam
       sinceProbe += 1
       // min of two timed passes: this box is co-tenant-loaded, and four
       // consecutive rounds recorded artifacts shifted 1.5-170× on
@@ -179,7 +162,7 @@ object Bench {
       name -> passes
     }
     // closing probe: the last window needs an end anchor too
-    if (prevGroup != null) recordProbe(prevGroup, calibPass())
+    if (prevFamily != null) recordProbe(prevFamily, calibPass())
     val byName = results.map { case (k, v) => k -> v.min }.toMap
     val total = byName.values.sum
     // The global anchor (kept for artifact compatibility): best-of-three
@@ -198,7 +181,7 @@ object Bench {
     // headline below is attribution detail, not the verdict input.
     def fmt1(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val famTot = results.groupBy(r => group(r._1)).toSeq.sortBy(_._1)
+    val famTot = results.groupBy(r => SparkEntry.family(r._1)).toSeq.sortBy(_._1)
       .map { case (g, rs) => s"\"$g\":${fmt1(rs.map(_._2.min).sum)}" }
       .mkString("{", ",", "}")
     val qs = headline.filter(byName.contains)

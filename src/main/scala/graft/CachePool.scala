@@ -2,34 +2,28 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-lifetime registry for library-internal persists.
+/** Session-lifetime registry for library-internal persists and memos.
   *
-  * Queries like the dedup family persist shared intermediates (shingle
-  * postings) so that sequential queries in one session reuse one cache
-  * entry (Spark's CacheManager matches identical analyzed plans). Those
-  * entries must NOT live forever: a long-running session that touches
-  * many sfDirs would accumulate one cache entry per distinct plan.
-  * Every persist goes through here; entry points (Verify, Bench, user
-  * sessions via [[GraftSession]]) call [[releaseAll]] when a batch of
-  * work is done. Unpersisting an already-released DataFrame is a no-op,
-  * so double-release is safe.
+  * Queries in one family share intermediates: persisted relations (the
+  * dedup family's shingle postings, the family-window table scans) and
+  * collected planner-sized values (IVF centroids, PQ codebooks, BPE
+  * merge tables). [[persist]] registers a DataFrame for later unpersist;
+  * [[shared]] memoizes a built value per (session, dir, name) so every
+  * consumer in the window gets the same instance. Neither may live
+  * forever: a long-running session that touches many sfDirs would
+  * accumulate one entry per distinct plan. Entry points (Verify, Bench,
+  * user sessions via [[GraftSession]]) call [[releaseAll]] when a batch
+  * of work is done. Unpersisting an already-released DataFrame is a
+  * no-op, so double-release is safe.
   */
 object CachePool {
   private val refs = new ConcurrentLinkedQueue[DataFrame]()
-  // JVM-lifetime release hooks: operator families that memoize
-  // DataFrame-shaped intermediates OUTSIDE the pool (e.g. the graph
-  // tier's per-(dir, beam) search memo) register a clear() here so one
-  // releaseAll() drops every cache layer coherently — otherwise a memo
-  // outlives the persisted relations it was built from, the reuse
-  // pricer reports a fake-cold first run, and regenerated data at the
-  // same path can serve stale results within one JVM (r13 advice).
-  private val resetHooks = new ConcurrentLinkedQueue[() => Unit]()
-
-  /** Register a hook to run on every [[releaseAll]] (never drained). */
-  def onRelease(hook: () => Unit): Unit = resetHooks.add(hook)
+  private val memo = TrieMap.empty[(SparkSession, String, String), Any]
 
   /** Persist (MEMORY_AND_DISK) and register for later release.
     *
@@ -55,8 +49,33 @@ object CachePool {
     df
   }
 
-  /** Unpersist every registered DataFrame (non-blocking) and run the
-    * registered reset hooks (memo clears in operator families).
+  /** The one memo for values derived from a corpus: `build` runs once
+    * per (session, dir, name) until the next [[releaseAll]], and every
+    * later call returns the same instance. `name` must identify the
+    * recipe, including any parameter the value depends on (a beam set,
+    * a table), and must not be reused for a different value type.
+    *
+    * The memoized values are pure functions of the data at `dir`, so
+    * reuse is safe within a release window, which is the only place it
+    * matters (Verify and Bench release at family boundaries). Keying by
+    * session means a second SparkSession never receives a DataFrame
+    * bound to the first; keying by dir bounds the entries to the corpora
+    * touched. Clearing on release drops every layer coherently: a memo
+    * never outlives the persisted relations it was built from, so the
+    * reuse pricer sees an honest cold run and regenerated data at the
+    * same path never serves a stale value. Builders persist,
+    * localCheckpoint or collect on their own; this only memoizes.
+    *
+    * Builders nest (one shared value built inside another's `build`),
+    * which `TrieMap.getOrElseUpdate` allows because it runs `build`
+    * outside any lock. Two racers may both build; one result wins and
+    * the other is wasted work, never a wrong answer.
+    */
+  def shared[T](spark: SparkSession, dir: String, name: String)(build: => T): T =
+    memo.getOrElseUpdate((spark, dir, name), build).asInstanceOf[T]
+
+  /** Unpersist every registered DataFrame (non-blocking), then drop
+    * every [[shared]] value.
     */
   def releaseAll(): Unit = {
     var df = refs.poll()
@@ -64,6 +83,6 @@ object CachePool {
       df.unpersist(blocking = false)
       df = refs.poll()
     }
-    resetHooks.forEach(h => h())
+    memo.clear()
   }
 }

@@ -49,8 +49,11 @@ object GraftSession {
         s"unknown query '$name'; available: ${catalog.mkString(", ")}")
     )(spark, sfDir)
 
-  /** Release library-internal caches (shared dedup intermediates etc.).
-    * Call when a batch of queries is done; safe to call repeatedly.
+  /** Release library-internal caches: unpersist the shared persisted
+    * intermediates (dedup postings, family-window table scans etc.) and
+    * drop every value memoized through [[CachePool.shared]], so the next
+    * query rebuilds from the data. Call when a batch of queries is done;
+    * safe to call repeatedly.
     */
   def release(): Unit = CachePool.releaseAll()
 }

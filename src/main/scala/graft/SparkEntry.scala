@@ -30,6 +30,19 @@ object SparkEntry {
     latest.join(stats, "user_id")
   }
 
+  /** A query's family: the name's prefix before the first `_`, with every
+    * TPC-H `q<digits>_*` query collapsed into one "q" family. Queries
+    * run in name order, so each family is contiguous; Bench and Verify
+    * release the CachePool at family boundaries, so the shared fact
+    * tables serve the whole TPC-H block instead of being rebuilt per
+    * query, and Bench reports per family.
+    */
+  def family(name: String): String = {
+    val fam = name.takeWhile(_ != '_')
+    if (fam.length > 1 && fam.head == 'q' && fam.tail.forall(_.isDigit)) "q"
+    else fam
+  }
+
   /** One entry per implemented operator from SURVEY.md §2 + north-star ops. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     pipeline.CdcQueries.queries ++

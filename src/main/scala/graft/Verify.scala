@@ -26,20 +26,12 @@ object Verify {
     // the same policy Bench uses, for the same reason: carrying every
     // family's MEMORY_AND_DISK blocks to the end raises the late-run
     // memory floor for no reuse benefit.
-    // r18: q<digits> queries collapse into one "q" release window (the
-    // Bench.group convention) so the shared fact-table persists serve
-    // the whole contiguous TPC-H block instead of being rebuilt per
-    // query — see Bench.scala's family() note.
-    def family(name: String): String = {
-      val fam = name.takeWhile(_ != '_')
-      if (fam.length > 1 && fam.head == 'q' && fam.tail.forall(_.isDigit)) "q"
-      else fam
-    }
     var prevFamily: String = null
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      if (prevFamily != null && family(name) != prevFamily) CachePool.releaseAll()
-      prevFamily = family(name)
+      val fam = SparkEntry.family(name)
+      if (prevFamily != null && fam != prevFamily) CachePool.releaseAll()
+      prevFamily = fam
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -244,33 +244,20 @@ object Dedup {
     * `shortcut = false` recovers plain propagation (kept for the spec
     * that proves the shortcut reduces rounds without changing output).
     */
-  /** Memoized cluster assignment per (dir, pair-kind): three queries
-    * consume the label-propagation fixpoint (`dedup_clusters`,
+  /** Shared cluster assignment per pair-kind: three queries consume the
+    * label-propagation fixpoint (`dedup_clusters`,
     * `dedup_simhash_clusters`, `dedup_keep_canonical`) and the loop's
-    * collects are the expensive part — run it once per JVM per corpus.
-    * Keyed by (dir, kind) like Similarity's centroid memo: entries are
-    * bounded by distinct corpora touched; the stored DataFrame is
-    * backed by localCheckpoint'ed RDDs, valid for the lifetime of the
-    * one JVM-wide SparkContext this library runs under. A losing racer
-    * recomputes the same deterministic result — wasted work, never
-    * wrong answers.
+    * collects are the expensive part — run it once per release window.
+    * The stored DataFrame is backed by localCheckpoint'ed RDDs.
     */
-  private val componentsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  // The uniform memo-lifetime convention (r14 advice): per-dir memos
-  // clear on CachePool.releaseAll, so a release boundary resets every
-  // cache layer coherently (see the Similarity hook for the rationale).
-  graft.CachePool.onRelease(() => componentsMemo.clear())
-
   private def componentsFor(s: SparkSession, d: String, kind: String,
       pairsOf: (SparkSession, String) => DataFrame): DataFrame =
-    componentsMemo.getOrElseUpdate((d, kind), {
+    graft.CachePool.shared(s, d, s"dedup_components/$kind") {
       val pairs = pairsOf(s, d)
       val docs = Tables.documents(s, d).select(col("doc_id"))
       connectedComponents(docs,
         pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))._1
-    })
+    }
 
   private[graft] def connectedComponents(docs: DataFrame, pairs: DataFrame,
       shortcut: Boolean = true): (DataFrame, Int) = {

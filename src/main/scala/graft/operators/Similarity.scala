@@ -176,19 +176,13 @@ object Similarity {
     * an ascending-index seedless reduceLeft — token-for-token the
     * oracle's `list_reduce(list(... ORDER BY ...))`, so the returned
     * (eigenvector, Rayleigh quotient, matrix) are bitwise-mirrored.
-    * Shared by ann_top_component and ann_anisotropy_ratio.
+    * Shared by ann_top_component and ann_anisotropy_ratio, which also
+    * share the collected O(d²) covariance so its agg runs once per
+    * corpus per release window.
     */
-  /** Collected upper-triangle covariance per dir — the centroidCache
-    * convention: a pure function of the data, O(d²) doubles, shared by
-    * ann_top_component and ann_anisotropy_ratio so the covariance agg
-    * runs once per corpus per JVM.
-    */
-  private val covCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[(Long, Long, Double)]]
-
   private def powerIterate(s: SparkSession, d: String)
       : (Array[Double], Double, Array[Array[Double]]) = {
-    val rows = covCache.getOrElseUpdate(d,
+    val rows = graft.CachePool.shared(s, d, "ann_covariance")(
       queries("ann_covariance")(s, d).select("dim_i", "dim_j", "cov")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
     val C = Array.ofDim[Double](DIM, DIM)
@@ -209,40 +203,6 @@ object Similarity {
     val lambda = (0 until DIM).map(i => v(i) * wl(i)).reduceLeft(_ + _)
     (v, lambda, C)
   }
-
-  /** IVF coarse centroids: stride-sampled seeds refined by
-    * [[REFINE_ITERS]] Lloyd passes (assign every corpus vector to its
-    * nearest centroid, recentre on the element-wise mean). Cosine
-    * ranking is scale-invariant, so the plain mean IS the spherical
-    * k-means centroid for ranking purposes — no normalization step.
-    *
-    * Measured against the brute-force ground truth: refinement buys
-    * recall-per-probe — at sf0.1 the probe count where every query
-    * reaches recall ≥ 0.8 drops from 25/40 cells (2 passes) to 19/40
-    * (5 passes); at sf0.01 mean recall 0.8 moves from 6 to 5 probes.
-    *
-    * Scale shape: each pass is one broadcast join over the corpus (the
-    * corpus never shuffles) + a (cent_id, dim)-keyed hash aggregation
-    * whose output is k·d rows. Means are summed through decimal (exact,
-    * order-independent) and divided as doubles so Spark and the DuckDB
-    * oracle produce bitwise-identical centroids. The k·d means are
-    * collected to the driver to rebuild array rows — k ≪ n is the
-    * definition of coarse quantization, so this is O(centroids), not
-    * O(data); the rebuilt table is broadcast right back.
-    */
-  /** Refined centroids are a pure function of the DATA (deterministic
-    * seeds, deterministic Lloyd passes), and both IVF queries (plus the
-    * recall query, twice) construct them — memoize the k·d collected
-    * values per dir so the passes run once per release window (the
-    * memo clears on CachePool.releaseAll — the uniform per-dir memo
-    * convention). Keyed by dir ONLY: session-identity keys would leak
-    * an entry per dead session, while dir entries are bounded by the
-    * number of distinct corpora touched (each O(centroids · dim)
-    * doubles). A losing racer recomputes the same values — wasted work,
-    * never wrong results.
-    */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Seq[Double])]]
 
   /** PQ design point: M subspaces of DIM/M dims each. Two codebook
     * tiers exist: the LABEL baseline (per-label centroids restricted
@@ -300,15 +260,12 @@ object Similarity {
     */
   private val ADC_SHORTLIST = 200
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, Int, Seq[Double])]]
-
   /** PQ codebook rows (subspace, codeword label, codeword) — memoized
     * per corpus like [[centroidSeq]]: O(labels·DIM) collected once,
     * shared by ann_pq_error and the IVFADC search pair.
     */
   private def pqCodebookSeq(s: SparkSession, d: String): Seq[(Int, Int, Seq[Double])] =
-    pqCache.getOrElseUpdate(d, {
+    graft.CachePool.shared(s, d, "ann_pq_codebook") {
       val Q = 1073741824.0 // 2^30
       val means = Tables.embeddings(s, d)
         .select(col("label"), VectorOps.asDouble(col("embedding")).as("e"))
@@ -322,15 +279,12 @@ object Similarity {
         (0 until PQ_M).map(sId =>
           (sId, l, c.slice(sId * PQ_SUB, (sId + 1) * PQ_SUB)))
       }
-    })
+    }
 
   private def pqCodebookDf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     pqCodebookSeq(s, d).toDF("s", "label", "cw")
   }
-
-  private val pqTrainedCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, Long, Seq[Double])]]
 
   /** TRAINED per-subspace PQ codebooks — real Lloyd k-means in each
     * subspace (rows: subspace, codeword id, codeword), memoized like
@@ -351,7 +305,7 @@ object Similarity {
     * training (they are the search workload, not the corpus).
     */
   private def pqTrainedSeq(s: SparkSession, d: String): Seq[(Int, Long, Seq[Double])] =
-    pqTrainedCache.getOrElseUpdate(d, {
+    graft.CachePool.shared(s, d, "ann_pq_trained") {
       import s.implicits._
       graft.plans.TopK.installedWithRewrite(s)
       GraftFunctions.register(s)
@@ -389,7 +343,7 @@ object Similarity {
         cb = rebuilt.toDF("s", "plabel", "cw")
       }
       cb.as[(Int, Long, Seq[Double])].collect().toSeq
-    })
+    }
 
   private def pqTrainedDf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -437,9 +391,32 @@ object Similarity {
     cents.as[(Long, Seq[Double])].collect().toSeq
   }
 
+  /** IVF coarse centroids: stride-sampled seeds refined by
+    * [[REFINE_ITERS]] Lloyd passes (assign every corpus vector to its
+    * nearest centroid, recentre on the element-wise mean). Cosine
+    * ranking is scale-invariant, so the plain mean IS the spherical
+    * k-means centroid for ranking purposes — no normalization step.
+    *
+    * Measured against the brute-force ground truth: refinement buys
+    * recall-per-probe — at sf0.1 the probe count where every query
+    * reaches recall ≥ 0.8 drops from 25/40 cells (2 passes) to 19/40
+    * (5 passes); at sf0.01 mean recall 0.8 moves from 6 to 5 probes.
+    *
+    * Scale shape: each pass is one broadcast join over the corpus (the
+    * corpus never shuffles) + a (cent_id, dim)-keyed hash aggregation
+    * whose output is k·d rows. Means are summed through decimal (exact,
+    * order-independent) and divided as doubles so Spark and the DuckDB
+    * oracle produce bitwise-identical centroids. The k·d means are
+    * collected to the driver to rebuild array rows — k ≪ n is the
+    * definition of coarse quantization, so this is O(centroids), not
+    * O(data); the rebuilt table is broadcast right back. Both IVF
+    * queries (plus the recall query, twice) construct the centroids, so
+    * the k·d collected values are shared and the passes run once per
+    * release window.
+    */
   private def centroidSeq(s: SparkSession, d: String): Seq[(Long, Seq[Double])] =
-    centroidCache.getOrElseUpdate(
-      d, lloydRefine(s, corpusDf(s, d),
+    graft.CachePool.shared(s, d, "ann_centroids")(
+      lloydRefine(s, corpusDf(s, d),
         emb(s, d).filter(col("vec_id") % CENT_STRIDE === 0)
           .select(col("vec_id").as("cent_id"), col("e").as("ce"))))
 
@@ -458,21 +435,18 @@ object Similarity {
     */
   private val ADC_DEPTHS = Seq(10, 25, 50, 100, 200)
 
-  private val adcDepthCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
   /** The IVFADC scored pool — PQ-encode the corpus against the trained
     * codebooks, IVF-assign + probe, rank probed candidates by ADC, and
     * re-score the top [[ADC_SHORTLIST]] (the POOL bound = the grid's
     * deepest point) at full precision, keeping each candidate's ADC
-    * rank `srn`. ONE relation, persisted and memoized per dir (r17 —
+    * rank `srn`. ONE relation, persisted and shared per corpus (r17 —
     * previously ann_ivfadc_topk and _refine_curve each rebuilt the
     * whole encode+probe+ADC chain), consumed by the topk re-rank at
     * the derived depth, the refine curve's five re-ranks, and the
     * depth knob itself.
     */
   private def ivfadcScored(s: SparkSession, d: String): DataFrame =
-    memoRel(d, "adc_scored", () => {
+    graft.CachePool.shared(s, d, "ann_adc_scored") {
       graft.plans.TopK.installedWithRewrite(s)
       GraftFunctions.register(s)
       val cents = centroidsDf(s, d)
@@ -529,15 +503,15 @@ object Similarity {
         .withColumn("cosine", cos(col("qe"), col("e")))
         .select("q_id", "vec_id", "cosine", "srn")
         .transform(graft.CachePool.persist)
-    })
+    }
 
   /** The brute-force exact top-K ground truth (q_id, vec_id) — the
     * declared whitelisted baseline every recall arm joins against,
-    * memoized per dir so the four graph curves, the refine curve, and
+    * shared per corpus so the four graph curves, the refine curve, and
     * the depth knob share one persisted relation.
     */
   private def annExactTopK(s: SparkSession, d: String): DataFrame =
-    memoRel(d, "ann_exact", () =>
+    graft.CachePool.shared(s, d, "ann_exact")(
       topK(corpusDf(s, d).join(broadcast(queriesDf(s, d)))
           .withColumn("cosine", cos(col("qe"), col("e"))))
         .select("q_id", "vec_id")
@@ -563,7 +537,7 @@ object Similarity {
     * construction of the ≥99% rule.
     */
   private def adcShortlist(s: SparkSession, d: String): Int =
-    adcDepthCache.getOrElseUpdate(d, {
+    graft.CachePool.shared(s, d, "ann_adc_depth") {
       val sc = ivfadcScored(s, d)
       val exact = annExactTopK(s, d)
       // one depth-tagged job for the whole grid (r17 — was one
@@ -585,7 +559,7 @@ object Similarity {
       val maxH = h.last._2
       h.collectFirst { case (dp, c) if c * 100L >= 99L * maxH => dp }
         .getOrElse(ADC_DEPTHS.last)
-    })
+    }
 
   /** Incremental-maintenance fence (the `dedup_incremental`
     * snapshot-vs-corpus convention carried to the vector tier): the
@@ -598,18 +572,15 @@ object Similarity {
     */
   private val INC_BATCH_DIV = 10
 
-  private val incFenceCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   private[graft] def incFence(s: SparkSession, d: String): Long =
-    incFenceCache.getOrElseUpdate(d, {
+    graft.CachePool.shared(s, d, "ann_inc_fence") {
       val r = corpusDf(s, d)
         .agg(max(col("vec_id")), count(lit(1))).head()
       // empty corpus (truncated table / empty partition): MAX is NULL;
       // any fence works since both cohorts are empty — use -1
       if (r.isNullAt(0)) -1L
       else r.getLong(0) - math.ceil(r.getLong(1).toDouble / INC_BATCH_DIV).toLong
-    })
+    }
 
   /** Nearest-standing-centroid assignment — the incremental append's
     * whole per-batch cost: ONE broadcast join (the centroid set is
@@ -650,8 +621,8 @@ object Similarity {
       .select(col("vec_id"), col("cent_id"))
   }
 
-  /** The incremental A/B's two centroid sets, memoized per dir like
-    * [[centroidCache]] (collected planner-sized values): STANDING =
+  /** The incremental A/B's two centroid sets, shared per corpus like
+    * [[centroidSeq]] (collected planner-sized values): STANDING =
     * Lloyd over the standing corpus only (what a deployed index has),
     * FULL = the same seeds re-refined over standing ∪ batch (what a
     * full rebuild would produce). Both arms share the SEED set (the
@@ -660,19 +631,16 @@ object Similarity {
     * vectors would change cells if we re-trained — not an id-matching
     * puzzle between two unrelated seedings.
     */
-  private val incCentCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(Long, Seq[Double])], Seq[(Long, Seq[Double])])]
-
   private def incCents(s: SparkSession, d: String)
       : (Seq[(Long, Seq[Double])], Seq[(Long, Seq[Double])]) =
-    incCentCache.getOrElseUpdate(d, {
+    graft.CachePool.shared(s, d, "ann_inc_cents") {
       val fence = incFence(s, d)
       val standing = corpusDf(s, d).filter(col("vec_id") <= fence)
       val seeds = standing.filter(col("vec_id") % CENT_STRIDE === 0)
         .select(col("vec_id").as("cent_id"), col("e").as("ce"))
       (lloydRefine(s, standing, seeds),
         lloydRefine(s, corpusDf(s, d), seeds))
-    })
+    }
 
   /** [[SEMDEDUP_PROBES]]-nearest-cell multi-probe assignment against an
     * arbitrary centroid set — [[semdedupAssign]]'s shape with the
@@ -821,15 +789,9 @@ object Similarity {
   private val MMR_SHORTLIST = 20
   private val MMR_K = 5
 
-  /** Per-dir derived entry stride (one tiny count job, memoized — the
-    * centroidCache convention; cleared with the search memo on
-    * CachePool.releaseAll).
-    */
-  private val graphStrideCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
+  /** Per-corpus derived entry stride (one tiny count job, shared). */
   private[graft] def graphStride(s: SparkSession, d: String): Long =
-    graphStrideCache.getOrElseUpdate(d, math.max(1L, math.ceil(
+    graft.CachePool.shared(s, d, "ann_graph_stride")(math.max(1L, math.ceil(
       corpusDf(s, d).count().toDouble / GRAPH_ENTRY_BUDGET).toLong))
 
   private[graft] def graphEntryBudget: Int = GRAPH_ENTRY_BUDGET
@@ -929,7 +891,7 @@ object Similarity {
     * recall-identical at 1-2% extra cost.
     */
   private def graphEdgesBridged(s: SparkSession, d: String): DataFrame =
-    memoRel(d, "bridged", () => {
+    graft.CachePool.shared(s, d, "ann_bridged") {
       val sd = semdedupAssign(s, d).filter(col("vec_id") >= N_QUERIES)
       val prim = sd.filter(col("arn") === 1)
         .select(col("vec_id"), col("cent_id").as("pcell"))
@@ -952,41 +914,7 @@ object Similarity {
       symmetrize(graphEdgesSym(s, d).unionByName(bridge))
         .select("src", "dst")
         .transform(graft.CachePool.persist)
-    })
-
-  /** Memoized search RELATIONS per (dir, beams, tag) — the walk is a
-    * pure function of the data and three queries plus every bench pass
-    * would otherwise re-run the same 8-round job chain (measured
-    * 15.5 s for the 4-width curve at sf0.1 before memoization). Unlike
-    * the centroid/PQ memos (planner-sized collected VALUES), the
-    * visited set and cost ledger stay DISTRIBUTED: r13 collected both
-    * to the driver, which grew with the corpus through the hop-0 scan
-    * — the r13 verdict's one weak flag. The final lazily-checkpointed
-    * DataFrames are shared instead (first action materializes the RDD
-    * blocks executor-side; later consumers reuse them), and the memo
-    * clears on CachePool.releaseAll via the onRelease hook below, so
-    * the reuse pricer sees an honest cold run and regenerated data at
-    * the same path can never serve stale results (r13 advice).
-    *
-    * Since r17 one entry holds ALL the curve's beam widths (the `bw`
-    * column — see [[beamWalkRounds]]): the key's middle component is
-    * the width SET, and per-width consumers filter on bw.
-    */
-  private val graphSearchCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Int], String), (DataFrame, DataFrame)]
-
-  /** Memoized RELATIONS per (dir, tag) — edge relations for the
-    * incremental/bridge arms and (r17) the shared IVFADC scored pool +
-    * exact ground truth: the DataFrame (already CachePool-persisted
-    * inside its builder) is reused across the queries that consume it
-    * without a second construction; cleared with the search memo below.
-    */
-  private val graphEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
-  private def memoRel(d: String, tag: String, fn: () => DataFrame)
-      : DataFrame =
-    graphEdgeCache.getOrElseUpdate((d, tag), fn())
+    }
 
   /** The incremental arms' building blocks, factored out of the
     * `ann_incremental_graph` closure (r14 advice) so that (a) the spec
@@ -994,34 +922,34 @@ object Similarity {
     * of the symmetrized standing build, and every extra edge touches a
     * batch node — instead of a corpus-tuned volume tolerance, and (b)
     * the streaming ingestion test can compare a per-microbatch edge
-    * append against the exact batch relations. All memoized per dir
-    * via [[memoRel]]; the multi-probe assignments are persisted
-    * because the standing build and the batch append both consume them.
+    * append against the exact batch relations. All shared per corpus;
+    * the multi-probe assignments are persisted because the standing
+    * build and the batch append both consume them.
     */
   private def incStandAssign(s: SparkSession, d: String): DataFrame =
-    memoRel(d, "inc_sassign", () => {
+    graft.CachePool.shared(s, d, "ann_inc_sassign") {
       import s.implicits._
       probeAssign(
           corpusDf(s, d).filter(col("vec_id") <= incFence(s, d)),
           incCents(s, d)._1.toDF("cent_id", "ce"))
         .transform(graft.CachePool.persist)
-    })
+    }
 
   private def incBatchAssign(s: SparkSession, d: String): DataFrame =
-    memoRel(d, "inc_bassign", () => {
+    graft.CachePool.shared(s, d, "ann_inc_bassign") {
       import s.implicits._
       probeAssign(
           corpusDf(s, d).filter(col("vec_id") > incFence(s, d)),
           incCents(s, d)._1.toDF("cent_id", "ce"))
         .transform(graft.CachePool.persist)
-    })
+    }
 
   /** Symmetrized top-G build over the STANDING corpus only — what a
     * deployed graph index holds before the append batch arrives.
     */
   private[graft] def incStandingSymEdges(s: SparkSession, d: String)
       : DataFrame =
-    memoRel(d, "inc_standing", () =>
+    graft.CachePool.shared(s, d, "ann_inc_standing")(
       symmetrize(topGEdges(incStandAssign(s, d), incStandAssign(s, d)))
         .transform(graft.CachePool.persist))
 
@@ -1031,7 +959,7 @@ object Similarity {
     */
   private[graft] def incAppendedEdges(s: SparkSession, d: String)
       : DataFrame =
-    memoRel(d, "inc_append", () => {
+    graft.CachePool.shared(s, d, "ann_inc_append") {
       val bTop = topGEdges(incBatchAssign(s, d),
         incStandAssign(s, d).unionByName(incBatchAssign(s, d)))
       incStandingSymEdges(s, d).unionByName(bTop)
@@ -1040,7 +968,7 @@ object Similarity {
         .groupBy("src", "dst").agg(max("sim").as("sim"))
         .select("src", "dst")
         .transform(graft.CachePool.persist)
-    })
+    }
 
   /** The standing half of the incremental-graph state for a dir — the
     * trained standing centroids and the standing corpus's multi-probe
@@ -1104,34 +1032,14 @@ object Similarity {
     */
   private[graft] def incRebuiltEdges(s: SparkSession, d: String)
       : DataFrame =
-    memoRel(d, "inc_rebuild", () => {
+    graft.CachePool.shared(s, d, "ann_inc_rebuild") {
       import s.implicits._
       val assign = probeAssign(corpusDf(s, d),
           incCents(s, d)._2.toDF("cent_id", "ce"))
         .transform(graft.CachePool.persist)
       symmetrize(topGEdges(assign, assign)).select("src", "dst")
         .transform(graft.CachePool.persist)
-    })
-
-  // Memo-lifetime convention (r14 advice): ALL per-dir pure-function
-  // memos clear on release — one rule, no stale-vs-fresh split. A
-  // release boundary resets every derived per-corpus value (centroids,
-  // PQ codebooks, covariance, fences, strides, edge/search relations)
-  // coherently; within a family window (the only place reuse matters —
-  // Verify/Bench release at family boundaries) each memo still runs its
-  // training once.
-  graft.CachePool.onRelease { () =>
-    graphSearchCache.clear()
-    graphEdgeCache.clear()
-    graphStrideCache.clear()
-    incFenceCache.clear()
-    incCentCache.clear()
-    centroidCache.clear()
-    covCache.clear()
-    pqCache.clear()
-    pqTrainedCache.clear()
-    adcDepthCache.clear()
-  }
+    }
 
   /** [[GRAPH_HOPS]] unrolled best-first rounds at the given beam width.
     * Returns (visited, trace): visited = (q_id, vec_id, cosine) — every
@@ -1172,21 +1080,27 @@ object Similarity {
       trace.filter(col("bw") === beam).drop("bw"))
   }
 
-  /** The search over an arbitrary (src, dst) edge relation, memo-keyed
-    * by `tag` (a pure function of dir + construction recipe, like the
+  /** The search over an arbitrary (src, dst) edge relation, shared per
+    * `tag` (a pure function of dir + construction recipe, like the
     * pruned flag it generalizes) + the width set. `edgesFn` is by-name
     * so a memo hit never constructs the edge relation at all. ONE
     * [[GRAPH_HOPS]]-round chain carries every requested width (r17,
     * guide §1.2: the hop-round JOB chain — not the per-row work — is
     * the dominant cost of a walk over any corpus, and the four-point
     * curve used to run it four times; the `bw`-tagged walk runs it
-    * once for row-identical per-width results).
+    * once for row-identical per-width results). Sharing the walk saves
+    * three queries plus every bench pass from re-running the 8-round
+    * chain (15.5 s for the 4-width curve at sf0.1 before). The visited
+    * set and cost ledger stay DISTRIBUTED, lazily-checkpointed
+    * DataFrames: collecting them to the driver grew with the corpus
+    * through the hop-0 scan.
     */
   private def multiBeamSearchOver(s: SparkSession, d: String,
                                   beams: Seq[Int], tag: String,
                                   edgesFn: () => DataFrame)
       : (DataFrame, DataFrame) = {
-    graphSearchCache.getOrElseUpdate((d, beams, tag), {
+    graft.CachePool.shared(s, d,
+        s"ann_graph_search/${beams.mkString(",")}/$tag") {
       graft.plans.TopK.installedWithRewrite(s)
       GraftFunctions.register(s)
       val edges = edgesFn()
@@ -1199,7 +1113,7 @@ object Similarity {
         .select(col("hop").cast("int").as("hop"), col("q_id"), col("bw"))
         .localCheckpoint(eager = false) // flatten the 9-way union too
       (visited.select("bw", "q_id", "vec_id", "cosine"), trace)
-    })
+    }
   }
 
   /** Replicate a relation once per beam width — the multi-width walk's
@@ -1298,8 +1212,8 @@ object Similarity {
     */
   private def graphLayeredSearch(s: SparkSession, d: String,
                                  beams: Seq[Int]): (DataFrame, DataFrame) =
-    graphSearchCache.getOrElseUpdate(
-      (d, beams, "layered"), {
+    graft.CachePool.shared(s, d,
+      s"ann_graph_search/${beams.mkString(",")}/layered") {
         graft.plans.TopK.installedWithRewrite(s)
         GraftFunctions.register(s)
         val corpus = corpusDf(s, d)
@@ -1314,7 +1228,7 @@ object Similarity {
           .select(col("hop").cast("int").as("hop"), col("q_id"), col("bw"))
           .localCheckpoint(eager = false)
         (v2.select("bw", "q_id", "vec_id", "cosine"), trace)
-      })
+      }
 
   /** mid = ceil(√stride): the middle layer keeps ≈ n/√stride members —
     * the geometric mean between the full corpus and the ≈32-row entry
@@ -1330,13 +1244,13 @@ object Similarity {
     * mid-th vector, then symmetrized.
     */
   private def midEdges(s: SparkSession, d: String): DataFrame =
-    memoRel(d, "mid", () => {
+    graft.CachePool.shared(s, d, "ann_mid") {
       val sd = semdedupAssign(s, d)
         .filter(col("vec_id") >= N_QUERIES &&
           col("vec_id") % graphMidStride(s, d) === 0)
       symmetrize(topGEdges(sd, sd)).select("src", "dst")
         .transform(graft.CachePool.persist)
-    })
+    }
 
   /** Shared operating-point curve (the ann_ivf_probe_curve convention):
     * recall vs candidates-scored at beam ∈ [[GRAPH_BEAMS]], over the
@@ -1362,7 +1276,7 @@ object Similarity {
   private def graphCurveOver(s: SparkSession, d: String,
       searchAll: (DataFrame, DataFrame)): DataFrame = {
     import s.implicits._
-    // hit-join per beam width; shared per-dir memo (r17) — the five
+    // hit-join per beam width; shared memo (r17) — the five
     // curve arms and the IVFADC knob read one persisted ground truth
     val exact = annExactTopK(s, d)
     val (visitedAll, traceAll) = searchAll

@@ -54,35 +54,16 @@ object TextAnalysis {
     "es" -> Seq("el", "los", "que"))
 
   /** The text family's shared base relation: the documents scan, spread
-    * across cores when the scan is under-parallel, memoized per dir and
-    * CachePool-persisted (r18). ~60 text_* queries each re-scanned and
-    * re-exchanged this relation per session; one materialization now
-    * serves the whole family window (guide §1.2 — reuse before
-    * per-task tuning), and the per-query repartition Exchange moves
-    * into the one cached build. Cleared with every releaseAll via the
-    * onRelease hook below, the memoRel convention.
-    *
-    * The repartition is GATED on measured scan parallelism (r17 verdict
-    * what's-wrong #2): locally the single parquet file arrives as one
-    * split and the exchange is load-bearing for the per-row HOF
-    * pipelines; at 100 TB the scan already yields thousands of splits
-    * and the same exchange would be a pure full-table shuffle — so it
-    * exists only when the scan is under-parallel.
+    * across cores when the scan is under-parallel ([[Tables.spread]]),
+    * shared through CachePool.shared and CachePool-persisted (r18).
+    * ~60 text_* queries each re-scanned and re-exchanged this relation
+    * per session; one materialization now serves the whole family
+    * window (guide §1.2 — reuse before per-task tuning), and the
+    * per-query repartition Exchange moves into the one cached build.
     */
-  private val docsCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-
   private[operators] def docsPar(s: SparkSession, d: String): DataFrame =
-    docsCache.getOrElseUpdate(d, {
-      val base = Tables.documents(s, d)
-      val par = s.sparkContext.defaultParallelism
-      // explicit count: AQE would coalesce a small keyed shuffle back to
-      // one partition, defeating the parallelism this exists to create
-      val spread =
-        if (base.rdd.getNumPartitions < par) base.repartition(par, col("doc_id"))
-        else base
-      graft.CachePool.persist(spread)
-    })
+    graft.CachePool.shared(s, d, "text_docs_par")(
+      graft.CachePool.persist(Tables.spread(Tables.documents(s, d), col("doc_id"))))
 
   /** Iterated BPE merge table (r13 verdict #4): `text_bpe_pairs` ranks
     * merge candidates ONCE; a tokenizer trainer needs the ITERATED
@@ -92,7 +73,7 @@ object TextAnalysis {
     * per round, (1) count adjacent pairs on the long (doc_id, pos, tok)
     * relation — one lead() per doc partition + a map-combinable hash
     * agg, (2) pick the top pair under the total tie order
-    * (n DESC, w1, w2) — a 1-row TakeOrdered collect, the centroidCache
+    * (n DESC, w1, w2) — a 1-row TakeOrdered collect, the centroidSeq
     * planner-sized-value convention, (3) rewrite greedy-left-to-right
     * non-overlapping: a match at position p consumes p and p+1, and
     * runs of CONSECUTIVE matches (only possible when w1 = w2, e.g.
@@ -103,27 +84,12 @@ object TextAnalysis {
     * localCheckpoint'ed (it appears twice in round r+1's tree — the
     * plan-doubling gotcha) and CachePool-persisted (pair count +
     * rewrite + token census all read it). Driver state is O(rounds)
-    * rows — the merge table itself, memoized per dir. At 100 TB each
+    * rows — the merge table itself, shared per corpus. At 100 TB each
     * round is one scan + one bounded rewrite of an already-tokenized
     * corpus: tokenizer-training cost is O(rounds) passes, the number
     * `text_vocab_coverage`'s vocab-sizing story prices against
     * coverage.
     */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, Long, Long, Double)]]
-
-  // Memo-lifetime convention (r14 advice): EVERY per-dir pure-function
-  // memo in the operator families clears on CachePool.releaseAll — a
-  // release boundary resets all derived per-corpus state coherently, so
-  // regenerated data at the same path can never serve a stale merge
-  // table within one JVM. Within a family window (Verify/Bench release
-  // only at family boundaries) the memo still amortizes the training.
-  graft.CachePool.onRelease { () =>
-    bpeCache.clear()
-    bpeHeldCache.clear()
-    docsCache.clear()
-  }
-
   /** The tokenized long relation a BPE pass starts from. */
   private def bpeStream(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
@@ -331,7 +297,7 @@ object TextAnalysis {
 
   private def bpeMerges(s: SparkSession, d: String)
       : Seq[(Int, String, String, Long, Long, Double)] =
-    bpeCache.getOrElseUpdate(d, bpeTrainDelta(s, docsPar(s, d)))
+    graft.CachePool.shared(s, d, "text_bpe_merges")(bpeTrainDelta(s, docsPar(s, d)))
 
   /** Train-split hash bucket (the text_train_split rule): first 4 hex
     * chars of md5("split|" + doc_id); < "e666" is the ~90% train side.
@@ -349,12 +315,9 @@ object TextAnalysis {
     * [[bpeMerges]]; the apply round is [[bpeRewrite]] with the pair
     * given, so train and apply share one rewrite definition.
     */
-  private val bpeHeldCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, Double, Long, Option[Double])]]
-
   private def bpeHeldout(s: SparkSession, d: String)
       : Seq[(Int, String, String, Double, Long, Option[Double])] =
-    bpeHeldCache.getOrElseUpdate(d, {
+    graft.CachePool.shared(s, d, "text_bpe_heldout") {
       import org.apache.spark.sql.expressions.Window
       val merges = bpeTrainDelta(s, docsPar(s, d).filter(splitHash < "e666"))
       var stream = bpeStream(docsPar(s, d).filter(splitHash >= "e666"))
@@ -373,7 +336,7 @@ object TextAnalysis {
           if (h0 == 0L) None else Some(hAfter.toDouble / h0.toDouble)))
       }
       out.result()
-    })
+    }
 
   /** Corpus term-frequency table (tok → total occurrences), persisted
     * through CachePool so the lexical-statistics queries that all need

@@ -38,30 +38,21 @@ object CdcQueries {
 
   /** Family-window shared envelope relations (r18): Envelope.toCdcEvents
     * embeds one key-shuffle + LSN-sort window (the before-image pass),
-    * and ~10 cdc_* queries each rebuilt it from the raw scan. Memoized
-    * per dir and CachePool-persisted, the family window now pays that
-    * exchange+window once (guide §2.4 — remove repeated shuffles
-    * outright). Memos clear on every releaseAll (bench/verify family
-    * boundaries), the repo's memoRel convention.
+    * and ~10 cdc_* queries each rebuilt it from the raw scan. Shared
+    * through CachePool.shared and CachePool-persisted, the family window
+    * now pays that exchange+window once (guide §2.4 — remove repeated
+    * shuffles outright).
     */
-  private val envMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.Dataset[graft.model.CdcEvent]]
-  private val envToastMemo = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.CachePool.onRelease { () =>
-    envMemo.clear(); envToastMemo.clear()
-  }
-
   private def cdcEnv(s: SparkSession, d: String)
       : org.apache.spark.sql.Dataset[graft.model.CdcEvent] =
-    envMemo.getOrElseUpdate(d, {
+    graft.CachePool.shared(s, d, "cdc_env") {
       val ds = Envelope.toCdcEvents(Tables.eventsShared(s, d))
       graft.CachePool.persist(ds.toDF())
       ds
-    })
+    }
 
   private def cdcEnvToast(s: SparkSession, d: String): DataFrame =
-    envToastMemo.getOrElseUpdate(d,
+    graft.CachePool.shared(s, d, "cdc_env_toast")(
       graft.CachePool.persist(
         Envelope.toCdcEventsToast(Tables.eventsShared(s, d)).toDF()))
 

@@ -30,6 +30,8 @@ object Tables {
     */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
+    // explicit count: AQE would coalesce a small keyed shuffle back to
+    // one partition, defeating the parallelism this exists to create
     if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
   }
 
@@ -80,43 +82,34 @@ object Tables {
     norm.select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
   /** Family-window shared events relation (r18): the normalized events
-    * scan, memoized per dir and CachePool-persisted. The events/cdc/
-    * window/profile/asof families each re-read this table 3–45 times per
-    * session window; one materialization now serves every consumer in
-    * the window (guide §1.2 — reuse beats rescans), and the memo clears
-    * with every CachePool.releaseAll (the bench/verify family boundary),
-    * so nothing crosses windows or runs. All six columns persist —
+    * scan, shared through CachePool.shared and CachePool-persisted. The
+    * events/cdc/window/profile/asof families each re-read this table
+    * 3–45 times per session window; one materialization now serves every
+    * consumer in the window (guide §1.2 — reuse beats rescans), and
+    * nothing crosses a release boundary. All six columns persist —
     * `props` averages ~9 bytes here and its consumers (the cdc envelope
     * family) share the same window as heavy non-props readers, so a
     * second props-free variant would only double the materialized
     * footprint.
     */
-  private val eventsMemo = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.CachePool.onRelease(() => eventsMemo.clear())
-
   def eventsShared(s: SparkSession, d: String): DataFrame =
-    eventsMemo.getOrElseUpdate(d, graft.CachePool.persist(events(s, d)))
+    graft.CachePool.shared(s, d, "events")(graft.CachePool.persist(events(s, d)))
 
   /** Family-window shared fact tables (r18): the TPC-H tier re-reads
     * lineitem/orders/customer 5–25 times per family window (q: 22
     * queries, agg: 20+, join: 10+). Same contract as [[eventsShared]]:
-    * memoized per (dir, table), CachePool-persisted, built lazily inside
-    * the first consumer's timed region, released + memo-cleared at every
-    * family boundary. The corpus tables carry no unused columns (the
-    * generator already projects them), so the persist is the union
-    * projection by construction. The [[spread]] gate inside fixes the
+    * shared per table, CachePool-persisted, built lazily inside the
+    * first consumer's timed region, released at every family boundary.
+    * The corpus tables carry no unused columns (the generator already
+    * projects them), so the persist is the union projection by
+    * construction. The [[spread]] gate inside fixes the
     * local one-split scan (the whole scan+partial-agg stage of every
     * consumer otherwise runs on ONE core); at real scale the gate is a
     * no-op and the persist trades one materialization for N−1 rescans.
     */
-  private val factMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-  graft.CachePool.onRelease(() => factMemo.clear())
-
   private def factShared(s: SparkSession, d: String, name: String,
       key: String): DataFrame =
-    factMemo.getOrElseUpdate((d, name),
+    graft.CachePool.shared(s, d, name)(
       graft.CachePool.persist(spread(table(s, d, name), col(key))))
 
   def lineitemShared(s: SparkSession, d: String): DataFrame =
