@@ -780,7 +780,6 @@ object TextAnalysis {
       import org.apache.spark.sql.expressions.Window
       graft.plans.TopK.installedWithRewrite(s)
       val docs = docsPar(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       // scalar N (the oracle's COUNT(*) subquery) joined in as a
       // single-row broadcast on a constant key — a BroadcastHashJoin,
       // not a nested loop, and plan CONSTRUCTION stays lazy (a

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -55,6 +55,12 @@ object CdcQueries {
     graft.CachePool.shared(s, d, "cdc_env_toast")(
       graft.CachePool.persist(
         Envelope.toCdcEventsToast(Tables.eventsShared(s, d)).toDF()))
+
+  /** The TOAST envelope's state map reprojected to its typed columns. */
+  private def toastStateCols: Seq[Column] = Seq(
+    col("state")("user_id").cast("long").as("user_id"),
+    col("state")("value").cast("double").as("value"),
+    col("state")("k").cast("long").as("k"))
 
   /** The shared registry-replay FIXTURE (cdc_registry_asof /
     * cdc_registry_dead_letter): the event envelope routed to two
@@ -131,14 +137,9 @@ object CdcQueries {
     // the corpus (Envelope.toCdcEventsToast); state reprojected to
     // typed columns — value's double→string→double round trip is exact
     // (Java shortest-repr toString), so cells compare bitwise.
-    "cdc_toast_latest_state" -> ((s, d) => {
-      val env = cdcEnvToast(s, d)
-      ChangeLog.latestStateCarryForward(env)
-        .select(col("key"), col("state_lsn"),
-          col("state")("user_id").cast("long").as("user_id"),
-          col("state")("value").cast("double").as("value"),
-          col("state")("k").cast("long").as("k"))
-    }),
+    "cdc_toast_latest_state" -> ((s, d) =>
+      ChangeLog.latestStateCarryForward(cdcEnvToast(s, d))
+        .select(col("key") +: col("state_lsn") +: toastStateCols: _*)),
 
     // The FULL production-sink row semantics as one batch relation —
     // what a store materialized by
@@ -148,27 +149,18 @@ object CdcQueries {
     // shared ChangeLog.tombstoneHorizon law) still retains for lagging
     // consumers. CfrModelSpec property-tests the streaming merge
     // against an in-memory model; this query puts the same row
-    // semantics under the DuckDB oracle. Cost: the carry-forward
-    // passes + one O(deleted keys) anti-join + a 1-row head broadcast.
+    // semantics under the DuckDB oracle, through the sink's own row
+    // rule (ChangeLog.retainedState). Cost: the one keyed carry-forward
+    // pass (carryForwardKeys already holds each key's fence and live
+    // LSN, so a tombstone is a fenced key with no live row) + a 1-row
+    // head broadcast read off that same relation.
     "cdc_retained_state" -> ((s, d) => {
-      val env = cdcEnvToast(s, d)
-      val live = ChangeLog.latestStateCarryForward(env)
-        .select(col("key"), col("state_lsn"),
-          col("state")("user_id").cast("long").as("user_id"),
-          col("state")("value").cast("double").as("value"),
-          col("state")("k").cast("long").as("k"))
-        .withColumn("tombstone", lit(false))
-      val head = env.agg(max("lsn").as("head")).withColumn("__k", lit(1))
-      val tomb = env.filter(col("op") === "delete")
-        .groupBy("key").agg(max("lsn").as("del_lsn"))
-        .join(live.select("key"), Seq("key"), "left_anti")
-        .withColumn("__k", lit(1)).join(broadcast(head), "__k")
-        .filter(ChangeLog.tombstoneRetained(col("del_lsn"), col("head")))
-        .select(col("key"), col("del_lsn").as("state_lsn"),
-          lit(null).cast("long").as("user_id"),
-          lit(null).cast("double").as("value"),
-          lit(null).cast("long").as("k"), lit(true).as("tombstone"))
-      live.unionByName(tomb)
+      val keys = ChangeLog.carryForwardKeys(cdcEnvToast(s, d))
+      val head = keys.agg(max(greatest(col("del_lsn"), col("state_lsn"))).as("head"))
+        .withColumn("__k", lit(1))
+      ChangeLog.retainedState(
+          keys.withColumn("__k", lit(1)).join(broadcast(head), "__k"), col("head"))
+        .select(col("key") +: col("state_lsn") +: toastStateCols :+ col("tombstone"): _*)
     }),
 
     // Cell-level LINEAGE of the carried-forward state: which LSN wrote

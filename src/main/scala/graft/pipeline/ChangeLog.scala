@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch CDC dataflow: the semantics the whole reference pipeline exists
@@ -34,48 +35,81 @@ object ChangeLog {
     * reference, with the literal string `"(unchanged)"`,
     * replicator.go:349-350).
     *
-    * Distributed formulation — per-COLUMN argmax, not a per-key ordered
-    * fold (a key's whole history never meets in one task):
-    *   1. tombstone fence: max delete LSN per key; only events after it
-    *      are live (a delete wipes state, a later insert restarts it);
-    *   2. explode each live after-image to (key, column, lsn, value)
-    *      and DROP the entries the event flagged unchanged — absence is
-    *      what makes the older value win;
-    *   3. latest entry per (key, column) via the TopK heap (k=1, no
-    *      sort), then reassemble the state map.
-    * Cost: one O(columns) map-side expansion + the same keyed shuffles
-    * latestState needs; no state, no iteration, scales as exchanges.
+    * Distributed formulation — ONE keyed pass, per-COLUMN argmax
+    * inside it (a key's whole history never has to be folded in order):
+    *   1. one `Window.partitionBy(key)` computes, per key, the delete
+    *      fence (max delete LSN) and the live state LSN (max insert/
+    *      update/snapshot LSN above the fence); the window buffers each
+    *      key's events in Spark's external row buffer, which spills, so
+    *      a hot key costs disk, not heap;
+    *   2. each live after-image minus the columns it flagged unchanged
+    *      explodes to (key, column, lsn, value) — absence is what makes
+    *      the older value win; every other event keeps one NULL-column
+    *      row so fenced and cell-less keys survive to step 4;
+    *   3. the latest entry per (key, column) via the TopK heap (k=1, no
+    *      sort of the raw history) — its clustering on (key, column) is
+    *      already satisfied by the window's hash(key), so it adds no
+    *      exchange;
+    *   4. one `groupBy(key)` (same partitioning, no exchange) returns
+    *      [[carryForwardKeys]]: (key, del_lsn, state_lsn, state).
+    * Cost: one shuffle of the envelope on the key, one O(columns)
+    * expansion; no state, no iteration. Every user of the law reads
+    * this relation: this view, [[cellProvenance]], the retention sink
+    * and the `cdc_retained_state` report.
     * Output: (key, state_lsn, state map); keys whose latest event is
-    * the delete fence disappear, like [[latestStateWithTombstones]].
+    * the delete fence disappear, like [[latestStateWithTombstones]]; a
+    * live key with no surviving cell has a NULL state.
     */
-  def latestStateCarryForward(env: DataFrame): DataFrame = {
-    val (live, latestPerCol) = carryForwardCells(env)
-    val stateLsn = live.groupBy("key").agg(max("lsn").as("state_lsn"))
-    val state = latestPerCol.groupBy("key")
-      .agg(map_from_entries(array_sort(
-        collect_list(struct(col("c"), col("v"))))).as("state"))
-    stateLsn.join(state, Seq("key"), "left")
+  def latestStateCarryForward(env: DataFrame): DataFrame =
+    carryForwardKeys(env).filter(col("state_lsn").isNotNull)
+      .select("key", "state_lsn", "state")
+
+  /** The carry-forward law per key: `del_lsn` is the delete fence (NULL
+    * when the key was never deleted), `state_lsn` the latest live event
+    * above it (NULL when the fence is the key's latest event) and
+    * `state` the carried-forward cells (NULL when no cell survives).
+    * A fenced key with no live row is the tombstone the retention sink
+    * keeps while [[tombstoneRetained]] holds.
+    */
+  def carryForwardKeys(env: DataFrame): DataFrame = {
+    val entries = collect_list(when(col("c").isNotNull, struct(col("c"), col("v"))))
+    carryForwardCells(env).groupBy("key").agg(
+      max("del_lsn").as("del_lsn"), max("state_lsn").as("state_lsn"),
+      when(size(entries) > 0, map_from_entries(array_sort(entries))).as("state"))
   }
 
-  /** The carry-forward core, shared with [[cellProvenance]]: the live
-    * (post-fence) event relation and the winning (key, column, lsn,
-    * value) cell per column.
+  /** The retention store's rows over [[carryForwardKeys]]: each live
+    * key as (key, state_lsn, state, tombstone = false), each fenced key
+    * with no live row as a tombstone at its delete LSN (state NULL)
+    * while [[tombstoneRetained]] holds against `head`. Shared by the
+    * streaming sink and the `cdc_retained_state` report.
     */
-  private def carryForwardCells(env: DataFrame): (DataFrame, DataFrame) = {
-    val dels = env.filter(col("op") === "delete")
-      .groupBy("key").agg(max("lsn").as("del_lsn"))
-    val live = env.filter(col("op").isin("insert", "update", "snapshot"))
-      .join(dels, Seq("key"), "left")
-      .filter(col("del_lsn").isNull || col("lsn") > col("del_lsn"))
-    val entries = live
-      .select(col("key"), col("lsn"), col("unchangedCols"),
-        explode(col("after")).as(Seq("c", "v")))
-      .filter(!array_contains(
-        coalesce(col("unchangedCols"), array().cast("array<string>")),
-        col("c")))
-      .select("key", "c", "lsn", "v")
-    (live,
-      graft.plans.TopK.perKey(entries, Seq("key", "c"), Seq(("lsn", false)), 1))
+  def retainedState(keys: DataFrame, head: Column): DataFrame =
+    keys.filter(col("state_lsn").isNotNull || tombstoneRetained(col("del_lsn"), head))
+      .select(col("key"), coalesce(col("state_lsn"), col("del_lsn")).as("state_lsn"),
+        col("state"), col("state_lsn").isNull.as("tombstone"))
+
+  /** Steps 1-3 of [[latestStateCarryForward]]: the winning (key, c,
+    * lsn, v) cell per column, each row carrying its key's `del_lsn` and
+    * `state_lsn`, plus one `c` = NULL row per key with a non-shipping
+    * event.
+    */
+  private def carryForwardCells(env: DataFrame): DataFrame = {
+    val byKey = Window.partitionBy("key")
+    val isLive = col("op").isin("insert", "update", "snapshot")
+    val unfenced = col("del_lsn").isNull || col("lsn") > col("del_lsn")
+    val shipped = map_filter(col("after"), (c, _) => !array_contains(
+      coalesce(col("unchangedCols"), array().cast("array<string>")), c))
+    val cells = env.filter(isLive || col("op") === "delete")
+      .select(col("key"), col("op"), col("lsn"), col("after"),
+        col("unchangedCols"),
+        max(when(col("op") === "delete", col("lsn"))).over(byKey).as("del_lsn"),
+        max(when(isLive, col("lsn"))).over(byKey).as("live_lsn"))
+      .select(col("key"), col("del_lsn"),
+        when(col("del_lsn").isNull || col("live_lsn") > col("del_lsn"),
+          col("live_lsn")).as("state_lsn"),
+        col("lsn"), explode_outer(when(isLive && unfenced, shipped)).as(Seq("c", "v")))
+    graft.plans.TopK.perKey(cells, Seq("key", "c"), Seq(("lsn", false)), 1)
   }
 
   /** Cell-level LINEAGE of the carried-forward state: which LSN wrote
@@ -84,17 +118,16 @@ object ChangeLog {
     * update kept the prior value), which row-level provenance cannot
     * express — this is the audit view that makes the carry-forward
     * inspectable. Output: (key, state_lsn, one src-LSN column per
-    * payload column) — integers only, no value formatting. Same cost
-    * profile as [[latestStateCarryForward]] (it IS the same dataflow,
-    * pivoted instead of reassembled).
+    * payload column) — integers only, no value formatting. The same
+    * keyed pass as [[latestStateCarryForward]], pivoted instead of
+    * reassembled.
     */
   def cellProvenance(env: DataFrame, payloadCols: Seq[String]): DataFrame = {
-    val (live, latestPerCol) = carryForwardCells(env)
-    val stateLsn = live.groupBy("key").agg(max("lsn").as("state_lsn"))
     val aggs = payloadCols.map(p =>
       max(when(col("c") === p, col("lsn"))).as(s"lsn_$p"))
-    val pivoted = latestPerCol.groupBy("key").agg(aggs.head, aggs.tail: _*)
-    stateLsn.join(pivoted, Seq("key"), "left")
+    carryForwardCells(env).groupBy("key")
+      .agg(max("state_lsn").as("state_lsn"), aggs: _*)
+      .filter(col("state_lsn").isNotNull)
   }
 
   /** Latest state with delete tombstones: a key whose LATEST op is a

@@ -564,21 +564,46 @@ object ChangeLogStream {
   def carryForwardUpsertBatch(tableDir: String, numBuckets: Int = 16)(
       batch: DataFrame, batchId: Long): Unit =
     upsertBatchImpl(tableDir, Seq("key"), "lsn", numBuckets,
-      compact = None, merge = Some(carryForwardMerge))(batch, batchId)
+      compact = None, merge = Some((existing, batchRows) =>
+        ChangeLog.latestStateCarryForward(withPriorState(existing, batchRows))))(
+      batch, batchId)
 
-  private def carryForwardMerge(existing: DataFrame,
-      batchRows: DataFrame): DataFrame = {
+  /** The batch's envelope rows plus the touched buckets' prior rows as
+    * synthetic events: live rows re-enter as `snapshot`s, tombstones
+    * (state NULL) as `delete` fences — one scan of the touched buckets.
+    * A store that does not exist yet surfaces as the batch-schema empty
+    * placeholder: there is no prior state.
+    */
+  private def withPriorState(existing: DataFrame, batchRows: DataFrame): DataFrame = {
     val env = batchRows.select(col("key"), col("op"), col("lsn"),
       col("after"), col("unchangedCols"))
-    // a store that does not exist yet surfaces as the batch-schema
-    // empty placeholder — there is no prior state to snapshot
-    val withPrior =
-      if (!existing.columns.contains("state_lsn")) env
-      else env.unionByName(existing.select(col("key"),
-        lit("snapshot").as("op"), col("state_lsn").as("lsn"),
-        col("state").as("after"),
-        lit(null).cast("array<string>").as("unchangedCols")))
-    ChangeLog.latestStateCarryForward(withPrior)
+    if (!existing.columns.contains("state_lsn")) env
+    else env.unionByName(existing.select(col("key"),
+      (if (existing.columns.contains("tombstone"))
+        when(col("tombstone"), "delete").otherwise("snapshot")
+      else lit("snapshot")).as("op"),
+      col("state_lsn").as("lsn"), col("state").as("after"),
+      lit(null).cast("array<string>").as("unchangedCols")))
+  }
+
+  /** The max of `versionCol` over `batch` as a long, -1 when empty. */
+  private def maxLsn(batch: DataFrame, versionCol: String): Long = {
+    val row = batch.agg(max(col(versionCol).cast("long"))).head()
+    if (row.isNullAt(0)) -1L else row.getLong(0)
+  }
+
+  /** Advances the store's monotone persisted head at `tableDir__head`
+    * ([[graft.pipeline.LsnCheckpoint]]'s atomic replace) to cover
+    * `batchMax`, and returns it.
+    */
+  private def advanceHead(spark: org.apache.spark.sql.SparkSession,
+      tableDir: String, batchMax: Long): Long = {
+    val headPath = tableDir + "__head"
+    val oldHead = graft.pipeline.LsnCheckpoint.read(spark, headPath)
+    val head = math.max(oldHead, batchMax)
+    if (head > oldHead)
+      graft.pipeline.LsnCheckpoint.write(spark, headPath, head)
+    head
   }
 
   /** [[upsertBatch]] with the compact+delete tombstone-retention policy
@@ -608,13 +633,7 @@ object ChangeLogStream {
   def retentionUpsertBatch(tableDir: String, keyCols: Seq[String],
       versionCol: String, isDelete: org.apache.spark.sql.Column,
       numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val headPath = tableDir + "__head"
-    val oldHead = graft.pipeline.LsnCheckpoint.read(spark, headPath)
-    val row = batch.agg(max(col(versionCol).cast("long"))).head()
-    val head = math.max(oldHead, if (row.isNullAt(0)) -1L else row.getLong(0))
-    if (head > oldHead)
-      graft.pipeline.LsnCheckpoint.write(spark, headPath, head)
+    val head = advanceHead(batch.sparkSession, tableDir, maxLsn(batch, versionCol))
     upsertBatchImpl(tableDir, keyCols, versionCol, numBuckets,
       Some(retentionCompact(versionCol, isDelete, head)))(batch, batchId)
   }
@@ -889,9 +908,7 @@ object ChangeLogStream {
     val spark = batch.sparkSession
     val fencePath = tableDir + "__fence"
     val oldFence = graft.pipeline.LsnCheckpoint.read(spark, fencePath)
-    val fenceRow = batch.filter(isTruncate)
-      .agg(max(col(versionCol).cast("long"))).head()
-    val newFence = if (fenceRow.isNullAt(0)) -1L else fenceRow.getLong(0)
+    val newFence = maxLsn(batch.filter(isTruncate), versionCol)
     if (newFence > oldFence) {
       val target = new Path(tableDir)
       val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -929,28 +946,17 @@ object ChangeLogStream {
   /** [[upsertBatch]] with the K3 log tee: one structured progress record
     * (rows, LSN range) appended to the durable log table per committed
     * micro-batch — what the reference's replicator logs into SQLite on
-    * every message + checkpoint cycle (logger.go:56-73). The record is
-    * appended AFTER the upsert commit so the log never claims progress
-    * the state table lost.
+    * every message + checkpoint cycle (logger.go:56-73). The aggregate
+    * runs BEFORE the upsert evaluates the batch and the record is
+    * appended only AFTER the upsert commit, so the log never claims
+    * progress the state table lost.
     */
   def loggedUpsertBatch(tableDir: String, logDir: String, keyCols: Seq[String],
       versionCol: String, numBuckets: Int = 16,
-      component: String = "upsert-sink")(batch: DataFrame, batchId: Long): Unit =
-    loggedBatch(logDir, versionCol, component)(
-      upsertBatch(tableDir, keyCols, versionCol, numBuckets))(batch, batchId)
-
-  /** The K3 log-tee protocol factored out of [[loggedUpsertBatch]] so
-    * every sink variant shares ONE copy of the ordering invariant:
-    * compute the progress aggregate BEFORE the inner sink evaluates
-    * the batch (so the sink's own scan is the only other pass), APPEND
-    * it only after the commit — the log never claims progress the
-    * state table lost.
-    */
-  def loggedBatch(logDir: String, versionCol: String, component: String)(
-      inner: (DataFrame, Long) => Unit)(batch: DataFrame, batchId: Long): Unit = {
+      component: String = "upsert-sink")(batch: DataFrame, batchId: Long): Unit = {
     val record =
       graft.ops.LogSink.progressRecord(batch, batchId, versionCol, component)
-    inner(batch, batchId)
+    upsertBatch(tableDir, keyCols, versionCol, numBuckets)(batch, batchId)
     graft.ops.LogSink.append(batch.sparkSession, logDir, Seq(record))
   }
 
@@ -1057,28 +1063,6 @@ object ChangeLogStream {
       graft.pipeline.Envelope.toCdcEventsStreaming(onTime).toDF(), batchId)
   }
 
-  /** The COMPLETE consumer micro-batch — the reference's whole
-    * es_consumer main loop (es_consumer/main.go:44-95) as one
-    * idempotent foreachBatch body, with the two error paths it only
-    * logs made durable:
-    *
-    *   wire bytes → decode (undecodable → dead-letter ledger)
-    *             → event-time admission (recorded watermark; too-late
-    *               rows → late ledger)
-    *             → per-(schema, table) demux
-    *             → each slice LOGGED-upserted into its own bucketed
-    *               store (one progress record per table per batch,
-    *               component = the routed table — the per-index
-    *               accounting the reference's SQLite log keeps)
-    *
-    * Conservation law (asserted by the spec): every wire message lands
-    * in EXACTLY ONE of {dead ledger, late ledger, a routed table's
-    * logged row count} — nothing silently dropped, nothing double-
-    * committed. Layout under `baseDir`: `dlq/`, `late/`, `wm/`, `log/`,
-    * `state/<schema>.<table>/`. Decode runs once (persisted); the
-    * per-table demux collects only O(tables-in-batch) names, never
-    * rows.
-    */
   /** Carry-forward merge WITH Kafka-style tombstone retention — the
     * two sink laws that previously lived in separate stores
     * ([[carryForwardUpsertBatch]] removes deleted keys outright;
@@ -1094,75 +1078,84 @@ object ChangeLogStream {
     * re-enter as synthetic `snapshot` events, prior tombstones as
     * `delete` events (so the fence survives batch boundaries — a
     * replayed pre-delete event cannot resurrect a key its tombstone
-    * still guards), then [[graft.pipeline.ChangeLog.latestStateCarryForward]]
-    * resolves the union and the keys it fenced out become tombstones —
-    * RETAINED only while [[graft.pipeline.ChangeLog.tombstoneRetained]]
-    * says the horizon (from the store's monotone persisted head, the
-    * [[retentionUpsertBatch]] protocol) still protects someone. Same
+    * still guards), and ONE keyed pass
+    * ([[graft.pipeline.ChangeLog.carryForwardKeys]]) resolves the
+    * union and [[graft.pipeline.ChangeLog.retainedState]] shapes it: a
+    * key with a live row is stored live, a fenced key with no live row
+    * is a tombstone — RETAINED only while the horizon (from the store's
+    * monotone persisted head, the [[retentionUpsertBatch]] protocol)
+    * still protects someone. Same
     * bucket mechanics, same crash protocol, same idempotency argument
-    * as every other sink here.
+    * as every other sink here. Inside [[fullProductionBatch]] the
+    * batch's max LSN comes from the demux aggregate, not a scan of its
+    * own.
     */
   def carryForwardRetentionUpsertBatch(tableDir: String,
-      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val headPath = tableDir + "__head"
-    val oldHead = graft.pipeline.LsnCheckpoint.read(spark, headPath)
-    val row = batch.agg(max(col("lsn").cast("long"))).head()
-    val head = math.max(oldHead, if (row.isNullAt(0)) -1L else row.getLong(0))
-    if (head > oldHead)
-      graft.pipeline.LsnCheckpoint.write(spark, headPath, head)
+      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit =
+    carryForwardRetentionWithHead(tableDir, numBuckets, maxLsn(batch, "lsn"))(
+      batch, batchId)
+
+  /** [[carryForwardRetentionUpsertBatch]] given the batch's max LSN. */
+  private def carryForwardRetentionWithHead(tableDir: String, numBuckets: Int,
+      batchMax: Long)(batch: DataFrame, batchId: Long): Unit = {
+    val head = advanceHead(batch.sparkSession, tableDir, batchMax)
     upsertBatchImpl(tableDir, Seq("key"), "lsn", numBuckets,
       compact = None,
       merge = Some(carryForwardRetentionMerge(head)))(batch, batchId)
   }
 
   private def carryForwardRetentionMerge(head: Long)(existing: DataFrame,
-      batchRows: DataFrame): DataFrame = {
-    val mapT = "map<string,string>"
-    val env = batchRows.select(col("key"), col("op"), col("lsn"),
-      col("after"), col("unchangedCols"))
-    val withPrior =
-      if (!existing.columns.contains("state_lsn")) env
-      else env
-        .unionByName(existing.filter(!col("tombstone")).select(col("key"),
-          lit("snapshot").as("op"), col("state_lsn").as("lsn"),
-          col("state").as("after"),
-          lit(null).cast("array<string>").as("unchangedCols")))
-        .unionByName(existing.filter(col("tombstone")).select(col("key"),
-          lit("delete").as("op"), col("state_lsn").as("lsn"),
-          lit(null).cast(mapT).as("after"),
-          lit(null).cast("array<string>").as("unchangedCols")))
-    val live = ChangeLog.latestStateCarryForward(withPrior)
-    val tomb = withPrior.filter(col("op") === "delete")
-      .groupBy("key").agg(max("lsn").as("del_lsn"))
-      .join(live.select("key"), Seq("key"), "left_anti")
-      .filter(ChangeLog.tombstoneRetained(
-        col("del_lsn").cast("long"), lit(head)))
-    live
-      .select(col("key"), col("state_lsn"), col("state"),
-        lit(false).as("tombstone"))
-      .unionByName(tomb.select(col("key"),
-        col("del_lsn").as("state_lsn"),
-        lit(null).cast(mapT).as("state"), lit(true).as("tombstone")))
-  }
+      batchRows: DataFrame): DataFrame =
+    ChangeLog.retainedState(
+      ChangeLog.carryForwardKeys(withPriorState(existing, batchRows)), lit(head))
 
+  /** The COMPLETE consumer micro-batch — the reference's whole
+    * es_consumer main loop (es_consumer/main.go:44-95) as one
+    * idempotent foreachBatch body, with the two error paths it only
+    * logs made durable:
+    *
+    *   wire bytes → decode (undecodable → dead-letter ledger)
+    *             → event-time admission (recorded watermark; too-late
+    *               rows → late ledger)
+    *             → per-(schema, table) demux
+    *             → each slice upserted into its own bucketed store
+    *             → one progress record per table (component = the
+    *               routed table — the per-index accounting the
+    *               reference's SQLite log keeps), computed in the demux
+    *               aggregate and written once per batch
+    *
+    * Conservation law (asserted by the spec): every wire message lands
+    * in EXACTLY ONE of {dead ledger, late ledger, a routed table's
+    * logged row count} — nothing silently dropped, nothing double-
+    * committed, also under replay. Layout under `baseDir`: `dlq/`,
+    * `late/`, `wm/`, `log/`, `state/<schema>.<table>/`.
+    */
   def fullConsumerBatch(baseDir: String, delayUs: Long, numBuckets: Int = 4)(
       wire: DataFrame, batchId: Long): Unit =
-    consumerTopology(baseDir, delayUs) { (s0, t) =>
-      loggedUpsertBatch(s"$baseDir/state/$s0.$t", s"$baseDir/log",
-        Seq("key"), "lsn", numBuckets, component = s"$s0.$t")
+    consumerTopology(baseDir, delayUs) { rec =>
+      upsertBatch(s"$baseDir/state/${rec.component}", Seq("key"), "lsn",
+        numBuckets)
     }(wire, batchId)
 
   /** The shared consumer topology BODY (decode → dead-letter tee →
     * recorded-watermark admission → late tee → per-(schema, table)
-    * demux), factored so [[fullConsumerBatch]] and
+    * demux → progress log), factored so [[fullConsumerBatch]] and
     * [[fullProductionBatch]] differ ONLY in the per-slice sink — a fix
     * to the DLQ idempotency or the late-tee path lands in both
-    * automatically. Decode runs once (persisted); the demux collects
-    * only O(tables-in-batch) names, never rows.
+    * automatically. Decode runs once (persisted).
+    *
+    * The demux is ONE aggregate per batch: `groupBy(schema, table)`
+    * with the progress aggregate (count, min and max LSN) collects
+    * O(tables-in-batch) rows, never payload, and yields both the table
+    * list and every table's progress record. `sinkFor` gets that
+    * record (component = "schema.table"). The records are written in
+    * one per-batch overwrite AFTER the last table commits: the log
+    * never claims progress the state lost, and a replayed batch
+    * rewrites its records instead of doubling them — the DLQ and late
+    * ledgers' idempotency, so the conservation law survives replay.
     */
   private def consumerTopology(baseDir: String, delayUs: Long)(
-      sinkFor: (String, String) => (DataFrame, Long) => Unit)(
+      sinkFor: graft.ops.LogSink.LogRecord => (DataFrame, Long) => Unit)(
       wire: DataFrame, batchId: Long): Unit = {
     val decoded = wire
       .withColumn("ev", from_json(col("value").cast("string"),
@@ -1178,13 +1171,20 @@ object ChangeLogStream {
       late.write.mode("overwrite").parquet(s"$baseDir/late/batch_id=$batchId")
       val adm = onTime.persist()
       try {
-        val tables = adm.select("schemaName", "tableName").distinct()
-          .collect().map(r => (r.getString(0), r.getString(1))).sorted
-        tables.foreach { case (s0, t) =>
-          sinkFor(s0, t)(
-            adm.filter(col("schemaName") === s0 && col("tableName") === t),
-            batchId)
-        }
+        val aggs = graft.ops.LogSink.progressAggs("lsn")
+        val records = adm.groupBy("schemaName", "tableName")
+          .agg(aggs.head, aggs.tail: _*).collect()
+          .sortBy(r => (r.getString(0), r.getString(1)))
+          .map { r =>
+            val (s0, t) = (r.getString(0), r.getString(1))
+            val rec = graft.ops.LogSink.progressFrom(r, 2, batchId, s"$s0.$t")
+            sinkFor(rec)(
+              adm.filter(col("schemaName") === s0 && col("tableName") === t),
+              batchId)
+            rec
+          }
+        graft.ops.LogSink.writeBatch(wire.sparkSession, s"$baseDir/log",
+          batchId, records.toSeq)
       } finally { adm.unpersist(); () }
     } finally { decoded.unpersist(); () }
   }
@@ -1199,24 +1199,26 @@ object ChangeLogStream {
     *             → each slice through the CARRY-FORWARD + TOMBSTONE-
     *               RETENTION merge ([[carryForwardRetentionUpsertBatch]]:
     *               TOASTed cells heal from prior batches, deletes leave
-    *               horizon-guarded tombstones), with one progress
-    *               record per (table, batch) in the durable log.
+    *               horizon-guarded tombstones)
+    *             → one progress record per (table, batch), computed in
+    *               the demux aggregate (which also supplies each
+    *               table's retention head) and written once per batch.
     *
     * [[fullConsumerBatch]] is this topology with the plain last-writer
     * upsert; this is the one a Postgres-with-TOAST deployment runs.
     * EXTENDED conservation law (asserted by the spec): every wire
     * message is in exactly one of {dead ledger, late ledger, Σ logged
-    * per-table rows}; additionally each table's live state equals the
-    * batch carry-forward reference over its admitted slice, tombstones
-    * in the store are exactly the fenced keys the horizon still
-    * retains, and at least one materialized cell is provably CARRIED
-    * (its provenance LSN older than its row's state LSN) across a
-    * batch boundary.
+    * per-table rows}, also after a replayed batch; additionally each
+    * table's live state equals the batch carry-forward reference over
+    * its admitted slice, tombstones in the store are exactly the fenced
+    * keys the horizon still retains, and at least one materialized cell
+    * is provably CARRIED (its provenance LSN older than its row's state
+    * LSN) across a batch boundary.
     */
   def fullProductionBatch(baseDir: String, delayUs: Long, numBuckets: Int = 4)(
       wire: DataFrame, batchId: Long): Unit =
-    consumerTopology(baseDir, delayUs) { (s0, t) =>
-      loggedBatch(s"$baseDir/log", "lsn", component = s"$s0.$t")(
-        carryForwardRetentionUpsertBatch(s"$baseDir/state/$s0.$t", numBuckets))
+    consumerTopology(baseDir, delayUs) { rec =>
+      carryForwardRetentionWithHead(s"$baseDir/state/${rec.component}", numBuckets,
+        rec.lastLsn)
     }(wire, batchId)
 }

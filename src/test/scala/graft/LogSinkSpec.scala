@@ -26,6 +26,18 @@ class LogSinkSpec extends AnyFunSuite {
     assert(got.toSeq === Seq(r1, r2))
   }
 
+  test("writeBatch overwrites per batch; read sees appends and batch dirs together") {
+    val dir = tmp("graft_log_batch") + "/logs"
+    def rec(b: Long, n: Long) =
+      LogSink.LogRecord(new Timestamp(1000L * b), "INFO", "t", s"m$b", b, n, 1L, n)
+    LogSink.append(spark, dir, Seq(rec(0L, 3L))) // a log begun by appends
+    LogSink.writeBatch(spark, dir, 1L, Seq(rec(1L, 4L)))
+    LogSink.writeBatch(spark, dir, 2L, Seq(rec(2L, 5L)))
+    LogSink.writeBatch(spark, dir, 1L, Seq(rec(1L, 4L))) // replay of batch 1
+    val got = LogSink.read(spark, dir).collect().sortBy(_.batchId)
+    assert(got.toSeq === Seq(rec(0L, 3L), rec(1L, 4L), rec(2L, 5L)))
+  }
+
   test("progressRecord reports rows and LSN range; empty batch → -1 fences") {
     val batch = Seq((3L, "a"), (9L, "b"), (5L, "c")).toDF("lsn", "v")
     val rec = LogSink.progressRecord(batch, 7L, "lsn", "t")

@@ -119,6 +119,34 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"SortAggregate fallback in: $offenders")
   }
 
+  test("carry-forward law: one key shuffle serves the fence window, the cell top-k and the state aggregate") {
+    // the whole law is one keyed pass: FinalTopKExec's (key, c)
+    // clustering and the per-key aggregate are satisfied by the window's
+    // hash(key), so a second exchange — or a broadcast of a re-derived
+    // fence — means the law is being computed twice
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import graft.pipeline.{ChangeLog, Envelope}
+    val env = Envelope.toCdcEventsToast(graft.sources.Tables.events(spark, sfDir)).toDF()
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((name, df) <- Seq(
+        "latestStateCarryForward" -> ChangeLog.latestStateCarryForward(env),
+        "cellProvenance" -> ChangeLog.cellProvenance(env, Seq("value", "k")))) {
+      assert(df.collect().nonEmpty) // executes df's own (adaptive) plan
+      val p = df.queryExecution.executedPlan
+      val shuffles = helper.collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      val onKey = shuffles.collect {
+        case HashPartitioning(Seq(a: Attribute), _) if a.name == "key" => a
+      }
+      assert(shuffles.size === 1 && onKey.size === 1,
+        s"$name: expected exactly one shuffle, on key:\n$p")
+      assert(helper.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"$name: no broadcast:\n$p")
+    }
+  }
+
   test("unique-id replay dedup never sorts (DistinctByKey fast path)") {
     // dedup on a globally-unique id with k=1 takes the hash final pass:
     // the old FinalTopKExec form forced a full (key)-sort of every

@@ -1390,6 +1390,133 @@ class StreamingSpec extends AnyFunSuite {
       s"conservation broke: $nInput != ${deadKeys.size} + ${lateLsns.size} + $logged")
   }
 
+  // ---- the production-topology wire fixture ----
+  private val prodSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+  }
+
+  private def prodRow(id: Long, minute: Int, uid: Long, typ: String,
+      v: Double, props: String) =
+    org.apache.spark.sql.Row(id, ts(minute), uid, typ, v, props)
+
+  /** TOAST envelopes routed to tables t0 .. t(tables-1) by user id. */
+  private def prodRouted(events: org.apache.spark.sql.DataFrame,
+      tables: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, concat, lit, pmod, split}
+    val env = graft.pipeline.Envelope.toCdcEventsToast(events).toDF()
+    val uid = split(col("key"), ":").getItem(1).cast("long")
+    env.withColumn("tableName", concat(lit("t"), pmod(uid, lit(tables))))
+      .withColumn("key", concat(lit("public."), col("tableName"), lit(":"), uid))
+  }
+
+  /** Kafka wire shape of `env`; lsn % 7 == 0 loses 8 tail bytes (NOT
+    * % 3 / % 5 — those are the TOAST marker residues; the fault set and
+    * the marker set must stay disjoint enough that both paths are
+    * exercised).
+    */
+  private def prodWire(env: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, struct, to_json, when}
+    env.select(col("key").cast("binary").as("k2"),
+        to_json(struct(env.columns.map(col): _*)).as("w"), col("lsn"))
+      .select(col("k2").as("key"),
+        when(col("lsn") % 7 === 0, expr("substring(w, 1, length(w) - 8)"))
+          .otherwise(col("w")).cast("binary").as("value"))
+  }
+
+  /** One wire batch of `n` events from LSN `from`, minutes ascending,
+    * over `tables` tables: inserts, TOAST-marked updates and deletes. */
+  private def prodBatch(from: Long, n: Int, tables: Int): org.apache.spark.sql.DataFrame = {
+    val types = Seq("signup", "click", "view", "error")
+    val rows = (from until from + n).map(i =>
+      prodRow(i, 20 + (i % 1000).toInt / 10, i % 11, types((i % 4).toInt),
+        i * 1.0, s"""{"k":"${i % 9}"}"""))
+    prodWire(prodRouted(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows), prodSchema), tables))
+  }
+
+  /** Jobs Spark starts while `body` runs. Sentinel jobs before and after
+    * bracket the window in the listener bus's event order, so no event
+    * of an earlier job leaks in and no late-delivered one is missed.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"graft-job-count-${System.nanoTime}"
+    val events = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def sentinel(which: String): Unit = {
+      sc.setJobDescription(s"$tag-$which")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("start"); body; sentinel("end")
+      var seen = Vector.empty[String]
+      while (!seen.contains(s"$tag-end")) {
+        val e = events.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(e != null, "job-count sentinel never arrived")
+        seen :+= e
+      }
+      seen.dropWhile(_ != s"$tag-start").count(!_.startsWith(tag))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("production topology: a replayed batch leaves conservation and the store unchanged") {
+    // a foreachBatch replay after a crash re-runs the batch under the
+    // same id: the DLQ and late ledgers overwrite per batch, and so must
+    // the progress log, or conservation counts the batch twice
+    import org.apache.spark.sql.functions.col
+    val base = java.nio.file.Files.createTempDirectory("graft_prodreplay").toString
+    val wire = prodBatch(1L, 60, 2).persist()
+    val consumed = wire.count()
+    def ledgers(): (Long, Long, Long) = (
+      spark.read.parquet(s"$base/dlq").count(),
+      spark.read.parquet(s"$base/late").count(),
+      graft.ops.LogSink.read(spark, s"$base/log").collect().map(_.nRows).sum)
+    def store(): Set[(String, String, Long, Map[String, String], Boolean)] =
+      Seq("t0", "t1").flatMap { t =>
+        spark.read.parquet(s"$base/state/public.$t")
+          .select(col("key"), col("state_lsn"), col("state"), col("tombstone"))
+          .as[(String, Long, Map[String, String], Boolean)].collect()
+          .map(r => (t, r._1, r._2, r._3, r._4))
+      }.toSet
+    ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000)(wire, 0L)
+    val (ledger0, store0) = (ledgers(), store())
+    val (dead, late, logged) = ledger0
+    assert(dead > 0 && logged > 0, s"fixture must exercise both paths: $ledger0")
+    assert(consumed === dead + late + logged,
+      s"conservation: $consumed != $dead + $late + $logged")
+    ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000)(wire, 0L)
+    assert(ledgers() === ledger0, "replay must not move the ledgers")
+    assert(store() === store0, "replay must not move the store")
+    wire.unpersist()
+  }
+
+  test("production topology: a warm micro-batch over two tables runs at most 30 Spark jobs") {
+    // the per-batch fixed cost is jobs, not data: decode + ledgers, one
+    // demux aggregate that also yields the progress records, and one
+    // keyed carry-forward pass per table merge. A law that re-derives
+    // the fence, or a per-table progress scan, shows up here first.
+    val base = java.nio.file.Files.createTempDirectory("graft_prodjobs").toString
+    val sink = ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000) _
+    sink(prodBatch(1L, 200, 2), 0L) // cold: creates the stores
+    for (b <- 1 to 2) {
+      val wire = prodBatch(1L + 200L * b, 200, 2)
+      val jobs = jobsDuring(sink(wire, b.toLong))
+      info(s"warm batch $b: $jobs jobs")
+      assert(jobs <= 30, s"warm batch $b ran $jobs jobs")
+    }
+  }
+
   test("full PRODUCTION topology: routing + carry-forward + retention + late tee + dead letter, one checkpoint, restart") {
     // Every durable sink feature active in ONE streaming query
     // (fullProductionBatch), restarted mid-stream on one checkpoint:
@@ -1405,63 +1532,40 @@ class StreamingSpec extends AnyFunSuite {
     // carry-forward reference per table; tombstone + purge census
     // exact; at least one cell provably CARRIED across batches.
     import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.functions.{col, concat, expr, lit, pmod, split, struct, to_json, when, max => smax}
-    import graft.pipeline.{ChangeLog, Envelope}
+    import org.apache.spark.sql.functions.{col, lit, max => smax}
+    import graft.pipeline.ChangeLog
     val base = java.nio.file.Files.createTempDirectory("graft_fullprod").toString
     val (inDir, ckpt) = (s"$base/in", s"$base/ckpt")
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    def routed(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val env = Envelope.toCdcEventsToast(events).toDF()
-      val uid = split(col("key"), ":").getItem(1).cast("long")
-      env.withColumn("tableName", concat(lit("t"), pmod(uid, lit(3))))
-        .withColumn("key", concat(lit("public."), col("tableName"), lit(":"), uid))
-    }
-    // corruption on % 7 (NOT % 3 / % 5 — those are the TOAST marker
-    // residues; the fault set and the marker set must stay disjoint
-    // enough that both paths are exercised)
-    def toWire(env: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      env.select(col("key").cast("binary").as("k2"),
-          to_json(struct(env.columns.map(col): _*)).as("w"), col("lsn"))
-        .select(col("k2").as("key"),
-          when(col("lsn") % 7 === 0, expr("substring(w, 1, length(w) - 8)"))
-            .otherwise(col("w")).cast("binary").as("value"))
     def writeFiles(rows: Seq[org.apache.spark.sql.Row]): Unit =
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+      spark.createDataFrame(spark.sparkContext.parallelize(rows), prodSchema)
         .coalesce(1).write.mode("append").parquet(inDir)
     def run(): Unit = {
-      val q = spark.readStream.schema(schema).parquet(inDir)
+      val q = spark.readStream.schema(prodSchema).parquet(inDir)
         .writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
           ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000)(
-            toWire(routed(b)), id)
+            prodWire(prodRouted(b, 3)), id)
           ()
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    def row(id: Long, minute: Int, uid: Long, typ: String, v: Double,
-        props: String) =
-      org.apache.spark.sql.Row(id, ts(minute), uid, typ, v, props)
     // batch 0: 12 inserts, minutes 11..22 → recorded mark 22:00; id 7
     // is DEAD (7 % 7 == 0) so user 7 never materializes
     val first = (1 to 12).map(i =>
-      row(i.toLong, 10 + i, i.toLong, "signup", i * 1.0, """{"k":"7"}"""))
+      prodRow(i.toLong, 10 + i, i.toLong, "signup", i * 1.0, """{"k":"7"}"""))
     // batch 1 (after RESTART): late horizon = 22:00 − 10 min = 12:00
     val second = Seq(
-      row(29, 5, 2, "click", 29.0, """{"k":"9"}"""),  // LATE (minute 5)
-      row(30, 40, 5, "click", 555.0, """{"k":"9"}"""), // %15: k AND value marked → heal BOTH from lsn 5
-      row(31, 41, 1, "click", 31.0, """{"k":"9"}"""),  // full re-ship
-      row(33, 42, 6, "click", 33.0, """{"k":"9"}"""),  // %3: k marked → k heals
-      row(35, 43, 8, "click", 35.0, """{"k":"9"}"""),  // DEAD (35 % 7 == 0)
-      row(40, 45, 3, "error", 0.0, "{}"),              // delete → PURGED (t0 head 100, horizon 75)
-      row(90, 46, 4, "error", 0.0, "{}"),              // delete → RETAINED (t1 head 95, horizon 72)
-      row(100, 50, 9, "click", 100.0, """{"k":"9"}"""), // %5: value marked → value heals
-      row(95, 51, 10, "click", 95.0, """{"k":"9"}"""))  // %5: value marked → value heals
+      prodRow(29, 5, 2, "click", 29.0, """{"k":"9"}"""),  // LATE (minute 5)
+      prodRow(30, 40, 5, "click", 555.0, """{"k":"9"}"""), // %15: k AND value marked → heal BOTH from lsn 5
+      prodRow(31, 41, 1, "click", 31.0, """{"k":"9"}"""),  // full re-ship
+      prodRow(33, 42, 6, "click", 33.0, """{"k":"9"}"""),  // %3: k marked → k heals
+      prodRow(35, 43, 8, "click", 35.0, """{"k":"9"}"""),  // DEAD (35 % 7 == 0)
+      prodRow(40, 45, 3, "error", 0.0, "{}"),              // delete → PURGED (t0 head 100, horizon 75)
+      prodRow(90, 46, 4, "error", 0.0, "{}"),              // delete → RETAINED (t1 head 95, horizon 72)
+      prodRow(100, 50, 9, "click", 100.0, """{"k":"9"}"""), // %5: value marked → value heals
+      prodRow(95, 51, 10, "click", 95.0, """{"k":"9"}"""))  // %5: value marked → value heals
     writeFiles(first); run()
     writeFiles(second); run() // RESTART: new query object, same checkpoint
     val deadKeys = spark.read.parquet(s"$base/dlq")
@@ -1481,8 +1585,8 @@ class StreamingSpec extends AnyFunSuite {
     // over the full log — streaming across a restart must agree)
     val deadOrLate = Set(7L, 35L, 29L)
     val fullLog = spark.createDataFrame(
-      spark.sparkContext.parallelize(first ++ second), schema)
-    val admitted = routed(fullLog)
+      spark.sparkContext.parallelize(first ++ second), prodSchema)
+    val admitted = prodRouted(fullLog, 3)
       .filter(!col("lsn").isInCollection(deadOrLate))
       .select("tableName", "key", "op", "lsn", "after", "unchangedCols")
       .persist()

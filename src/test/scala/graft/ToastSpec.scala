@@ -221,6 +221,73 @@ class ToastSpec extends AnyFunSuite {
     }
   }
 
+  /** Latest state through the batch law: key -> (state_lsn, state). */
+  private def law(log: Seq[CdcEvent]): Map[String, (Long, Map[String, String])] = {
+    import spark.implicits._
+    ChangeLog.latestStateCarryForward(spark.createDataset(log).toDF())
+      .select(col("key"), col("state_lsn"), col("state"))
+      .as[(String, Long, Map[String, String])].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+  }
+
+  /** The retention sink's store after committing `batches` in order:
+    * key -> (state_lsn, state, tombstone). */
+  private def retained(batches: Seq[CdcEvent]*)
+      : Map[String, (Long, Map[String, String], Boolean)] = {
+    import spark.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_cfredge").toString + "/state"
+    val sink = streaming.ChangeLogStream.carryForwardRetentionUpsertBatch(dir, 2) _
+    batches.zipWithIndex.foreach { case (b, i) =>
+      sink(spark.createDataset(b).toDF(), i.toLong) }
+    val hasBuckets = Option(new java.io.File(dir).list())
+      .getOrElse(Array.empty[String]).exists(_.startsWith("__bucket="))
+    if (!hasBuckets) Map.empty
+    else streaming.ChangeLogStream.readState(spark, dir)
+      .select(col("key"), col("state_lsn"), col("state"), col("tombstone"))
+      .as[(String, Long, Map[String, String], Boolean)].collect()
+      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
+  }
+
+  test("edge: a live key whose only update marks every column unchanged has a NULL state") {
+    val log = Seq(ev("update", 4, 3,
+      Map("user_id" -> null, "value" -> null, "k" -> null),
+      Seq("user_id", "value", "k")))
+    assert(law(log) === Map("public.users:3" -> ((4L, null))))
+    assert(retained(log) === Map("public.users:3" -> ((4L, null, false))))
+  }
+
+  test("edge: a SET NULL cell beats an older non-null value, within and across batches") {
+    val ins = ev("insert", 1, 7, Map("user_id" -> "7", "value" -> "10"), null)
+    val setNull = ev("update", 2, 7, Map("user_id" -> "7", "value" -> null), null)
+    val want = Map("user_id" -> "7", "value" -> null)
+    assert(law(Seq(ins, setNull)) === Map("public.users:7" -> ((2L, want))))
+    assert(retained(Seq(ins, setNull)) === Map("public.users:7" -> ((2L, want, false))))
+    assert(retained(Seq(ins), Seq(setNull)) === Map("public.users:7" -> ((2L, want, false))))
+  }
+
+  test("edge: a delete-only key has no live row and a tombstone only above the horizon") {
+    // head 100 → horizon 75: the delete at 90 is retained, the one at 10 purged
+    val log = Seq(
+      ev("delete", 10, 1, Map.empty, null),
+      ev("delete", 90, 2, Map.empty, null),
+      ev("insert", 100, 3, Map("user_id" -> "3"), null))
+    assert(law(log) === Map("public.users:3" -> ((100L, Map("user_id" -> "3")))))
+    assert(retained(log) === Map(
+      "public.users:2" -> ((90L, null, true)),
+      "public.users:3" -> ((100L, Map("user_id" -> "3"), false))))
+  }
+
+  test("edge: a snapshot re-entering after a tombstone does not resurrect the key") {
+    val ins = ev("insert", 1, 9, Map("user_id" -> "9", "value" -> "1"), null)
+    val del = ev("delete", 5, 9, Map.empty, null)
+    val snap = ev("snapshot", 3, 9, Map("user_id" -> "9", "value" -> "1"), null)
+    assert(law(Seq(ins, del, snap)).isEmpty)
+    // the fence held in the store, not in the batch, guards the key
+    assert(retained(Seq(ins, del), Seq(snap)) ===
+      Map("public.users:9" -> ((5L, null, true))))
+  }
+
   test("toCdcEventsToast marks exactly the synthesis rule's columns") {
     val sfDir = "/root/testdata/sf0.001"
     val env = Envelope.toCdcEventsToast(
