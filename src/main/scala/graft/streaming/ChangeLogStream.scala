@@ -1,7 +1,22 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftShim, SparkSession, sources}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, Cast, EqualTo, EvalMode, Expression, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -502,7 +517,15 @@ object ChangeLogStream {
     * bucket directory for the life of the table.
     */
   def bucketOf(keyCols: Seq[String], numBuckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast("int")
+    GraftShim.column(bucketExpr(keyCols.map(k => GraftShim.expression(col(k))), numBuckets))
+
+  /** The bucket expression over `keys` (seed 42, the SQL `xxhash64`'s):
+    * the merge evaluates it per row through [[bucketOf]], a lookup
+    * evaluates it on the driver over typed literals, so the bucket a
+    * lookup probes is the bucket the merge wrote to.
+    */
+  private def bucketExpr(keys: Seq[Expression], numBuckets: Int): Expression =
+    Cast(Pmod(new XxHash64(keys), Literal(numBuckets.toLong)), IntegerType)
 
   /** foreachBatch idempotent keyed upsert into a BUCKETED parquet
     * "latest state" table — the ES-sink analog (K2/A3) with batch
@@ -671,7 +694,7 @@ object ChangeLogStream {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (head < 0 || !fs.exists(target) ||
         !fs.listStatus(target).exists(_.isDirectory)) return 0
-    val store = spark.read.option("mergeSchema", "true").parquet(tableDir)
+    val store = readStore(spark, tableDir)
     val expired = store
       .filter(isDelete && !graft.pipeline.ChangeLog.tombstoneRetained(
         col(versionCol).cast("long"), lit(head)))
@@ -721,15 +744,16 @@ object ChangeLogStream {
       val touched = (batchLatest.select(BucketCol).distinct()
         .collect().map(_.getInt(0)) ++ touchedOverride).distinct.sorted
       if (touched.isEmpty) return
-      // mergeSchema + allowMissingColumns: an upstream ALTER TABLE ADD
-      // COLUMN (CDC tables drift over a pipeline's lifetime) must not
-      // kill the sink. Added columns surface as NULL on the side that
-      // lacks them — the Delta/Iceberg MERGE evolution contract; type
-      // CHANGES still refuse loudly (SchemaEvolutionSpec documents the
-      // explicit per-epoch widening path for those).
+      // the store's merged footer schema + allowMissingColumns: an
+      // upstream ALTER TABLE ADD COLUMN (CDC tables drift over a
+      // pipeline's lifetime) must not kill the sink. Added columns
+      // surface as NULL on the side that lacks them — the Delta/Iceberg
+      // MERGE evolution contract; type CHANGES still refuse loudly
+      // (SchemaEvolutionSpec documents the explicit per-epoch widening
+      // path for those).
       val existingTouched =
         if (fs.exists(target) && fs.listStatus(target).exists(_.isDirectory))
-          spark.read.option("mergeSchema", "true").parquet(tableDir)
+          readStore(spark, tableDir)
             .filter(col(BucketCol).isin(touched.map(Int.box): _*))
         else batchLatest.limit(0)
       val latest = merge match {
@@ -839,21 +863,31 @@ object ChangeLogStream {
     }
   }
 
-  /** The latest-state table without the layout's partition column.
-    * mergeSchema: after a schema-evolving batch, rewritten buckets
-    * carry the new column while untouched buckets still hold the old
-    * file schema — the union is the table's schema.
+  /** The latest-state table without the layout's partition column,
+    * read with the store's merged schema ([[storeSchema]]): after a
+    * schema-evolving batch, rewritten buckets carry the new column
+    * while untouched buckets still hold the old file schema, and their
+    * rows surface NULL in it.
     */
-  def readState(spark: org.apache.spark.sql.SparkSession, tableDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(tableDir).drop(BucketCol)
+  def readState(spark: SparkSession, tableDir: String): DataFrame =
+    readStore(spark, tableDir).drop(BucketCol)
 
-  /** Point lookup that PRUNES to the one bucket directory the key can
-    * live in: the bucket predicate folds to a constant, so the file
-    * index lists a single `__bucket=` directory no matter how many
-    * buckets the table holds (SinkSpec asserts the partition filter).
-    * `keyValues` must carry the key columns' EXACT runtime types
-    * (e.g. `7L` for a bigint key): xxhash64 hashes by type, so an Int
-    * where the column is Long would probe the wrong bucket.
+  /** Point lookup served on the driver: it reads the one bucket the key
+    * can live in and returns a local DataFrame, so neither the lookup
+    * nor a `collect` of its result starts a Spark job. The rows come
+    * from the `__bucket=<b>/` data files through Spark's parquet row
+    * reader, with the key equality pushed down as a row-group filter;
+    * other buckets' files are never opened. The result has the
+    * store's merged schema ([[storeSchema]]) plus [[BucketCol]], like a
+    * Spark read of the store filtered on the key.
+    *
+    * Each key value is cast to its key column's type in the store
+    * before it is hashed, so `7` and `7L` probe the same bucket of a
+    * bigint key (xxhash64 hashes by type: hashing the caller's literal
+    * type probed the wrong bucket and silently read empty). The
+    * equality filter `col(k) === lit(v)` is applied as given, so a
+    * value that does not cast exactly still matches nothing. A key
+    * column the store does not have is an `IllegalArgumentException`.
     *
     * The bucket count comes from the table's own `_graft_buckets`
     * marker, same as [[upsertBatch]] — the table is the single source
@@ -863,22 +897,123 @@ object ChangeLogStream {
     * directory and silently read empty, the worst failure mode a
     * point lookup can have.
     */
-  def stateForKey(spark: org.apache.spark.sql.SparkSession, tableDir: String,
+  def stateForKey(spark: SparkSession, tableDir: String,
       keyCols: Seq[String], keyValues: Seq[Any], numBuckets: Int = -1): DataFrame = {
-    require(keyCols.length == keyValues.length, "one value per key column")
+    require(keyCols.nonEmpty && keyCols.length == keyValues.length,
+      "at least one key column, and one value per key column")
     val target = new Path(tableDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nb = readBucketCount(fs, target).getOrElse {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val nb = readBucketCount(target.getFileSystem(conf), target).getOrElse {
       require(numBuckets > 0,
         s"$tableDir has no _graft_buckets marker and no explicit bucket count was given")
       numBuckets
     }
-    val bucket = pmod(xxhash64(keyValues.map(lit): _*), lit(nb)).cast("int")
-    keyCols.zip(keyValues).foldLeft(
-      spark.read.option("mergeSchema", "true").parquet(tableDir)
-        .filter(col(BucketCol) === bucket)) {
+    val footers = storeFooters(spark, tableDir)
+    val schema = storeSchema(spark, tableDir, footers)
+    val caseSensitive = spark.conf.get(SQLConf.CASE_SENSITIVE.key).toBoolean
+    val tz = Some(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    // (ordinal, type, value cast to the column type — null if it cannot)
+    val keys: Seq[(Int, DataType, Any)] = keyCols.zip(keyValues).map { case (k, v) =>
+      val i = schema.fieldNames.indexWhere(n => n == k || !caseSensitive && n.equalsIgnoreCase(k))
+      require(i >= 0, s"key column $k is not in the schema of $tableDir: ${schema.simpleString}")
+      val dt = schema(i).dataType
+      (i, dt, Cast(Literal(v), dt, tz, EvalMode.TRY).eval())
+    }
+    val bucket = bucketExpr(keys.map { case (_, dt, v) => Literal(v, dt) }, nb)
+      .eval().asInstanceOf[Int]
+    val isKey = keys.map { case (i, dt, v) =>
+      EqualTo(BoundReference(i, dt, nullable = true), Literal(v, dt)): Expression
+    }.reduce(And)
+    val pushed = keys.map { case (i, dt, v) =>
+      (schema(i).name, CatalystTypeConverters.convertToScala(v, dt)) }
+    val rows = footers.filter(_._1.getPath.getParent.getName == s"$BucketCol=$bucket")
+      .flatMap { case (file, meta) =>
+        matchingRows(spark, file, meta, schema, pushed, isKey.eval(_) == true) }
+      .map(r => InternalRow.fromSeq(r.toSeq(schema) :+ bucket))
+    val local = GraftShim.ofRows(spark, LocalRelation(
+      DataTypeUtils.toAttributes(schema.add(BucketCol, IntegerType)), rows))
+    keyCols.zip(keyValues).foldLeft(local) {
       case (df, (k, v)) => df.filter(col(k) === lit(v))
     }
+  }
+
+  /** Every data file of the store with its parquet footer, read on the
+    * driver (row groups skipped), in path order. Names starting with
+    * `_` or `.` are not data, as for Spark's file index.
+    */
+  private def storeFooters(spark: SparkSession,
+      tableDir: String): Seq[(FileStatus, FileMetaData)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = new Path(tableDir, s"$BucketCol=*/*")
+    Option(files.getFileSystem(conf).globStatus(files,
+        (p: Path) => !p.getName.startsWith("_") && !p.getName.startsWith(".")))
+      .fold(Seq.empty[FileStatus])(_.toSeq.filter(_.isFile).sortBy(_.getPath.toString))
+      .map(f => f -> ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData)
+  }
+
+  /** The store's data schema: Spark's schema of each data file (the row
+    * metadata Spark writes into the footer, else the converted parquet
+    * schema), folded with Spark's own `StructType.merge` — what a
+    * `mergeSchema` read infers, without the Spark job that read runs
+    * over the footers. A conflicting column type fails with the same
+    * `CANNOT_MERGE_SCHEMAS` error. A store with no data file fails as a
+    * plain read of it does (`UNABLE_TO_INFER_SCHEMA`); no schema is
+    * guessed. Every store reader takes its schema from here.
+    */
+  private def storeSchema(spark: SparkSession, tableDir: String,
+      footers: Seq[(FileStatus, FileMetaData)]): StructType = {
+    val caseSensitive = spark.conf.get(SQLConf.CASE_SENSITIVE.key).toBoolean
+    val schemas = footers.map { case (_, meta) =>
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+    }
+    if (schemas.isEmpty) spark.read.parquet(tableDir).schema // raises Spark's inference error
+    else GraftShim.asNullable(schemas.reduceLeft(GraftShim.mergeSchemas(_, _, caseSensitive)))
+  }
+
+  /** The store as a Spark read with its merged schema ([[storeSchema]])
+    * and the [[BucketCol]] partition column.
+    */
+  private def readStore(spark: SparkSession, tableDir: String): DataFrame =
+    spark.read.schema(storeSchema(spark, tableDir, storeFooters(spark, tableDir)))
+      .parquet(tableDir)
+
+  /** The rows of one data file that satisfy `keep`, read on the driver
+    * in `schema` through Spark's parquet row reader — columns the file
+    * lacks read as NULL — with the `keys` equalities (column name, value
+    * as Spark's filter API types it) pushed down as a row-group filter.
+    */
+  private def matchingRows(spark: SparkSession, file: FileStatus,
+      meta: FileMetaData, schema: StructType, keys: Seq[(String, Any)],
+      keep: InternalRow => Boolean): Seq[InternalRow] = {
+    def conf(key: String): String = spark.conf.get(key)
+    val hadoopConf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    // the session flags Spark's parquet schema converter reads
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING.key, SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+        SQLConf.CASE_SENSITIVE.key, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key)
+      .foreach(k => hadoopConf.set(k, conf(k)))
+    val kv = meta.getKeyValueMetaData
+    val rebase = DataSourceUtils.datetimeRebaseSpec(k => kv.get(k), conf(SQLConf.PARQUET_REBASE_MODE_IN_READ.key))
+    val filters = new ParquetFilters(meta.getSchema,
+      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_DATE_ENABLED.key).toBoolean,
+      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_TIMESTAMP_ENABLED.key).toBoolean,
+      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_DECIMAL_ENABLED.key).toBoolean,
+      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_STRING_PREDICATE_ENABLED.key).toBoolean,
+      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_INFILTERTHRESHOLD.key).toInt,
+      conf(SQLConf.CASE_SENSITIVE.key).toBoolean, rebase)
+    val pushed = keys.collect { case (k, v) if v != null => filters.createFilter(sources.EqualTo(k, v)) }
+      .flatten.reduceOption(FilterApi.and)
+    val support = new ParquetReadSupport(None, false, rebase,
+      DataSourceUtils.int96RebaseSpec(k => kv.get(k), conf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key)))
+    val reader = ParquetReader.builder(support, file.getPath).withConf(hadoopConf)
+      .withFilter(pushed.fold(FilterCompat.NOOP)(FilterCompat.get)).build()
+    // the reader reuses its row object: copy what is kept
+    try Iterator.continually(reader.read()).takeWhile(_ != null).filter(keep).map(_.copy()).toList
+    finally reader.close()
   }
 
   /** [[upsertBatch]] with §2.6 TRUNCATE semantics in the streaming

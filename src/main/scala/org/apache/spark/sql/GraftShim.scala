@@ -5,7 +5,7 @@ import org.apache.spark.sql.classic.ClassicConversions._
 
 /** Minimal bridge into `private[sql]` surface for graft's custom plan
   * nodes — the same technique every Spark extension library uses to
-  * construct DataFrames from custom LogicalPlans. Kept to the two
+  * construct DataFrames from custom LogicalPlans. Kept to the few
   * functions the library needs.
   */
 object GraftShim {
@@ -24,4 +24,14 @@ object GraftShim {
 
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Spark's own schema merge, failing on a conflicting type with the
+    * same `CANNOT_MERGE_SCHEMAS` error as a `mergeSchema` read.
+    */
+  def mergeSchemas(a: types.StructType, b: types.StructType, caseSensitive: Boolean): types.StructType =
+    try a.merge(b, caseSensitive)
+    catch { case e: org.apache.spark.SparkException => throw errors.QueryExecutionErrors.failedMergingSchemaError(a, b, e) }
+
+  /** `schema` with every field nullable, nested ones too — as a file read types it. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

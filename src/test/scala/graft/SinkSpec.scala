@@ -12,6 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class SinkSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
+  /** Writes `rows` as one valid parquet data file into bucket `b` of the
+    * store at `dir`, beside the files the sink wrote there.
+    */
+  private def plant(rows: org.apache.spark.sql.DataFrame, dir: String, b: Int): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_plant").toString + "/p"
+    rows.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().filter(_.getName.startsWith("part-")).head
+    assert(part.renameTo(new java.io.File(dir, s"${streaming.ChangeLogStream.BucketCol}=$b/part-planted.parquet")))
+  }
+
   test("partitioned sink: routing-column filter prunes at the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/t"
     val events = sources.Tables.events(spark, "/root/testdata/sf0.001")
@@ -123,13 +133,50 @@ class SinkSpec extends AnyFunSuite {
       if (k == 7L) (7L, 1000L, "v7new") else (k, k, s"v$k")).toSet
     assert(state === expected)
 
-    // point lookup prunes to the ONE bucket directory at the file index
+    // point lookup reads the ONE bucket directory its key can live in: a
+    // decoy row for key 7, a valid parquet file under another bucket's
+    // directory, must not come back
+    plant(Seq((7L, 5000L, "decoy")).toDF("key", "lsn", "v"), dir, (touchedBucket + 1) % nb)
+    assert(streaming.ChangeLogStream.readState(spark, dir).filter($"key" === 7L).count() === 2,
+      "the decoy is a readable row of the store")
     val lookup = streaming.ChangeLogStream.stateForKey(
       spark, dir, Seq("key"), Seq(7L), nb)
     assert(lookup.select("v").as[String].collect().toSeq === Seq("v7new"))
-    val scan = lookup.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-      .contains(streaming.ChangeLogStream.BucketCol), scan)
+  }
+
+  test("point lookup runs no Spark job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bnojob").toString + "/state"
+    streaming.ChangeLogStream.upsertBatch(dir, Seq("key"), "lsn", 8)(
+      (1L to 40L).map(k => (k, k, s"v$k")).toDF("key", "lsn", "v"), 0L)
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = SparkJobs.during(spark) {
+      rows = streaming.ChangeLogStream.stateForKey(spark, dir, Seq("key"), Seq(7L))
+        .collect().toSeq
+    }
+    assert(rows.map(_.getAs[String]("v")) === Seq("v7"))
+    assert(jobs === 0, s"a point lookup ran $jobs Spark jobs")
+  }
+
+  test("point lookup casts the key to the store's column type: Int keys hit a bigint store") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bcast").toString + "/state"
+    streaming.ChangeLogStream.upsertBatch(dir, Seq("key"), "lsn", 16)(
+      (1L to 40L).map(k => (k, k, s"v$k")).toDF("key", "lsn", "v"), 0L)
+    // xxhash64 hashes by type: an Int hashed as an Int probed another
+    // bucket than the equal bigint and read empty
+    val misses = (1 to 40).filter { k =>
+      streaming.ChangeLogStream.stateForKey(spark, dir, Seq("key"), Seq(k))
+        .select($"v").as[String].collect().toSeq != Seq(s"v$k")
+    }
+    assert(misses.isEmpty, s"Int-typed lookups that missed: $misses")
+    // the equality itself is unchanged: a value that does not cast
+    // exactly (7.5 casts to 7) still matches nothing
+    assert(streaming.ChangeLogStream.stateForKey(spark, dir, Seq("key"), Seq(7.5))
+      .count() === 0)
+    intercept[IllegalArgumentException] {
+      streaming.ChangeLogStream.stateForKey(spark, dir, Seq("nokey"), Seq(7L))
+    }
   }
 
   test("bucket count is pinned at creation: a mismatched later param is ignored") {
@@ -226,6 +273,40 @@ class SinkSpec extends AnyFunSuite {
       .select($"key", $"v", coalesce($"extra", lit("-")))
       .as[(Long, String, String)].collect().toSet
     assert(after === Set((1L, "v1new", "x"), (2L, "v2new", "-")))
+    // a lookup of a key whose bucket still holds the old file schema
+    // reads `extra` as NULL
+    val b = (k: Long) => spark.range(1).select(lit(k).as("key"))
+      .select(streaming.ChangeLogStream.bucketOf(Seq("key"), 4)).head.getInt(0)
+    val old = (3L to 20L).find(k => !Set(b(1L), b(2L)).contains(b(k))).get
+    val hit = streaming.ChangeLogStream.stateForKey(spark, dir, Seq("key"), Seq(old))
+      .select($"v", $"extra").as[(String, Option[String])].collect().toSeq
+    assert(hit === Seq((s"v$old", None)))
+    // both readers type the store as a mergeSchema read of it does
+    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
+    def byName(s: org.apache.spark.sql.types.StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    assert(byName(streaming.ChangeLogStream.readState(spark, dir).schema) ===
+      byName(merged.drop(streaming.ChangeLogStream.BucketCol).schema))
+    assert(byName(streaming.ChangeLogStream.stateForKey(spark, dir, Seq("key"), Seq(old)).schema) ===
+      byName(merged.schema))
+    // a conflicting column type still fails loudly: one file whose `v`
+    // is an int
+    plant(Seq((99L, 1L, 1)).toDF("key", "lsn", "v"), dir, b(old))
+    val e = intercept[org.apache.spark.SparkException] {
+      streaming.ChangeLogStream.readState(spark, dir).collect()
+    }
+    assert(e.getMessage.contains("CANNOT_MERGE_SCHEMAS"), e.getMessage)
+    intercept[org.apache.spark.SparkException] {
+      streaming.ChangeLogStream.stateForKey(spark, dir, Seq("key"), Seq(old))
+    }
+    // a store with no data file has no schema to merge: readers fail as
+    // Spark's inference does, they do not guess one
+    val empty = java.nio.file.Files.createTempDirectory("graft_bempty").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(empty, "_graft_buckets"), "4")
+    for (read <- Seq(() => streaming.ChangeLogStream.readState(spark, empty),
+        () => streaming.ChangeLogStream.stateForKey(spark, empty, Seq("key"), Seq(1L)))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](read())
+      assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA"), e.getMessage)
+    }
   }
 
   test("batch-incremental consumption drives the bucketed upsert (scheduled-job mode)") {

@@ -1438,38 +1438,6 @@ class StreamingSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(rows), prodSchema), tables))
   }
 
-  /** Jobs Spark starts while `body` runs. Sentinel jobs before and after
-    * bracket the window in the listener bus's event order, so no event
-    * of an earlier job leaks in and no late-delivered one is missed.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = s"graft-job-count-${System.nanoTime}"
-    val events = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        events.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def sentinel(which: String): Unit = {
-      sc.setJobDescription(s"$tag-$which")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("start"); body; sentinel("end")
-      var seen = Vector.empty[String]
-      while (!seen.contains(s"$tag-end")) {
-        val e = events.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-        assert(e != null, "job-count sentinel never arrived")
-        seen :+= e
-      }
-      seen.dropWhile(_ != s"$tag-start").count(!_.startsWith(tag))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("production topology: a replayed batch leaves conservation and the store unchanged") {
     // a foreachBatch replay after a crash re-runs the batch under the
     // same id: the DLQ and late ledgers overwrite per batch, and so must
@@ -1501,19 +1469,20 @@ class StreamingSpec extends AnyFunSuite {
     wire.unpersist()
   }
 
-  test("production topology: a warm micro-batch over two tables runs at most 30 Spark jobs") {
+  test("production topology: a warm micro-batch over two tables runs at most 24 Spark jobs") {
     // the per-batch fixed cost is jobs, not data: decode + ledgers, one
     // demux aggregate that also yields the progress records, and one
-    // keyed carry-forward pass per table merge. A law that re-derives
-    // the fence, or a per-table progress scan, shows up here first.
+    // keyed carry-forward pass per table merge, whose store schema comes
+    // from the footers on the driver. A law that re-derives the fence,
+    // a per-table progress scan or a footer-merge job shows up here first.
     val base = java.nio.file.Files.createTempDirectory("graft_prodjobs").toString
     val sink = ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000) _
     sink(prodBatch(1L, 200, 2), 0L) // cold: creates the stores
     for (b <- 1 to 2) {
       val wire = prodBatch(1L + 200L * b, 200, 2)
-      val jobs = jobsDuring(sink(wire, b.toLong))
+      val jobs = SparkJobs.during(spark)(sink(wire, b.toLong))
       info(s"warm batch $b: $jobs jobs")
-      assert(jobs <= 30, s"warm batch $b ran $jobs jobs")
+      assert(jobs <= 24, s"warm batch $b ran $jobs jobs")
     }
   }
 
