@@ -740,9 +740,11 @@ object ChangeLogStream {
       .withColumn(BucketCol, bucketOf(keyCols, nb))
       .persist()
     try {
-      // ≤ nb values — O(buckets) on the driver by construction, not O(data)
-      val touched = (batchLatest.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)) ++ touchedOverride).distinct.sorted
+      // one shuffle-free job: each partition's distinct buckets, merged
+      // on the driver — O(buckets × partitions) values, never O(data)
+      val touched = (batchLatest.select(BucketCol).as(Encoders.scalaInt)
+        .mapPartitions(_.toSet.iterator)(Encoders.scalaInt).collect() ++
+        touchedOverride).distinct.sorted
       if (touched.isEmpty) return
       // the store's merged footer schema + allowMissingColumns: an
       // upstream ALTER TABLE ADD COLUMN (CDC tables drift over a
@@ -1163,23 +1165,56 @@ object ChangeLogStream {
     * the live watermark has advanced since the crash. This is the
     * watermark-per-batch contract Spark's own OffsetSeqLog keeps for
     * its internal aggregations, applied to a user-visible tee.
+    *
+    * The two sides are exact complements: every row lands in exactly
+    * one. Once a mark is recorded, a row without an event time is late.
+    * This split records the mark from its own max over the batch; the
+    * consumer topology ([[fullProductionBatch]]) applies the same rule
+    * ([[LateRule]]) but records the mark from its demux aggregate.
     */
   def lateDataSplit(wmDir: String, delayUs: Long)(
       batch: DataFrame, batchId: Long): (DataFrame, DataFrame) = {
-    val spark = batch.sparkSession
-    val prev = graft.pipeline.LsnCheckpoint.read(spark, s"$wmDir/wm-${batchId - 1}")
-    val us = unix_micros(col("ts"))
-    val (onTime, late) =
-      if (prev < 0) (batch, batch.limit(0))
-      else (batch.filter(us >= prev - delayUs),
-        batch.filter(us < prev - delayUs))
-    // record THIS batch's mark before the caller commits: max(prev,
-    // batch max) — monotone, and deterministic on replay because the
-    // same inputs produce the same max
-    val bmax = batch.agg(max(us)).head()
-    val next = if (bmax.isNullAt(0)) prev else math.max(prev, bmax.getLong(0))
-    graft.pipeline.LsnCheckpoint.write(spark, s"$wmDir/wm-$batchId", next)
-    (onTime, late)
+    val rule = new LateRule(batch.sparkSession, wmDir, delayUs, batchId)
+    // record THIS batch's mark before the caller commits
+    val bmax = batch.agg(max(eventMicros)).head()
+    rule.record(if (bmax.isNullAt(0)) None else Some(bmax.getLong(0)))
+    (batch.filter(rule.onTime), batch.filter(!rule.onTime))
+  }
+
+  private def eventMicros = unix_micros(col("ts"))
+
+  /** The recorded-watermark rule of batch `batchId`: the one place that
+    * says which rows are on time and which mark the batch records.
+    */
+  private final class LateRule(spark: SparkSession, wmDir: String,
+      delayUs: Long, batchId: Long) {
+    /** The mark recorded by the previous batch; -1 when there is none. */
+    val prev: Long = graft.pipeline.LsnCheckpoint.read(spark, s"$wmDir/wm-${batchId - 1}")
+
+    /** True for a row the mark admits, else false — never null. */
+    val onTime: org.apache.spark.sql.Column =
+      if (prev < 0) lit(true)
+      else coalesce(eventMicros >= prev - delayUs, lit(false))
+
+    /** Records this batch's mark, max(prev, batch max): monotone, and
+      * deterministic on replay because the same inputs give the same
+      * max. `batchMax` is None for a batch without event times.
+      */
+    def record(batchMax: Option[Long]): Unit =
+      graft.pipeline.LsnCheckpoint.write(spark, s"$wmDir/wm-$batchId",
+        batchMax.fold(prev)(math.max(prev, _)))
+  }
+
+  /** The consumer topology's late tee: writes the rows `rule` finds late
+    * to `latePath` (a per-batch overwrite) and returns the on-time rows.
+    * The caller records the mark. A method of its own so that a stack
+    * sample of the late write names the late tee (perfbench's step
+    * sampler attributes batch time by method name).
+    */
+  private def lateDataSplitTee(rule: LateRule, batch: DataFrame,
+      latePath: String): DataFrame = {
+    batch.filter(!rule.onTime).write.mode("overwrite").parquet(latePath)
+    batch.filter(rule.onTime)
   }
 
   /** [[upsertBatch]] behind the late tee: late rows land VERBATIM in
@@ -1249,11 +1284,13 @@ object ChangeLogStream {
     * idempotent foreachBatch body, with the two error paths it only
     * logs made durable:
     *
-    *   wire bytes → decode (undecodable → dead-letter ledger)
+    *   wire bytes → decode (undecodable, or no LSN or event time →
+    *               dead-letter ledger)
     *             → event-time admission (recorded watermark; too-late
     *               rows → late ledger)
     *             → per-(schema, table) demux
-    *             → each slice upserted into its own bucketed store
+    *             → each slice upserted into its own bucketed store, the
+    *               tables concurrently
     *             → one progress record per table (component = the
     *               routed table — the per-index accounting the
     *               reference's SQLite log keeps), computed in the demux
@@ -1277,49 +1314,76 @@ object ChangeLogStream {
     * demux → progress log), factored so [[fullConsumerBatch]] and
     * [[fullProductionBatch]] differ ONLY in the per-slice sink — a fix
     * to the DLQ idempotency or the late-tee path lands in both
-    * automatically. Decode runs once (persisted).
+    * automatically. Decode runs once (persisted). An envelope without
+    * an LSN or an event time is dead-lettered: neither side of the late
+    * split could admit it.
     *
     * The demux is ONE aggregate per batch: `groupBy(schema, table)`
-    * with the progress aggregate (count, min and max LSN) collects
-    * O(tables-in-batch) rows, never payload, and yields both the table
-    * list and every table's progress record. `sinkFor` gets that
-    * record (component = "schema.table"). The records are written in
-    * one per-batch overwrite AFTER the last table commits: the log
-    * never claims progress the state lost, and a replayed batch
-    * rewrites its records instead of doubling them — the DLQ and late
-    * ledgers' idempotency, so the conservation law survives replay.
+    * with the progress aggregate (count, min and max LSN) and the max
+    * event time collects O(tables-in-batch) rows, never payload. It
+    * yields the table list, every table's progress record and the
+    * batch's watermark: `wm-<batchId>` is recorded as max(previous
+    * mark, max over the groups) before any table sink runs. The groups
+    * hold only on-time rows, and that is the same mark as the max over
+    * every decoded row: a late row is older than the previous mark
+    * minus a non-negative delay, so it can never raise the mark.
+    *
+    * `sinkFor` gets each table's record (component = "schema.table").
+    * The table sinks run concurrently, each on its own store, with the
+    * caller's job group, job tags and execution id, so cancelling the
+    * caller's jobs cancels theirs. Every sink is waited for; the first
+    * failure in table order is rethrown. The records are written in one
+    * per-batch overwrite only after every table committed: the log never
+    * claims progress the state lost, and a replayed batch rewrites its
+    * records instead of doubling them — the DLQ and late ledgers'
+    * idempotency, so the conservation law survives replay.
     */
   private def consumerTopology(baseDir: String, delayUs: Long)(
       sinkFor: graft.ops.LogSink.LogRecord => (DataFrame, Long) => Unit)(
       wire: DataFrame, batchId: Long): Unit = {
+    require(delayUs >= 0, s"the late delay must not be negative, got $delayUs us")
+    val spark = wire.sparkSession
     val decoded = wire
       .withColumn("ev", from_json(col("value").cast("string"),
         graft.model.CdcEvent.envelopeSchema))
       .persist()
     try {
-      decoded.filter(col("ev.lsn").isNull)
+      val dead = col("ev.lsn").isNull || col("ev.ts").isNull
+      decoded.filter(dead)
         .select(col("key").cast("string").as("msg_key"),
           col("value").cast("string").as("raw_value"))
         .write.mode("overwrite").parquet(s"$baseDir/dlq/batch_id=$batchId")
-      val good = decoded.filter(col("ev.lsn").isNotNull).select("ev.*")
-      val (onTime, late) = lateDataSplit(s"$baseDir/wm", delayUs)(good, batchId)
-      late.write.mode("overwrite").parquet(s"$baseDir/late/batch_id=$batchId")
-      val adm = onTime.persist()
+      val rule = new LateRule(spark, s"$baseDir/wm", delayUs, batchId)
+      val adm = lateDataSplitTee(rule, decoded.filter(!dead).select("ev.*"),
+        s"$baseDir/late/batch_id=$batchId").persist()
       try {
-        val aggs = graft.ops.LogSink.progressAggs("lsn")
-        val records = adm.groupBy("schemaName", "tableName")
+        val aggs = graft.ops.LogSink.progressAggs("lsn") :+ max(eventMicros)
+        val groups = adm.groupBy("schemaName", "tableName")
           .agg(aggs.head, aggs.tail: _*).collect()
           .sortBy(r => (r.getString(0), r.getString(1)))
-          .map { r =>
-            val (s0, t) = (r.getString(0), r.getString(1))
-            val rec = graft.ops.LogSink.progressFrom(r, 2, batchId, s"$s0.$t")
-            sinkFor(rec)(
-              adm.filter(col("schemaName") === s0 && col("tableName") === t),
-              batchId)
-            rec
+        // field 5 is the group's max event time
+        rule.record(groups.filterNot(_.isNullAt(5)).map(_.getLong(5)).maxOption)
+        val records = groups.map { r =>
+          graft.ops.LogSink.progressFrom(r, 2, batchId, s"${r.getString(0)}.${r.getString(1)}")
+        }
+        // a few tables at a time: every merge is a chain of small jobs
+        // on the same executors, so the gain is overlapping their gaps
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.max(1, math.min(groups.length, 8)))
+        try {
+          val sinks = groups.zip(records).map { case (r, rec) =>
+            val slice = adm.filter(col("schemaName") === r.getString(0) &&
+              col("tableName") === r.getString(1))
+            GraftShim.withThreadLocalCaptured(spark, pool)(sinkFor(rec)(slice, batchId))
           }
-        graft.ops.LogSink.writeBatch(wire.sparkSession, s"$baseDir/log",
-          batchId, records.toSeq)
+          // get() wraps a sink's failure in an ExecutionException
+          val failures = sinks.flatMap { s =>
+            try { s.get(); None }
+            catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+          }
+          failures.headOption.foreach(e => throw e)
+        } finally pool.shutdownNow()
+        graft.ops.LogSink.writeBatch(spark, s"$baseDir/log", batchId, records.toSeq)
       } finally { adm.unpersist(); () }
     } finally { decoded.unpersist(); () }
   }
@@ -1327,17 +1391,21 @@ object ChangeLogStream {
   /** The FULL production sink — every durable feature of the consumer
     * active in one foreachBatch body behind one checkpoint:
     *
-    *   wire bytes → decode (undecodable → dead-letter ledger)
+    *   wire bytes → decode (undecodable, or no LSN or event time →
+    *               dead-letter ledger)
     *             → event-time admission (recorded watermark; too-late
     *               rows → late ledger)
-    *             → per-(schema, table) demux
+    *             → per-(schema, table) demux, one aggregate that also
+    *               yields the batch's watermark (recorded before any
+    *               table sink runs) and each table's retention head
     *             → each slice through the CARRY-FORWARD + TOMBSTONE-
     *               RETENTION merge ([[carryForwardRetentionUpsertBatch]]:
     *               TOASTed cells heal from prior batches, deletes leave
-    *               horizon-guarded tombstones)
+    *               horizon-guarded tombstones), the tables' merges
+    *               running concurrently
     *             → one progress record per (table, batch), computed in
-    *               the demux aggregate (which also supplies each
-    *               table's retention head) and written once per batch.
+    *               the demux aggregate and written once per batch,
+    *               after every table committed.
     *
     * [[fullConsumerBatch]] is this topology with the plain last-writer
     * upsert; this is the one a Postgres-with-TOAST deployment runs.

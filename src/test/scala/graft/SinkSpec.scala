@@ -10,17 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * directory, which this spec asserts from the physical plan.
   */
 class SinkSpec extends AnyFunSuite {
+  import SinkSpec.plant
   lazy val spark = TestSession.spark
-
-  /** Writes `rows` as one valid parquet data file into bucket `b` of the
-    * store at `dir`, beside the files the sink wrote there.
-    */
-  private def plant(rows: org.apache.spark.sql.DataFrame, dir: String, b: Int): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_plant").toString + "/p"
-    rows.coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles().filter(_.getName.startsWith("part-")).head
-    assert(part.renameTo(new java.io.File(dir, s"${streaming.ChangeLogStream.BucketCol}=$b/part-planted.parquet")))
-  }
 
   test("partitioned sink: routing-column filter prunes at the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/t"
@@ -357,5 +348,20 @@ class SinkSpec extends AnyFunSuite {
       env.filter(col("tableName") === "users").limit(5), dir)
     assert(streaming.ChangeLogStream.readTable(spark, dir, "public", "users")
       .count() === before + 5)
+  }
+}
+
+object SinkSpec {
+
+  /** Writes `rows` as one valid parquet data file into bucket `b` of the
+    * store at `dir`, beside the files the sink wrote there, and returns it.
+    */
+  def plant(rows: org.apache.spark.sql.DataFrame, dir: String, b: Int): java.io.File = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_plant").toString + "/p"
+    rows.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().filter(_.getName.startsWith("part-")).head
+    val planted = new java.io.File(dir, s"${streaming.ChangeLogStream.BucketCol}=$b/part-planted.parquet")
+    assert(part.renameTo(planted))
+    planted
   }
 }
