@@ -2,7 +2,7 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** K3 analog — the durable structured log the reference tees every
@@ -54,11 +54,13 @@ object LogSink {
   /** Every record under `dir`: [[append]]'s flat files and
     * [[writeBatch]]'s `batch_id=` directories alike (recursive lookup,
     * no partition discovery — a record carries its own `batchId`), so
-    * a log started by appends can continue per batch.
+    * a log started by appends can continue per batch. The record's
+    * fixed schema is given, so the read starts no inference job.
     */
   def read(spark: SparkSession, dir: String): Dataset[LogRecord] = {
     import spark.implicits._
-    spark.read.option("recursiveFileLookup", "true").parquet(dir).as[LogRecord]
+    spark.read.schema(implicitly[Encoder[LogRecord]].schema)
+      .option("recursiveFileLookup", "true").parquet(dir).as[LogRecord]
   }
 
   /** The progress aggregate over `lsnCol`: row count, min and max LSN.

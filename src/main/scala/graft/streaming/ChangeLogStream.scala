@@ -564,33 +564,6 @@ object ChangeLogStream {
     upsertBatchImpl(tableDir, keyCols, versionCol, numBuckets,
       compact = None)(batch, batchId)
 
-  /** [[upsertBatch]] with the TOAST carry-forward MERGE LAW (SURVEY
-    * §7.5.5 end-to-end): batches are CDC envelope rows (op, lsn, key,
-    * after, unchangedCols); the store holds (key, state_lsn, state).
-    * Per touched bucket, the existing state re-enters the merge as a
-    * synthetic `snapshot` event and
-    * [[graft.pipeline.ChangeLog.latestStateCarryForward]] resolves the
-    * batch against it — so an update whose TOASTed column was not
-    * re-shipped HEALS from the store's value even when the insert that
-    * wrote it landed in an earlier micro-batch. The reference cannot
-    * express this at all (its `"(unchanged)"` string lands in ES as
-    * data); the plain sink cannot either (last-writer-wins would
-    * overwrite the cell with the marker's null). Delete semantics: a
-    * delete at-or-above the key's state LSN removes the key from its
-    * bucket outright (the merge's fence) — replays of the same batch
-    * re-merge to the same result (idempotent); replays of OLDER
-    * history can resurrect, the same horizon contract as
-    * [[retentionUpsertBatch]]. All bucket mechanics (touched-only
-    * rewrite, rename-aside crash protocol, pinned bucket count) are
-    * the SAME code the model property test hammers.
-    */
-  def carryForwardUpsertBatch(tableDir: String, numBuckets: Int = 16)(
-      batch: DataFrame, batchId: Long): Unit =
-    upsertBatchImpl(tableDir, Seq("key"), "lsn", numBuckets,
-      compact = None, merge = Some((existing, batchRows) =>
-        ChangeLog.latestStateCarryForward(withPriorState(existing, batchRows))))(
-      batch, batchId)
-
   /** The batch's envelope rows plus the touched buckets' prior rows as
     * synthetic events: live rows re-enter as `snapshot`s, tombstones
     * (state NULL) as `delete` fences — one scan of the touched buckets.
@@ -1018,50 +991,6 @@ object ChangeLogStream {
     finally reader.close()
   }
 
-  /** [[upsertBatch]] with §2.6 TRUNCATE semantics in the streaming
-    * path. A truncate is a TABLE-level operation, so it belongs at the
-    * table's commit point (this sink), not inside the per-key state
-    * operator: a key-partitioned state group can never observe another
-    * key's truncate, and exploding the fence across the key universe is
-    * exactly the shuffle the keyed layout exists to avoid. (The
-    * reference only ever LOGS truncate — replicator.go:409-411; a sink
-    * doing it right clears the index, which is what this does.)
-    *
-    * Per batch, in crash-safe order:
-    *  1. a truncate whose version advances the persisted fence clears
-    *     every bucket — including any moved-aside crash-recovery copies,
-    *     which would otherwise be restored post-clear — and THEN
-    *     advances the fence ([[graft.pipeline.LsnCheckpoint]]'s atomic
-    *     replace). A crash between the two re-runs the clear on replay
-    *     (the truncate is still ahead of the stored fence); the reverse
-    *     order could persist a fence over uncleared state.
-    *  2. rows at-or-below the fence are dropped — a stale replay of
-    *     pre-truncate history must not resurrect cleared keys.
-    *  3. surviving rows upsert as usual (idempotent, bucketed).
-    */
-  def truncateAwareUpsertBatch(tableDir: String, keyCols: Seq[String],
-      versionCol: String, isTruncate: org.apache.spark.sql.Column,
-      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val fencePath = tableDir + "__fence"
-    val oldFence = graft.pipeline.LsnCheckpoint.read(spark, fencePath)
-    val newFence = maxLsn(batch.filter(isTruncate), versionCol)
-    if (newFence > oldFence) {
-      val target = new Path(tableDir)
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val backupRoot = new Path(tableDir + "__prev")
-      if (fs.exists(backupRoot)) fs.delete(backupRoot, true)
-      if (fs.exists(target))
-        fs.listStatus(target)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
-          .foreach(st => fs.delete(st.getPath, true))
-      graft.pipeline.LsnCheckpoint.write(spark, fencePath, newFence)
-    }
-    val fence = math.max(oldFence, newFence)
-    val survivors = batch.filter(!isTruncate && col(versionCol).cast("long") > fence)
-    upsertBatch(tableDir, keyCols, versionCol, numBuckets)(survivors, batchId)
-  }
-
   /** D12 index routing as physical layout: the reference routes each
     * document to a per-table ES index named `cdc_<schema>_<table>`
     * (es_consumer/main.go:66-75); here the envelope lands partitioned
@@ -1096,56 +1025,6 @@ object ChangeLogStream {
     upsertBatch(tableDir, keyCols, versionCol, numBuckets)(batch, batchId)
     graft.ops.LogSink.append(batch.sparkSession, logDir, Seq(record))
   }
-
-  /** Consumer-side DEAD-LETTER tee around the bucketed upsert — C3's
-    * error path as a durable relation instead of the reference's
-    * log-and-drop (es_consumer/main.go:66-71; batch analog:
-    * `cdc_dead_letter`). The batch is the Kafka-shaped wire relation
-    * (`key`/`value` binary, [[graft.pipeline.Envelope.toKafkaMessages]]).
-    * Values that fail the envelope decode are preserved VERBATIM (raw
-    * value bytes as string, plus the message key) under
-    * `dlqDir/batch_id=<id>/`; the decodable remainder flows to the
-    * wrapped upsert unchanged — nothing is silently dropped, nothing
-    * poisoned is committed as state.
-    *
-    * Idempotency: the DLQ publish is a per-batch-directory OVERWRITE
-    * keyed by batchId, so a foreachBatch replay after a crash rewrites
-    * the same rows rather than appending duplicates — the ledger holds
-    * exactly one row per poisoned message (the state side replays
-    * safely through the upsert's own latest-state idempotency).
-    *
-    * Decode contract: a valid envelope always carries a non-null lsn
-    * (every producer path in [[graft.pipeline.Envelope]] stamps one),
-    * so `from_json`'s permissive-mode null is a definitive failure
-    * signal, never a false positive on a healthy message.
-    *
-    * Scale: decode runs ONCE (both sides of the split read one
-    * persisted decode), the split is map-side, and the DLQ write
-    * touches only this batch's directory — cost is O(batch), never
-    * O(accumulated state or accumulated dead letters).
-    */
-  def deadLetterUpsertBatch(tableDir: String, dlqDir: String,
-      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
-    val decoded = batch
-      .withColumn("ev", from_json(col("value").cast("string"),
-        graft.model.CdcEvent.envelopeSchema))
-      .persist()
-    try {
-      decoded.filter(col("ev.lsn").isNull)
-        .select(col("key").cast("string").as("msg_key"),
-          col("value").cast("string").as("raw_value"))
-        .write.mode("overwrite").parquet(s"$dlqDir/batch_id=$batchId")
-      val good = decoded.filter(col("ev.lsn").isNotNull).select("ev.*")
-      upsertBatch(tableDir, Seq("key"), "lsn", numBuckets)(good, batchId)
-    } finally { decoded.unpersist(); () }
-  }
-
-  /** Read back the dead-letter ledger; partition discovery surfaces
-    * `batch_id` as the per-message provenance column.
-    */
-  def readDeadLetters(spark: org.apache.spark.sql.SparkSession,
-      dlqDir: String): DataFrame =
-    spark.read.parquet(dlqDir)
 
   /** Event-time LATE-DATA tee — the watermark sibling of the
     * dead-letter tee. Spark's built-in windowed aggregations DROP rows
@@ -1217,30 +1096,13 @@ object ChangeLogStream {
     batch.filter(rule.onTime)
   }
 
-  /** [[upsertBatch]] behind the late tee: late rows land VERBATIM in
-    * `lateDir/batch_id=<id>/` (idempotent per-batch overwrite), on-time
-    * rows flow to the bucketed upsert as CDC envelopes. The composition
-    * every consumer with an SLA on event-time correctness wants: state
-    * reflects only rows the watermark contract admits, and nothing is
-    * silently discarded.
-    */
-  def lateAwareUpsertBatch(tableDir: String, lateDir: String, wmDir: String,
-      delayUs: Long, numBuckets: Int = 16)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val (onTime, late) = lateDataSplit(wmDir, delayUs)(batch, batchId)
-    late.write.mode("overwrite").parquet(s"$lateDir/batch_id=$batchId")
-    upsertBatch(tableDir, Seq("key"), "lsn", numBuckets)(
-      graft.pipeline.Envelope.toCdcEventsStreaming(onTime).toDF(), batchId)
-  }
-
-  /** Carry-forward merge WITH Kafka-style tombstone retention — the
-    * two sink laws that previously lived in separate stores
-    * ([[carryForwardUpsertBatch]] removes deleted keys outright;
-    * [[retentionUpsertBatch]] keeps last-writer-wins rows) composed
-    * into ONE merge, because the production topology needs both at
-    * once: TOASTed updates must heal from prior state across batch
-    * boundaries AND a deleted key must leave a tombstone that protects
-    * lagging consumers until the retention horizon passes.
+  /** Carry-forward merge WITH Kafka-style tombstone retention, behind
+    * the table's TRUNCATE fence: the per-table sink of
+    * [[fullProductionBatch]]. TOASTed updates must heal from prior
+    * state across batch boundaries, a deleted key must leave a
+    * tombstone that protects lagging consumers until the retention
+    * horizon passes, and a truncate clears the table (the fence and its
+    * crash order are documented on [[fullProductionBatch]]).
     *
     * Store schema: (key, state_lsn, state, tombstone). Live rows carry
     * the carried-forward state map; tombstone rows carry the delete
@@ -1256,22 +1118,33 @@ object ChangeLogStream {
     * monotone persisted head, the [[retentionUpsertBatch]] protocol)
     * still protects someone. Same
     * bucket mechanics, same crash protocol, same idempotency argument
-    * as every other sink here. Inside [[fullProductionBatch]] the
-    * batch's max LSN comes from the demux aggregate, not a scan of its
-    * own.
+    * as every other sink here. One aggregate over the batch yields its
+    * max LSN and max truncate LSN; inside [[fullProductionBatch]] both
+    * come from the demux aggregate instead.
     */
   def carryForwardRetentionUpsertBatch(tableDir: String,
-      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit =
-    carryForwardRetentionWithHead(tableDir, numBuckets, maxLsn(batch, "lsn"))(
+      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
+    val lsn = col("lsn").cast("long")
+    val maxes = batch.agg(max(lsn), max(when(col("op") === "truncate", lsn))).head()
+    def lsnAt(i: Int): Long = if (maxes.isNullAt(i)) -1L else maxes.getLong(i)
+    carryForwardRetentionWithHead(tableDir, numBuckets, lsnAt(0), lsnAt(1))(
       batch, batchId)
+  }
 
-  /** [[carryForwardRetentionUpsertBatch]] given the batch's max LSN. */
+  /** [[carryForwardRetentionUpsertBatch]] given the batch's max LSN and
+    * its max truncate LSN (-1 when the batch has no truncate). Rows at
+    * or below the table's fence are dropped before the merge; every
+    * truncate is among them, since the fence covers the batch's
+    * truncates. A table never truncated merges the batch as it is.
+    */
   private def carryForwardRetentionWithHead(tableDir: String, numBuckets: Int,
-      batchMax: Long)(batch: DataFrame, batchId: Long): Unit = {
+      batchMax: Long, truncateMax: Long)(batch: DataFrame, batchId: Long): Unit = {
+    val fence = advanceFence(batch.sparkSession, tableDir, truncateMax)
     val head = advanceHead(batch.sparkSession, tableDir, batchMax)
     upsertBatchImpl(tableDir, Seq("key"), "lsn", numBuckets,
       compact = None,
-      merge = Some(carryForwardRetentionMerge(head)))(batch, batchId)
+      merge = Some(carryForwardRetentionMerge(head)))(
+      if (fence < 0) batch else batch.filter(col("lsn") > fence), batchId)
   }
 
   private def carryForwardRetentionMerge(head: Long)(existing: DataFrame,
@@ -1279,67 +1152,60 @@ object ChangeLogStream {
     ChangeLog.retainedState(
       ChangeLog.carryForwardKeys(withPriorState(existing, batchRows)), lit(head))
 
-  /** The COMPLETE consumer micro-batch — the reference's whole
-    * es_consumer main loop (es_consumer/main.go:44-95) as one
-    * idempotent foreachBatch body, with the two error paths it only
-    * logs made durable:
-    *
-    *   wire bytes → decode (undecodable, or no LSN or event time →
-    *               dead-letter ledger)
-    *             → event-time admission (recorded watermark; too-late
-    *               rows → late ledger)
-    *             → per-(schema, table) demux
-    *             → each slice upserted into its own bucketed store, the
-    *               tables concurrently
-    *             → one progress record per table (component = the
-    *               routed table — the per-index accounting the
-    *               reference's SQLite log keeps), computed in the demux
-    *               aggregate and written once per batch
-    *
-    * Conservation law (asserted by the spec): every wire message lands
-    * in EXACTLY ONE of {dead ledger, late ledger, a routed table's
-    * logged row count} — nothing silently dropped, nothing double-
-    * committed, also under replay. Layout under `baseDir`: `dlq/`,
-    * `late/`, `wm/`, `log/`, `state/<schema>.<table>/`.
+  /** The table's TRUNCATE fence, persisted at `tableDir__fence`
+    * ([[graft.pipeline.LsnCheckpoint]]'s atomic replace), advanced to
+    * `truncateMax` when that is newer — after clearing the moved-aside
+    * copies and then every bucket, in that order. Returns the fence, -1
+    * for a table never truncated. Without a newer truncate this costs
+    * one existence check.
     */
-  def fullConsumerBatch(baseDir: String, delayUs: Long, numBuckets: Int = 4)(
-      wire: DataFrame, batchId: Long): Unit =
-    consumerTopology(baseDir, delayUs) { rec =>
-      upsertBatch(s"$baseDir/state/${rec.component}", Seq("key"), "lsn",
-        numBuckets)
-    }(wire, batchId)
+  private def advanceFence(spark: SparkSession, tableDir: String,
+      truncateMax: Long): Long = {
+    val fencePath = tableDir + "__fence"
+    val fence = graft.pipeline.LsnCheckpoint.read(spark, fencePath)
+    if (truncateMax <= fence) fence
+    else {
+      val target = new Path(tableDir)
+      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(tableDir + "__prev"), true)
+      Option(fs.globStatus(new Path(target, s"$BucketCol=*")))
+        .foreach(_.foreach(st => fs.delete(st.getPath, true)))
+      graft.pipeline.LsnCheckpoint.write(spark, fencePath, truncateMax)
+      truncateMax
+    }
+  }
 
-  /** The shared consumer topology BODY (decode → dead-letter tee →
-    * recorded-watermark admission → late tee → per-(schema, table)
-    * demux → progress log), factored so [[fullConsumerBatch]] and
-    * [[fullProductionBatch]] differ ONLY in the per-slice sink — a fix
-    * to the DLQ idempotency or the late-tee path lands in both
-    * automatically. Decode runs once (persisted). An envelope without
-    * an LSN or an event time is dead-lettered: neither side of the late
-    * split could admit it.
+  /** The consumer topology BODY of [[fullProductionBatch]] (decode →
+    * dead-letter tee → recorded-watermark admission → late tee →
+    * per-(schema, table) demux → fenced table merges → progress log).
+    * A method of its own so that a stack sample of the batch names it
+    * (perfbench's step sampler attributes batch time by method name).
+    * Decode runs once (persisted). An envelope without an LSN or an
+    * event time is dead-lettered: neither side of the late split could
+    * admit it.
     *
     * The demux is ONE aggregate per batch: `groupBy(schema, table)`
-    * with the progress aggregate (count, min and max LSN) and the max
-    * event time collects O(tables-in-batch) rows, never payload. It
-    * yields the table list, every table's progress record and the
-    * batch's watermark: `wm-<batchId>` is recorded as max(previous
-    * mark, max over the groups) before any table sink runs. The groups
-    * hold only on-time rows, and that is the same mark as the max over
-    * every decoded row: a late row is older than the previous mark
-    * minus a non-negative delay, so it can never raise the mark.
+    * with the progress aggregate (count, min and max LSN), the max
+    * event time and the max truncate LSN collects O(tables-in-batch)
+    * rows, never payload. It yields the table list, every table's
+    * progress record and truncate max, and the batch's watermark:
+    * `wm-<batchId>` is recorded as max(previous mark, max over the
+    * groups) before any table sink runs. The groups hold only on-time
+    * rows, and that is the same mark as the max over every decoded row:
+    * a late row is older than the previous mark minus a non-negative
+    * delay, so it can never raise the mark.
     *
-    * `sinkFor` gets each table's record (component = "schema.table").
-    * The table sinks run concurrently, each on its own store, with the
+    * The table merges ([[carryForwardRetentionWithHead]], component =
+    * "schema.table") run concurrently, each on its own store, with the
     * caller's job group, job tags and execution id, so cancelling the
-    * caller's jobs cancels theirs. Every sink is waited for; the first
+    * caller's jobs cancels theirs. Every merge is waited for; the first
     * failure in table order is rethrown. The records are written in one
     * per-batch overwrite only after every table committed: the log never
     * claims progress the state lost, and a replayed batch rewrites its
     * records instead of doubling them — the DLQ and late ledgers'
     * idempotency, so the conservation law survives replay.
     */
-  private def consumerTopology(baseDir: String, delayUs: Long)(
-      sinkFor: graft.ops.LogSink.LogRecord => (DataFrame, Long) => Unit)(
+  private def consumerTopology(baseDir: String, delayUs: Long, numBuckets: Int)(
       wire: DataFrame, batchId: Long): Unit = {
     require(delayUs >= 0, s"the late delay must not be negative, got $delayUs us")
     val spark = wire.sparkSession
@@ -1357,11 +1223,12 @@ object ChangeLogStream {
       val adm = lateDataSplitTee(rule, decoded.filter(!dead).select("ev.*"),
         s"$baseDir/late/batch_id=$batchId").persist()
       try {
-        val aggs = graft.ops.LogSink.progressAggs("lsn") :+ max(eventMicros)
+        val aggs = graft.ops.LogSink.progressAggs("lsn") :+ max(eventMicros) :+
+          max(when(col("op") === "truncate", col("lsn"))).cast("long")
         val groups = adm.groupBy("schemaName", "tableName")
           .agg(aggs.head, aggs.tail: _*).collect()
           .sortBy(r => (r.getString(0), r.getString(1)))
-        // field 5 is the group's max event time
+        // field 5 is the group's max event time, field 6 its max truncate LSN
         rule.record(groups.filterNot(_.isNullAt(5)).map(_.getLong(5)).maxOption)
         val records = groups.map { r =>
           graft.ops.LogSink.progressFrom(r, 2, batchId, s"${r.getString(0)}.${r.getString(1)}")
@@ -1374,7 +1241,9 @@ object ChangeLogStream {
           val sinks = groups.zip(records).map { case (r, rec) =>
             val slice = adm.filter(col("schemaName") === r.getString(0) &&
               col("tableName") === r.getString(1))
-            GraftShim.withThreadLocalCaptured(spark, pool)(sinkFor(rec)(slice, batchId))
+            GraftShim.withThreadLocalCaptured(spark, pool)(
+              carryForwardRetentionWithHead(s"$baseDir/state/${rec.component}", numBuckets,
+                rec.lastLsn, if (r.isNullAt(6)) -1L else r.getLong(6))(slice, batchId))
           }
           // get() wraps a sink's failure in an ExecutionException
           val failures = sinks.flatMap { s =>
@@ -1388,8 +1257,11 @@ object ChangeLogStream {
     } finally { decoded.unpersist(); () }
   }
 
-  /** The FULL production sink — every durable feature of the consumer
-    * active in one foreachBatch body behind one checkpoint:
+  /** The production sink — the reference's whole es_consumer main loop
+    * (es_consumer/main.go:44-95) as one idempotent foreachBatch body
+    * behind one checkpoint, with the two error paths it only logs made
+    * durable and the TRUNCATE it only logs (replicator.go:409-411)
+    * applied:
     *
     *   wire bytes → decode (undecodable, or no LSN or event time →
     *               dead-letter ledger)
@@ -1397,7 +1269,11 @@ object ChangeLogStream {
     *               rows → late ledger)
     *             → per-(schema, table) demux, one aggregate that also
     *               yields the batch's watermark (recorded before any
-    *               table sink runs) and each table's retention head
+    *               table sink runs), each table's retention head and
+    *               its max truncate LSN
+    *             → per table, the TRUNCATE fence: a truncate newer than
+    *               the table's fence clears the table; rows at or below
+    *               the fence, truncates included, are dropped
     *             → each slice through the CARRY-FORWARD + TOMBSTONE-
     *               RETENTION merge ([[carryForwardRetentionUpsertBatch]]:
     *               TOASTed cells heal from prior batches, deletes leave
@@ -1407,21 +1283,37 @@ object ChangeLogStream {
     *               the demux aggregate and written once per batch,
     *               after every table committed.
     *
-    * [[fullConsumerBatch]] is this topology with the plain last-writer
-    * upsert; this is the one a Postgres-with-TOAST deployment runs.
-    * EXTENDED conservation law (asserted by the spec): every wire
-    * message is in exactly one of {dead ledger, late ledger, Σ logged
-    * per-table rows}, also after a replayed batch; additionally each
-    * table's live state equals the batch carry-forward reference over
-    * its admitted slice, tombstones in the store are exactly the fenced
-    * keys the horizon still retains, and at least one materialized cell
-    * is provably CARRIED (its provenance LSN older than its row's state
-    * LSN) across a batch boundary.
+    * A truncate is a TABLE-level operation, so it belongs at the
+    * table's commit point, not inside the per-key merge: a key's group
+    * never sees another key's truncate, and exploding the fence across
+    * the key universe is the shuffle the keyed layout exists to avoid.
+    * Per table, in crash-safe order:
+    *  1. a truncate whose LSN advances the persisted fence
+    *     (`state/<schema>.<table>__fence`) first deletes the moved-aside
+    *     copies (`__prev`, which the merge's recovery sweep would
+    *     otherwise restore after the clear), then every `__bucket=*`
+    *     directory, and only then writes the fence. A crash before the
+    *     write re-runs the clear on replay (the truncate is still ahead
+    *     of the stored fence); the reverse order could persist a fence
+    *     over uncleared state.
+    *  2. rows at or below the fence are dropped: a stale replay of
+    *     pre-truncate history must not resurrect cleared keys, and a
+    *     truncate in the middle of a batch keeps only that table's
+    *     events above it.
+    *  3. the surviving rows merge as usual (idempotent, bucketed).
+    *
+    * Conservation law (asserted by the spec): every wire message is in
+    * exactly one of {dead ledger, late ledger, Σ logged per-table rows}
+    * — a truncate counts as logged — also after a replayed batch;
+    * additionally each table's live state equals the batch
+    * carry-forward reference over its admitted slice, tombstones in the
+    * store are exactly the fenced keys the horizon still retains, and at
+    * least one materialized cell is provably CARRIED (its provenance LSN
+    * older than its row's state LSN) across a batch boundary. Layout
+    * under `baseDir`: `dlq/`, `late/`, `wm/`, `log/`,
+    * `state/<schema>.<table>/`.
     */
   def fullProductionBatch(baseDir: String, delayUs: Long, numBuckets: Int = 4)(
       wire: DataFrame, batchId: Long): Unit =
-    consumerTopology(baseDir, delayUs) { rec =>
-      carryForwardRetentionWithHead(s"$baseDir/state/${rec.component}", numBuckets,
-        rec.lastLsn)
-    }(wire, batchId)
+    consumerTopology(baseDir, delayUs, numBuckets)(wire, batchId)
 }

@@ -105,6 +105,9 @@ object Topology {
   val wireSchema: StructType = StructType(Seq(
     StructField("key", BinaryType), StructField("value", BinaryType)))
 
+  /** A dead-letter ledger row: the message key and the raw value bytes. */
+  private val deadLetterSchema = StructType.fromDDL("msg_key STRING, raw_value STRING")
+
   final case class TableState(table: String, live: Long, tombstones: Long)
 
   /** The conservation-law operands the reference's operator reads off
@@ -174,7 +177,11 @@ object Topology {
     case g: GraphIngestConfig => runGraph(spark, g)
   }
 
-  /** Post-run census over the sink directories. */
+  /** Post-run census over the sink directories. Every read has a fixed
+    * schema, so none starts a schema-inference job: the ledgers and the
+    * feed have theirs, and a table store's comes from its parquet
+    * footers, read without a Spark job.
+    */
   def census(spark: SparkSession, cfg: Config): Census = {
     // Only the MISSING-STORE case reads as zero (an untouched sink dir
     // is normal: the sink writes touched buckets only). Any other
@@ -184,30 +191,33 @@ object Topology {
     def missingPath(e: org.apache.spark.sql.AnalysisException): Boolean =
       e.getCondition == "PATH_NOT_FOUND" ||
         e.getCondition == "UNABLE_TO_INFER_SCHEMA"
-    def cnt(p: String): Long =
-      try spark.read.parquet(p).count()
+    def orZero[T](zero: T)(read: => T): T =
+      try read
       catch {
-        case e: org.apache.spark.sql.AnalysisException if missingPath(e) => 0L
+        case e: org.apache.spark.sql.AnalysisException if missingPath(e) => zero
       }
+    def cnt(p: String, schema: StructType): Long =
+      orZero(0L)(spark.read.schema(schema).parquet(p).count())
     val logged = graft.ops.LogSink.read(spark, s"${cfg.sinkDir}/log")
       .collect().map(_.nRows).sum
     val states = cfg.publication.tables.map { t =>
       // a PUBLISHED table the feed never mentioned has no store at all
-      // (the sink only writes touched buckets) — that is live=0, not a
-      // crash: the operator reading this census needs the zero row to
-      // notice the silent table
-      try {
-        val st = spark.read.parquet(s"${cfg.sinkDir}/state/$t")
-        TableState(t, st.filter(!col("tombstone")).count(),
-          st.filter(col("tombstone")).count())
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException if missingPath(e) =>
-          TableState(t, 0L, 0L)
+      // (the sink only writes touched buckets), and a truncated one may
+      // have no data file left — that is live=0, not a crash: the
+      // operator reading this census needs the zero row to notice the
+      // silent table
+      orZero(TableState(t, 0L, 0L)) {
+        val r = ChangeLogStream.readState(spark, s"${cfg.sinkDir}/state/$t")
+          .agg(count(when(!col("tombstone"), 1)), count(when(col("tombstone"), 1)))
+          .head()
+        TableState(t, r.getLong(0), r.getLong(1))
       }
     }
-    val consumed = spark.read.parquet(cfg.feedDir)
+    val consumed = spark.read.schema(wireSchema).parquet(cfg.feedDir)
       .filter(publishedFilter(cfg)).count()
-    Census(consumed, cnt(s"${cfg.sinkDir}/dlq"), cnt(s"${cfg.sinkDir}/late"),
+    Census(consumed,
+      cnt(s"${cfg.sinkDir}/dlq", deadLetterSchema),
+      cnt(s"${cfg.sinkDir}/late", graft.model.CdcEvent.envelopeSchema),
       logged, states)
   }
 }

@@ -8,16 +8,21 @@ import graft.streaming.ChangeLogStream
 case class CfrOp(key: String, op: String, lsn: Long,
                  after: Map[String, String], unchangedCols: Array[String])
 
-/** Model-based property test of the COMBINED carry-forward +
-  * tombstone-retention merge (r12,
-  * streaming/ChangeLogStream.carryForwardRetentionUpsertBatch) — the
-  * SinkModelSpec treatment for the new sink law. Random envelope
-  * histories (inserts, TOAST-marked updates, deletes; unique LSNs;
-  * random contiguous batch splits; random batch replays) must converge
-  * to an independently-written in-memory model of the batch-sequential
-  * law:
+/** Model-based property test of the production per-table sink: the
+  * COMBINED carry-forward + tombstone-retention merge behind the
+  * TRUNCATE fence
+  * (streaming/ChangeLogStream.carryForwardRetentionUpsertBatch, the
+  * merge fullProductionBatch runs per table). Random envelope histories
+  * (inserts, TOAST-marked updates, deletes, truncates; unique LSNs;
+  * random contiguous batch splits; random batch replays; random mid-swap
+  * crash injections) must converge to an independently-written
+  * in-memory model of the batch-sequential law:
   *
-  *   head   = monotone max applied LSN (persisted before each merge)
+  *   fence  = max truncate LSN ever applied (monotone); a truncate that
+  *            advances it empties the store, and every row at or below
+  *            it (truncates included) is dropped before the merge
+  *   head   = monotone max LSN over each batch, truncates and stale
+  *            rows included (persisted before each merge)
   *   per TOUCHED bucket (bucket locality is part of the contract —
   *   untouched buckets keep even expired tombstones, like log segments
   *   the cleaner hasn't visited):
@@ -32,7 +37,12 @@ case class CfrOp(key: String, op: String, lsn: Long,
   *       above the retention horizon head − head/4.
   *
   * Replays must be no-ops (the model applies each batch once; the sink
-  * sees it twice).
+  * sees it twice). The crash injection moves a live bucket aside to
+  * `__prev` with its staged copy never published, the window between
+  * the two renames: the next batch's recovery sweep must restore it, so
+  * the model never sees the crash — unless that batch's truncate
+  * advances the fence, whose clear must take `__prev` too (it runs
+  * before the sweep), or the sweep would restore a cleared bucket.
   */
 class CfrModelSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -55,10 +65,13 @@ class CfrModelSpec extends AnyFunSuite {
       val lsns = rnd.shuffle((1L to 80L).toList).take(nEvents).sorted
       val events = lsns.map { lsn =>
         val key = keys(rnd.nextInt(keys.length))
-        rnd.nextInt(10) match {
-          case 0 | 1 =>
+        rnd.nextInt(11) match {
+          case 0 =>
+            // table-level: the carrier key is arbitrary
+            CfrOp(key, "truncate", lsn, Map.empty, null)
+          case 1 | 2 =>
             CfrOp(key, "delete", lsn, Map.empty, null)
-          case 2 | 3 | 4 =>
+          case 3 | 4 | 5 =>
             CfrOp(key, "insert", lsn,
               cols.map(c => c -> s"$c$lsn").toMap, null)
           case _ =>
@@ -81,10 +94,14 @@ class CfrModelSpec extends AnyFunSuite {
         .as[(String, Int)].collect().toMap
 
       // ---- the model ----
+      var fence = -1L
       var head = -1L
       var store = Map.empty[String, MRow]
-      def modelApply(batch: Seq[CfrOp]): Unit = {
-        head = math.max(head, batch.map(_.lsn).max)
+      def modelApply(all: Seq[CfrOp]): Unit = {
+        val newFence = all.filter(_.op == "truncate").map(_.lsn).foldLeft(-1L)(math.max)
+        if (newFence > fence) { store = Map.empty; fence = newFence }
+        head = math.max(head, all.map(_.lsn).max)
+        val batch = all.filter(o => o.op != "truncate" && o.lsn > fence)
         val touched = batch.map(o => buckets(o.key)).toSet
         val (inTouched, untouched) =
           store.partition { case (k, _) => touched(buckets(k)) }
@@ -126,12 +143,27 @@ class CfrModelSpec extends AnyFunSuite {
       // ---- drive the sink ----
       val sink = ChangeLogStream.carryForwardRetentionUpsertBatch(dir, nb) _
       var batchId = 0L
-      for (batch <- batches) {
+      for ((batch, i) <- batches.zipWithIndex) {
         val df = batch.toDF()
         sink(df, batchId); batchId += 1
         modelApply(batch)
         if (rnd.nextInt(3) == 0) { // replay: must be a no-op
           sink(df, batchId); batchId += 1
+        }
+        // crash injection (only when another batch will run recovery):
+        // a random live bucket moved aside, its staged copy "lost"
+        if (i < batches.length - 1 && rnd.nextInt(3) == 0) {
+          val root = new java.io.File(dir)
+          val live = Option(root.list()).getOrElse(Array.empty)
+            .filter(_.startsWith("__bucket=")).sorted
+          if (live.nonEmpty) {
+            val victim = live(rnd.nextInt(live.length))
+            val backup = new java.io.File(dir + "__prev")
+            assert(backup.mkdirs())
+            assert(new java.io.File(root, victim)
+              .renameTo(new java.io.File(backup, victim)),
+              s"h=$h: crash injection rename failed for $victim")
+          }
         }
       }
 
@@ -146,7 +178,7 @@ class CfrModelSpec extends AnyFunSuite {
           .map { case (k, sl, st, tb) => k -> MRow(sl, Option(st), tb) }
           .toMap
       assert(got === store,
-        s"h=$h nb=$nb head=$head buckets=$buckets\n" +
+        s"h=$h nb=$nb fence=$fence head=$head buckets=$buckets\n" +
           s"  batches=${batches.map(_.mkString("[", " ", "]")).mkString(" | ")}")
     }
   }

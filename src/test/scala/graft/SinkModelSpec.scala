@@ -1,24 +1,23 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Model-based property test of the bucketed upsert sink — the repo's
   * most load-bearing hand-written component
-  * (streaming/ChangeLogStream.scala: upsertBatch / truncateAwareUpsertBatch
-  * and the rename-aside crash protocol). SinkSpec's scenario tests
-  * check the cases we thought of; this spec checks the CONTRACT:
-  * random op histories (insert/update/delete/truncate, random keys and
-  * unique LSNs, random batch splits, random batch replays, random
-  * mid-swap crash injections) must always converge to the same state
-  * as an in-memory reference model:
+  * (streaming/ChangeLogStream.scala: upsertBatch and the rename-aside
+  * crash protocol). SinkSpec's scenario tests check the cases we
+  * thought of; this spec checks the CONTRACT: random op histories
+  * (insert/update/delete, random keys and unique LSNs, random batch
+  * splits, random batch replays, random mid-swap crash injections) must
+  * always converge to the same state as an in-memory reference model:
   *
-  *   fence  = max truncate LSN ever applied (monotonic; a truncate
-  *            that advances it wipes the store)
-  *   store  = per key, the max-LSN non-truncate row with LSN > fence
-  *            at the time its batch applied (deletes are retained as
+  *   store  = per key, the max-LSN row (deletes are retained as
   *            tombstone rows — the plain sink never GCs; that is
   *            retentionUpsertBatch's separately-tested policy)
+  *
+  * The TRUNCATE fence is not this sink's: it lives in the production
+  * merge, and CfrModelSpec holds it, with the same crash injection,
+  * under property test.
   *
   * The crash injection reproduces exactly the window the protocol
   * defends: a live bucket moved aside to `__prev` with the staged copy
@@ -45,8 +44,7 @@ class SinkModelSpec extends AnyFunSuite {
       val nb = 2 + rnd.nextInt(3) // 2..4 buckets
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_sinkmodel_$h").toString + "/state"
-      val sink = streaming.ChangeLogStream.truncateAwareUpsertBatch(
-        dir, Seq("key"), "lsn", col("op") === "truncate", nb) _
+      val sink = streaming.ChangeLogStream.upsertBatch(dir, Seq("key"), "lsn", nb) _
 
       // one global event sequence with UNIQUE LSNs, mostly ordered but
       // with occasional stragglers (CDC replays deliver old LSNs)
@@ -59,10 +57,9 @@ class SinkModelSpec extends AnyFunSuite {
         val t = lsns(i); lsns(i) = lsns(i + 1); lsns(i + 1) = t
       }
       val events = lsns.map { lsn =>
-        val op = rnd.nextInt(10) match {
-          case 0 => "truncate"
-          case 1 | 2 => "delete"
-          case 3 | 4 | 5 => "insert"
+        val op = rnd.nextInt(9) match {
+          case 0 | 1 => "delete"
+          case 2 | 3 | 4 => "insert"
           case _ => "update"
         }
         Op(1L + rnd.nextInt(6), lsn, op, s"v$lsn")
@@ -74,17 +71,11 @@ class SinkModelSpec extends AnyFunSuite {
         .filter(_.nonEmpty)
 
       // ---- the model ----
-      var fence = -1L
       var store = Map.empty[Long, Op]
-      def modelApply(batch: Seq[Op]): Unit = {
-        val newFence = batch.filter(_.op == "truncate")
-          .map(_.lsn).foldLeft(-1L)(math.max)
-        if (newFence > fence) { store = Map.empty; fence = newFence }
-        val survivors = batch.filter(o => o.op != "truncate" && o.lsn > fence)
-        for (o <- survivors) {
+      def modelApply(batch: Seq[Op]): Unit =
+        for (o <- batch) {
           if (!store.get(o.key).exists(_.lsn >= o.lsn)) store += o.key -> o
         }
-      }
 
       // ---- drive the sink ----
       var batchId = 0L
@@ -115,21 +106,12 @@ class SinkModelSpec extends AnyFunSuite {
       }
 
       // ---- converge ----
-      // a history ending in a truncate (or one that never shipped a
-      // survivor) leaves a marker-only directory with zero buckets —
-      // semantically the empty table
-      val hasBuckets = Option(new java.io.File(dir).list())
-        .getOrElse(Array.empty[String]).exists(_.startsWith("__bucket="))
-      val got =
-        if (hasBuckets)
-          streaming.ChangeLogStream.readState(spark, dir)
-            .select($"key", $"lsn", $"op", $"v").as[Op].collect()
-            .map(o => o.key -> o).toMap
-        else Map.empty[Long, Op]
+      val got = streaming.ChangeLogStream.readState(spark, dir)
+        .select($"key", $"lsn", $"op", $"v").as[Op].collect()
+        .map(o => o.key -> o).toMap
       assert(got === store,
         s"h=$h nb=$nb: sink drifted from model\n" +
-          s"  batches=${batches.map(_.mkString("[", " ", "]")).mkString(" | ")}\n" +
-          s"  fence=$fence")
+          s"  batches=${batches.map(_.mkString("[", " ", "]")).mkString(" | ")}")
     }
   }
 }

@@ -1004,17 +1004,18 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("truncate event clears relation state and fences stale replays") {
+    // the production sink applies the TRUNCATE the reference only logs
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_trunc").toString + "/state"
+    val base = java.nio.file.Files.createTempDirectory("graft_trunc").toString
     val in = MemoryStream[RawEvent]
     val q = in.toDF().writeStream
-      .foreachBatch(ChangeLogStream.truncateAwareUpsertBatch(
-        dir, Seq("user_id"), "event_id",
-        org.apache.spark.sql.functions.col("event_type") === "truncate", 4) _)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000)(
+          usersWire(b, truncates = Seq(5L)), id)
+        ()
+      }
       .outputMode(OutputMode.Append).start()
-    def state(): Set[(Long, Long)] =
-      ChangeLogStream.readState(spark, dir)
-        .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
+    def state(): Set[(Long, Long)] = usersStore(base).map(r => (r._1, r._2))
     try {
       in.addData(ev(1, 1, 1, "signup", 10), ev(2, 2, 2, "signup", 7))
       q.processAllAvailable()
@@ -1031,6 +1032,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(state() === Set((3L, 6L), (2L, 7L)),
         "pre-fence replay resurrected cleared state")
+      assert(usersStore(base).forall(!_._3), "no delete ran: no tombstone")
     } finally q.stop()
   }
 
@@ -1182,30 +1184,51 @@ class StreamingSpec extends AnyFunSuite {
       "only the two 31-min gaps open new sessions for user 1")
   }
 
+  /** Kafka wire bytes of raw events as table `public.users`: the
+    * streaming envelope, with the events at `truncates` turned into
+    * truncate envelopes and the envelopes `poison` selects cut 8 bytes
+    * short, so that their JSON can never close.
+    */
+  private def usersWire(events: org.apache.spark.sql.DataFrame,
+      truncates: Seq[Long] = Nil,
+      poison: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(false))
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, struct, to_json, when}
+    val env = graft.pipeline.Envelope.toCdcEventsStreaming(events).toDF()
+      .withColumn("op", when(col("lsn").isin(truncates: _*), "truncate").otherwise(col("op")))
+    env.select(col("key").cast("binary").as("k2"),
+        to_json(struct(env.columns.map(col): _*)).as("w"), poison.as("cut"))
+      .select(col("k2").as("key"),
+        when(col("cut"), expr("substring(w, 1, length(w) - 8)"))
+          .otherwise(col("w")).cast("binary").as("value"))
+  }
+
+  /** (user, state LSN, tombstone) of every row of the production store
+    * of table `public.users` under `base`. */
+  private def usersStore(base: String): Set[(Long, Long, Boolean)] = {
+    import org.apache.spark.sql.functions.{col, split}
+    ChangeLogStream.readState(spark, s"$base/state/public.users")
+      .select(split(col("key"), ":").getItem(1).cast("long"), col("state_lsn"),
+        col("tombstone"))
+      .as[(Long, Long, Boolean)].collect().toSet
+  }
+
   test("dead-letter tee: poisoned wire bytes land in the DLQ exactly once, never in state") {
     // C3's error path under a live streaming query: wire messages whose
     // lsn % 3 == 0 lose their last 8 bytes (the JSON object can never
-    // close, so the consumer decode MUST fail). The tee must (a) commit
-    // exactly the decodable remainder as state, (b) ledger exactly the
-    // poisoned originals with batch provenance, (c) stay idempotent
-    // when foreachBatch replays a batch after a crash.
-    import graft.pipeline.Envelope
-    import org.apache.spark.sql.functions.{col, expr, lit, struct, to_json, when}
+    // close, so the consumer decode MUST fail). The production sink must
+    // (a) commit exactly the decodable remainder as state, (b) ledger
+    // exactly the poisoned originals with batch provenance, (c) stay
+    // idempotent when foreachBatch replays a batch after a crash.
+    import org.apache.spark.sql.functions.col
     val base = java.nio.file.Files.createTempDirectory("graft_dlq").toString
-    val table = s"$base/state"
-    val dlq = s"$base/dlq"
-    def toWire(env: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      env.select(col("key").cast("binary").as("key"),
-          to_json(struct(env.columns.map(col): _*)).as("w"), col("lsn"))
-        .select(col("key"),
-          when(col("lsn") % 3 === 0, expr("substring(w, 1, length(w) - 8)"))
-            .otherwise(col("w")).cast("binary").as("value"))
+    val delayUs = 10L * 60 * 1000000
+    def wire(b: org.apache.spark.sql.DataFrame) = usersWire(b, poison = col("lsn") % 3 === 0)
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[RawEvent]
     val q = in.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        ChangeLogStream.deadLetterUpsertBatch(table, dlq)(
-          toWire(Envelope.toCdcEventsStreaming(batch).toDF()), id)
+        ChangeLogStream.fullProductionBatch(base, delayUs)(wire(batch), id)
         ()
       }
       .option("checkpointLocation", s"$base/ckpt")
@@ -1220,33 +1243,27 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
     // state: u1→lsn1 (its lsn-3 update died), u2→lsn4, u3→lsn5 (its
-    // lsn-6 delete died — a poisoned tombstone must NOT remove the key)
-    val state = spark.read.parquet(table)
-      .select($"key", $"lsn", $"op").as[(String, Long, String)]
-      .collect().toSet
-    assert(state === Set(
-      ("public.users:1", 1L, "insert"),
-      ("public.users:2", 4L, "update"),
-      ("public.users:3", 5L, "insert")))
+    // lsn-6 delete died — a poisoned delete must NOT remove the key,
+    // nor leave a tombstone)
+    val state = usersStore(base)
+    assert(state === Set((1L, 1L, false), (2L, 4L, false), (3L, 5L, false)))
     // ledger: exactly the two poisoned messages, keyed to their batch,
     // raw bytes preserved verbatim (truncated JSON never closes)
-    val dead = ChangeLogStream.readDeadLetters(spark, dlq)
+    def ledger() = spark.read.parquet(s"$base/dlq")
       .select($"batch_id".cast("long"), $"msg_key", $"raw_value")
       .as[(Long, String, String)].collect().sortBy(_._1)
+    val dead = ledger()
     assert(dead.map(d => (d._1, d._2)).toSeq ===
       Seq((0L, "public.users:1"), (1L, "public.users:3")))
     assert(dead.forall(d => !d._3.endsWith("}")),
       "raw_value must be the verbatim truncated bytes")
     // replay batch 1 (the crash-recovery path foreachBatch takes): the
     // per-batch overwrite must leave the ledger and state unchanged
-    val replay = toWire(Envelope.toCdcEventsStreaming(
-      spark.createDataset(second).toDF()).toDF())
-    ChangeLogStream.deadLetterUpsertBatch(table, dlq)(replay, 1L)
-    assert(ChangeLogStream.readDeadLetters(spark, dlq).count() === 2L,
+    ChangeLogStream.fullProductionBatch(base, delayUs)(
+      wire(spark.createDataset(second).toDF()), 1L)
+    assert(ledger().toSeq === dead.toSeq,
       "replaying a batch must not duplicate dead letters")
-    assert(spark.read.parquet(table)
-      .select($"key", $"lsn", $"op").as[(String, Long, String)]
-      .collect().toSet === state, "replay must not move state")
+    assert(usersStore(base) === state, "replay must not move state")
   }
 
   test("late-data tee: rows behind the recorded watermark are ledgered, split replay-stable") {
@@ -1256,15 +1273,12 @@ class StreamingSpec extends AnyFunSuite {
     // makes the split identical on replay even after the live watermark
     // has advanced.
     val base = java.nio.file.Files.createTempDirectory("graft_late").toString
-    val table = s"$base/state"
-    val lateDir = s"$base/late"
-    val wmDir = s"$base/wm"
     val delayUs = 10L * 60 * 1000000 // 10 minutes
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[RawEvent]
     val q = in.toDF().writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        ChangeLogStream.lateAwareUpsertBatch(table, lateDir, wmDir, delayUs)(b, id)
+        ChangeLogStream.fullProductionBatch(base, delayUs)(usersWire(b), id)
         ()
       }
       .option("checkpointLocation", s"$base/ckpt")
@@ -1280,114 +1294,23 @@ class StreamingSpec extends AnyFunSuite {
       in.addData(batch2: _*)
       q.processAllAvailable()
     } finally q.stop()
-    val state = spark.read.parquet(table)
-      .select($"key", $"lsn", $"op").as[(String, Long, String)]
-      .collect().toSet
+    val state = usersStore(base)
     assert(state === Set(
-      ("public.users:1", 1L, "insert"), // its 00:45 update was late
-      ("public.users:2", 4L, "update"),
-      ("public.users:3", 5L, "insert")), s"got $state")
-    def lateIds() = spark.read.parquet(lateDir)
-      .select($"batch_id".cast("long"), $"event_id")
+      (1L, 1L, false), // its 00:45 update was late
+      (2L, 4L, false),
+      (3L, 5L, false)), s"got $state")
+    def lateIds() = spark.read.parquet(s"$base/late")
+      .select($"batch_id".cast("long"), $"lsn")
       .as[(Long, Long)].collect().toSet
     assert(lateIds() === Set((1L, 3L)))
     // replay batch 1 AFTER the live mark advanced to 02:00: the split
     // must still use the recorded wm-0 (01:00) — identical ledger, no
     // extra rows reclassified late, state unmoved
-    ChangeLogStream.lateAwareUpsertBatch(table, lateDir, wmDir, delayUs)(
-      spark.createDataset(batch2).toDF(), 1L)
+    ChangeLogStream.fullProductionBatch(base, delayUs)(
+      usersWire(spark.createDataset(batch2).toDF()), 1L)
     assert(lateIds() === Set((1L, 3L)),
       "replay must reproduce the same late set from the recorded mark")
-    assert(spark.read.parquet(table)
-      .select($"key", $"lsn", $"op").as[(String, Long, String)]
-      .collect().toSet === state, "replay must not move state")
-  }
-
-  test("full consumer topology: dead + late + routed logged upserts conserve every message") {
-    // the reference's whole consumer as one streaming query, with its
-    // two log-and-drop error paths made durable: wire bytes whose JSON
-    // cannot decode (lsn % 5 == 0 loses 8 tail bytes) → dead ledger;
-    // decodable rows behind the recorded watermark → late ledger; the
-    // remainder demuxes to per-table bucketed stores with one progress
-    // record per (table, batch). Restart mid-stream on one checkpoint.
-    // CONSERVATION: every input message is in exactly one of the three.
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.functions.{col, concat, expr, lit, pmod, split, struct, to_json, when}
-    import graft.pipeline.Envelope
-    val base = java.nio.file.Files.createTempDirectory("graft_fullcons").toString
-    val (inDir, ckpt) = (s"$base/in", s"$base/ckpt")
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    def routed(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val env = Envelope.toCdcEventsStreaming(events).toDF()
-      val uid = split(col("key"), ":").getItem(1).cast("long")
-      env.withColumn("tableName", concat(lit("t"), pmod(uid, lit(3))))
-        .withColumn("key", concat(lit("public."), col("tableName"), lit(":"), uid))
-    }
-    def toWire(env: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      env.select(col("key").cast("binary").as("k2"),
-          to_json(struct(env.columns.map(col): _*)).as("w"), col("lsn"))
-        .select(col("k2").as("key"),
-          when(col("lsn") % 5 === 0, expr("substring(w, 1, length(w) - 8)"))
-            .otherwise(col("w")).cast("binary").as("value"))
-    def writeFiles(rows: Seq[org.apache.spark.sql.Row]): Unit =
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
-        .coalesce(1).write.mode("append").parquet(inDir)
-    def run(): Unit = {
-      val q = spark.readStream.schema(schema).parquet(inDir)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          ChangeLogStream.fullConsumerBatch(base, 10L * 60 * 1000000)(
-            toWire(routed(b)), id)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    def row(id: Long, minute: Int, typ: String) =
-      org.apache.spark.sql.Row(id, ts(minute), id % 6, typ, id * 1.0, "{}")
-    val types = Seq("signup", "click", "view", "error")
-    // batch 0: ids 1..12 at minutes 11..22 → recorded mark = 22:00
-    val first = (1 to 12).map(i => row(i.toLong, 10 + i, types(i % 4)))
-    // batch 1: horizon 22:00 − 10 min = 12:00; id 21 (minute 5) is
-    // LATE; ids 15, 20, 25 are DEAD (decode precedes admission — 25's
-    // minute-40 timestamp never reaches the late tee)
-    val second = (13 to 20).map(i => row(i.toLong, 30 + i, types(i % 4))) ++
-      Seq(row(21L, 5, "click"), row(25L, 40, "signup"))
-    writeFiles(first); run()
-    writeFiles(second); run() // RESTART: new query, same checkpoint
-    val deadKeys = spark.read.parquet(s"$base/dlq")
-      .select($"msg_key").as[String].collect().toSet
-    val lateLsns = spark.read.parquet(s"$base/late")
-      .select($"lsn").as[Long].collect().toSet
-    assert(lateLsns === Set(21L))
-    assert(deadKeys.size === 5, s"ids 5,10,15,20,25 must be dead: $deadKeys")
-    // per-table state == batch latest-state over exactly the admitted set
-    val appliedIds = ((1 to 20).toSet -- Set(5, 10, 15, 20)).map(_.toLong)
-    val fullLog = spark.createDataFrame(
-      spark.sparkContext.parallelize(first ++ second), schema)
-    val expect = graft.pipeline.ChangeLog
-      .latestState(routed(fullLog)
-        .filter(col("lsn").isInCollection(appliedIds) && col("lsn") =!= 21L),
-        Seq("key"), "lsn")
-      .select($"tableName", $"key", $"lsn", $"op")
-      .as[(String, String, Long, String)].collect()
-      .groupBy(_._1).map { case (t, rs) => t -> rs.map(r => (r._2, r._3, r._4)).toSet }
-    for (t <- expect.keys.toSeq.sorted) {
-      val store = spark.read.parquet(s"$base/state/public.$t")
-        .select($"key", $"lsn", $"op").as[(String, Long, String)].collect().toSet
-      assert(store === expect(t), s"table $t drifted from batch reference")
-    }
-    // conservation: input = dead + late + Σ per-table logged rows
-    val logged = graft.ops.LogSink.read(spark, s"$base/log")
-      .collect().map(_.nRows).sum
-    val nInput = (first ++ second).size.toLong
-    assert(nInput === deadKeys.size + lateLsns.size + logged,
-      s"conservation broke: $nInput != ${deadKeys.size} + ${lateLsns.size} + $logged")
+    assert(usersStore(base) === state, "replay must not move state")
   }
 
   // ---- the production-topology wire fixture ----
@@ -1427,15 +1350,26 @@ class StreamingSpec extends AnyFunSuite {
           .otherwise(col("w")).cast("binary").as("value"))
   }
 
-  /** One wire batch of `n` events from LSN `from`, minutes ascending,
-    * over `tables` tables: inserts, TOAST-marked updates and deletes. */
-  private def prodBatch(from: Long, n: Int, tables: Int): org.apache.spark.sql.DataFrame = {
+  /** The envelopes of [[prodBatch]], before the wire. */
+  private def prodEnv(from: Long, n: Int, tables: Int): org.apache.spark.sql.DataFrame = {
     val types = Seq("signup", "click", "view", "error")
     val rows = (from until from + n).map(i =>
       prodRow(i, 20 + (i % 1000).toInt / 10, i % 11, types((i % 4).toInt),
         i * 1.0, s"""{"k":"${i % 9}"}"""))
-    prodWire(prodRouted(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows), prodSchema), tables))
+    prodRouted(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows), prodSchema), tables)
+  }
+
+  /** One wire batch of `n` events from LSN `from`, minutes ascending,
+    * over `tables` tables: inserts, TOAST-marked updates and deletes. */
+  private def prodBatch(from: Long, n: Int, tables: Int): org.apache.spark.sql.DataFrame =
+    prodWire(prodEnv(from, n, tables))
+
+  /** `env` with the envelope at `lsn` turned into a truncate of its table. */
+  private def truncateAt(env: org.apache.spark.sql.DataFrame,
+      lsn: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, when}
+    env.withColumn("op", when(col("lsn") === lsn, "truncate").otherwise(col("op")))
   }
 
   /** (dead, late, Σ logged rows) of a production topology under `base`. */
@@ -1560,6 +1494,80 @@ class StreamingSpec extends AnyFunSuite {
       info(s"warm batch $b: $jobs jobs")
       assert(jobs <= 16, s"warm batch $b ran $jobs jobs")
     }
+    // a truncate of t0 (LSN 701, user 8) rides the demux aggregate: the
+    // fence clears t0 with file-system calls and adds no job
+    val truncating = prodWire(truncateAt(prodEnv(601L, 200, 2), 701L))
+    val jobs = SparkJobs.during(spark)(sink(truncating, 3L))
+    info(s"warm batch 3 with a truncate: $jobs jobs")
+    assert(jobs <= 16, s"warm batch 3 with a truncate ran $jobs jobs")
+  }
+
+  test("production topology: a truncate clears its table only and fences stale replays, also through Topology.run") {
+    // batch 1 (LSNs 61-120) carries a TRUNCATE of t0 at LSN 114. t0 must
+    // keep only its batch-1 events above 114 — users 6, 8 and 10, so
+    // users 0, 2 and 4 are cleared — and t1 must not move: the store
+    // must equal a run that never saw t0's events at or below 114. A
+    // replay of batch 1 changes nothing; a stale replay of t0's
+    // pre-truncate history (batch 2) resurrects nothing.
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.Topology
+    val delayUs = 60L * 60 * 1000000 // nothing is late: every stale row meets the fence
+    val fence = 114L // user 114 % 11 = 4 → t0; 114 % 7 != 0, so it decodes
+    val (env0, env1) = (prodEnv(1L, 60, 2), prodEnv(61L, 60, 2))
+    val t0 = col("tableName") === "t0"
+    val batches = Seq(prodWire(env0), prodWire(truncateAt(env1, fence)), prodWire(env0.filter(t0)))
+      .map(_.persist())
+    val consumed = batches.map(_.count()).scan(0L)(_ + _).tail
+    val base = java.nio.file.Files.createTempDirectory("graft_prodtrunc").toString
+    val sink = ChangeLogStream.fullProductionBatch(base, delayUs) _
+    sink(batches(0), 0L)
+    assert(prodStore(base).exists(r => r._1 == "t0" && r._3 < fence),
+      "fixture: batch 0 must leave t0 rows below the fence")
+    sink(batches(1), 1L)
+    val (ledger1, store1) = (prodLedgers(base), prodStore(base))
+    val ref = java.nio.file.Files.createTempDirectory("graft_prodtruncref").toString
+    ChangeLogStream.fullProductionBatch(ref, delayUs)(prodWire(env0.filter(!t0)), 0L)
+    ChangeLogStream.fullProductionBatch(ref, delayUs)(
+      prodWire(env1.filter(!t0 || col("lsn") > fence)), 1L)
+    assert(store1 === prodStore(ref), "the truncate must clear t0 up to its LSN, and only t0")
+    // by value: t0 holds exactly the keys of its decodable post-fence
+    // events, all live
+    val postFence = env1.filter(t0 && col("lsn") > fence && col("lsn") % 7 =!= 0)
+      .select("key").as[String].collect().toSet
+    assert(postFence.size === 3, s"fixture: $postFence")
+    assert(store1.filter(_._1 == "t0").map(r => (r._2, r._3 > fence, r._5)) ===
+      postFence.map(k => (k, true, false)), s"t0 must hold only post-fence rows: $store1")
+    // conservation, with the truncate counted as a logged row
+    val (dead, late, logged) = ledger1
+    assert(consumed(1) === dead + late + logged, s"conservation: ${consumed(1)} != $ledger1")
+    sink(batches(1), 1L) // replay under the same id
+    assert(prodLedgers(base) === ledger1, "replay must not move the ledgers")
+    assert(prodStore(base) === store1, "replay must not move the store")
+    sink(batches(2), 2L)
+    assert(prodStore(base) === store1, "a stale replay of pre-truncate history resurrected state")
+    val (dead2, late2, logged2) = prodLedgers(base)
+    assert(consumed(2) === dead2 + late2 + logged2, s"conservation: ${consumed(2)} != ${prodLedgers(base)}")
+
+    // the same feed through the config-driven topology: one checkpoint,
+    // a restart per batch file
+    val topo = java.nio.file.Files.createTempDirectory("graft_prodtrunctopo").toString
+    val cfg = Topology.Config(s"$topo/feed",
+      graft.pipeline.Publication.Spec("p", Seq("public.t0", "public.t1")),
+      s"$topo/sink", s"$topo/ckpt", delayUs, 4)
+    val want = store1.groupBy(_._1).map { case (t, rs) =>
+      s"public.$t" -> Topology.TableState(s"public.$t", rs.count(!_._5), rs.count(_._5)) }
+    for (b <- batches.indices) {
+      batches(b).coalesce(1).write.mode("append").parquet(cfg.feedDir)
+      Topology.run(spark, cfg)
+      val c = Topology.census(spark, cfg)
+      assert(c.consumed === consumed(b) && c.conserved, s"batch $b: $c")
+      if (b > 0) {
+        assert(c.states.map(s => s.table -> s).toMap === want, s"batch $b: $c")
+        assert(c.states.head === Topology.TableState("public.t0", postFence.size, 0L),
+          s"batch $b: t0 must count only post-fence keys: $c")
+      }
+    }
+    batches.foreach(_.unpersist())
   }
 
   test("full PRODUCTION topology: routing + carry-forward + retention + late tee + dead letter, one checkpoint, restart") {

@@ -134,7 +134,7 @@ class ToastSpec extends AnyFunSuite {
     // bucket's stored state, not from anything in the batch
     val dir = java.nio.file.Files
       .createTempDirectory("graft_cfsink").toString + "/state"
-    val sink = streaming.ChangeLogStream.carryForwardUpsertBatch(dir, 4) _
+    val sink = streaming.ChangeLogStream.carryForwardRetentionUpsertBatch(dir, 4) _
     sink(spark.createDataset(Seq(
       ev("insert", 1, 7, Map("user_id" -> "7", "value" -> "10", "k" -> "a"), null)
     )).toDF(), 0L)
@@ -146,7 +146,7 @@ class ToastSpec extends AnyFunSuite {
       val hasBuckets = Option(new java.io.File(dir).list())
         .getOrElse(Array.empty[String]).exists(_.startsWith("__bucket="))
       if (!hasBuckets) Map.empty
-      else streaming.ChangeLogStream.readState(spark, dir)
+      else streaming.ChangeLogStream.readState(spark, dir).filter(!col("tombstone"))
         .select(col("key"), col("state_lsn"), col("state"))
         .as[(String, Long, Map[String, String])].collect()
         .map(r => r._1 -> (r._2, r._3)).toMap
@@ -159,7 +159,7 @@ class ToastSpec extends AnyFunSuite {
       ev("update", 2, 7, Map("user_id" -> "7", "value" -> "20", "k" -> null), Seq("k"))
     )).toDF(), 2L)
     assert(state()("public.users:7")._2("k") === "a")
-    // delete removes the key from its bucket outright
+    // after a delete the key has no live row (a tombstone at most)
     sink(spark.createDataset(Seq(ev("delete", 3, 7, Map.empty, null))).toDF(), 3L)
     assert(state().isEmpty)
   }
@@ -201,7 +201,7 @@ class ToastSpec extends AnyFunSuite {
       val events = log.result()
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_cfprop_$sample").toString + "/state"
-      val sink = streaming.ChangeLogStream.carryForwardUpsertBatch(dir, 3) _
+      val sink = streaming.ChangeLogStream.carryForwardRetentionUpsertBatch(dir, 3) _
       // random contiguous batch splits, occasional same-batch replay
       val cuts = (Seq(0, events.length) ++
         Seq.fill(rnd.nextInt(3))(rnd.nextInt(events.length + 1)))
@@ -213,7 +213,7 @@ class ToastSpec extends AnyFunSuite {
           sink(df, id); id += 1
           if (rnd.nextInt(3) == 0) { sink(df, id); id += 1 }
         }
-      val got = streaming.ChangeLogStream.readState(spark, dir)
+      val got = streaming.ChangeLogStream.readState(spark, dir).filter(!col("tombstone"))
         .select(col("key"), col("state"))
         .as[(String, Map[String, String])].collect().toMap
       val want = st.map { case (u, m) => s"public.users:$u" -> m }

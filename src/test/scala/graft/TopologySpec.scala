@@ -97,7 +97,13 @@ class TopologySpec extends AnyFunSuite {
       row(32, 23, 5, "click", 32.0))  // t2 → pruned, never consumed
     writeFeed(second)
     Topology.run(spark, cfg) // new query object, same checkpoint
-    val c2 = Topology.census(spark, cfg)
+    var c2: Topology.Census = null
+    val censusJobs = SparkJobs.during(spark) { c2 = Topology.census(spark, cfg) }
+    // every read has its schema, so no read infers one with a job: one
+    // collect of the log, and one count each of the dead ledger, the late
+    // ledger, the feed and the two table stores — two jobs per count
+    // under AQE, its map stage and its result
+    assert(censusJobs === 11, s"the census ran $censusJobs jobs")
     assert(c2.consumed === 8, s"cumulative consumed: $c2")
     assert(c2.dead === 1 && c2.late === 1, s"dead/late census: $c2")
     assert(c2.conserved, s"conservation broke after restart: $c2")
