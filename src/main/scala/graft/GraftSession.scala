@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftExtensions
 import graft.sources.Tables
 
 /** User-facing entry point: everything a reference user needs to switch.
   *
   * `GraftSession.attach(spark, sfDir)` registers the corpus tables as
-  * temp views plus graft's native functions, after which both the raw
+  * temp views and installs graft's session set-up (native functions,
+  * top-k strategy, rank-limit rewrite), after which both the raw
   * SQL surface (`spark.sql("SELECT cosine_sim(...) FROM embeddings")`)
   * and the named query library (`SparkEntry.queries`) are available on
   * the caller's own session — graft never owns the SparkSession, so it
@@ -20,7 +21,8 @@ object GraftSession {
     "supplier", "part", "orders", "lineitem", "events", "documents",
     "embeddings")
 
-  /** Register views + functions on an existing session. Idempotent.
+  /** Register views on an existing session and install graft's set-up
+    * there ([[GraftExtensions.install]]). Idempotent.
     * `events` goes through its dedicated loader (TIMESTAMP(NANOS)
     * normalization) — the raw reader rejects that parquet type.
     * Pass `only` to register a subset — each registration eagerly reads
@@ -28,7 +30,7 @@ object GraftSession {
     */
   def attach(spark: SparkSession, sfDir: String,
       only: Seq[String] = tableNames): SparkSession = {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     only.foreach { t =>
       val df = if (t == "events") Tables.events(spark, sfDir)
                else Tables.table(spark, sfDir, t)

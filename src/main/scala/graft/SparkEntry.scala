@@ -43,9 +43,13 @@ object SparkEntry {
     else fam
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 + north-star ops. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    pipeline.CdcQueries.queries ++
+  /** One entry per implemented operator from SURVEY.md §2 + north-star ops.
+    * Each function installs graft's session set-up before it builds its
+    * plan, so a query plans the same on any session, whatever ran there
+    * before; the module maps and their helpers install nothing.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (pipeline.CdcQueries.queries ++
       operators.Relational.queries ++
       operators.RelationalExt.queries ++
       operators.RelationalExt2.queries ++
@@ -60,7 +64,12 @@ object SparkEntry {
       operators.Layout.queries ++
       operators.TextAnalysis.queries ++
       operators.Curation.queries ++
-      multimodal.Multimodal.queries
+      multimodal.Multimodal.queries).map { case (name, fn) =>
+      name -> ((s: SparkSession, d: String) => {
+        functions.GraftExtensions.install(s)
+        fn(s, d)
+      })
+    }
 
   /** DuckDB-runnable oracle SQL per query (same parquet tables). */
   def oracleSql: Map[String, String] =

@@ -224,7 +224,6 @@ object Curation {
     // thinning) and text_source_temperature (weight curve): the cap is
     // the hard-ceiling variant every web-crawl pipeline also needs.
     "text_domain_cap" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
       import org.apache.spark.sql.expressions.Window
       val hv = conv(substring(
         md5(concat(lit("cap|"), col("doc_id").cast("string"))), 1, 8), 16, 10)

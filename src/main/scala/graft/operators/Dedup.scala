@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, VectorOps}
+import graft.functions.{GraftExtensions, GraftFunctions, VectorOps}
 import graft.sources.Tables
 
 /** Training-data deduplication over `documents` / `embeddings` — the
@@ -144,6 +144,7 @@ object Dedup {
     * (doc_a: corpus id, doc_b: batch id, jaccard).
     */
   def incrementalMatches(corpus: DataFrame, batchDocs: DataFrame): DataFrame = {
+    GraftExtensions.install(corpus.sparkSession)
     val corpusSh = corpus.filter(size(words) >= 3)
       .select(col("doc_id"), shingleCol(3).as("sh"))
     val batchSh = batchDocs.filter(size(words) >= 3)
@@ -181,7 +182,6 @@ object Dedup {
     * corpus testing; the named query runs it on the documents table.
     */
   private[graft] def containmentPairs(sh: DataFrame): DataFrame = {
-    GraftFunctions.register(sh.sparkSession)
     val posting = sh.select(col("doc_id"), explode(col("sh")).as("g"))
     val rare = posting.groupBy("g")
       .agg(count(lit(1)).as("df"))
@@ -211,7 +211,6 @@ object Dedup {
 
   /** Verify candidate pairs against true jaccard of full shingle sets. */
   private def verifyPairs(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
-    GraftFunctions.register(cand.sparkSession)
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
@@ -335,7 +334,6 @@ object Dedup {
     // engines); argmax per fingerprint is the row_number → TopKPerKey
     // form — per-partition 1-row heaps, no sort, O(distinct) exchange.
     "dedup_exact_keep_best" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("fingerprint")
         .orderBy(col("quality_score").desc, col("doc_id"))
@@ -374,7 +372,6 @@ object Dedup {
     // O(MINHASH_SEEDS+1) rows; double means re-quantize through the
     // 2^30 grid so partial-agg order can't shift a bit.
     "dedup_minhash_error" -> ((s, d) => {
-      GraftFunctions.register(s)
       val Q = 1073741824.0 // 2^30
       val sh = docShingles(s, d)
       val m1 = md5(col("g"))
@@ -432,7 +429,6 @@ object Dedup {
     // both engines, and the error sum is floor-quantized at 2³⁰ (the
     // family convention) so the aggregation order cannot matter.
     "dedup_minhash_bbit" -> ((s, d) => {
-      GraftFunctions.register(s)
       val Q = 1073741824.0 // 2^30
       val sh = docShingles(s, d)
       val m1 = md5(col("g"))
@@ -710,7 +706,6 @@ object Dedup {
     // the 1-row-heap TopKPerKey form (no sort of the corpus), and the
     // quality join is co-keyed on doc_id.
     "dedup_keep_canonical" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
       val clusters = queries("dedup_clusters")(s, d)
       val scored = Tables.documents(s, d)
         .select(col("doc_id"), TextAnalysis.qualityScore.as("quality_score"))
@@ -812,7 +807,6 @@ object Dedup {
     // baseline below is its oracle-of-intent). Only same-bucket pairs
     // are scored: O(pairs-in-bucket), hash-partitionable at any scale.
     "dedup_embedding_lsh" -> ((s, d) => {
-      GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .transform(Tables.spread(_, col("vec_id")))
         .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("e"))
@@ -959,7 +953,6 @@ object Dedup {
     // Embedding near-dup: brute-force cosine over all pairs (test-scale
     // baseline; blocked variants live in Similarity as the scale path).
     "dedup_embedding_cosine" -> ((s, d) => {
-      GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .transform(Tables.spread(_, col("vec_id")))
         .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("e"))

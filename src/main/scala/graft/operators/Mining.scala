@@ -280,7 +280,6 @@ object Mining {
     // event_type) structs makes assembly order canonical under any
     // shard order — same trick as basket_part_pairs.
     "events_top_paths" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
       val w = Window.partitionBy("user_id").orderBy("event_id")
       val prefix = Tables.eventsShared(s, d)
         .select(col("user_id"), col("event_id"), col("event_type"))

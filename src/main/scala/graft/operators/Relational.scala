@@ -316,7 +316,6 @@ object Relational {
     // driver's oracle check therefore verifies the rewrite end-to-end).
     "window_rank_orders" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.TopK.installedWithRewrite(s)
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       Tables.ordersShared(s, d)

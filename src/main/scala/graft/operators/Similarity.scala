@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, VectorOps}
+import graft.functions.{GraftExtensions, GraftFunctions, VectorOps}
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -139,7 +139,6 @@ object Similarity {
     * directly, so the blend cannot drift between consumers.
     */
   private def labeledEmb(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     if (d.endsWith(CLUSTERED_SFX)) {
       val ev = Tables.embeddings(s, d.stripSuffix(CLUSTERED_SFX))
         .transform(Tables.spread(_, col("vec_id")))
@@ -307,8 +306,6 @@ object Similarity {
   private def pqTrainedSeq(s: SparkSession, d: String): Seq[(Int, Long, Seq[Double])] =
     graft.CachePool.shared(s, d, "ann_pq_trained") {
       import s.implicits._
-      graft.plans.TopK.installedWithRewrite(s)
-      GraftFunctions.register(s)
       val corpus = corpusDf(s, d)
       val stride = math.max(1L,
         math.ceil(corpus.count().toDouble / PQ_K).toLong)
@@ -361,7 +358,6 @@ object Similarity {
   private def lloydRefine(s: SparkSession, assignInput: DataFrame,
                           seeds: DataFrame): Seq[(Long, Seq[Double])] = {
     import s.implicits._
-    graft.plans.TopK.installedWithRewrite(s)
     var cents = seeds
     for (_ <- 1 to REFINE_ITERS) {
       val wA = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
@@ -447,8 +443,6 @@ object Similarity {
     */
   private def ivfadcScored(s: SparkSession, d: String): DataFrame =
     graft.CachePool.shared(s, d, "ann_adc_scored") {
-      graft.plans.TopK.installedWithRewrite(s)
-      GraftFunctions.register(s)
       val cents = centroidsDf(s, d)
       def l2(a: Column, b: Column) = GraftFunctions.l2DistSq(a, b)
       // PQ-encode the corpus: nearest TRAINED codeword per (vector,
@@ -599,6 +593,7 @@ object Similarity {
     * sets are O(k·d) collected values by construction).
     */
   def assignToCells(vectors: DataFrame, cents: DataFrame): DataFrame = {
+    GraftExtensions.install(vectors.sparkSession)
     require(!cents.isEmpty,
       "assignToCells: empty centroid set — every vector would silently " +
         "drop out of the assignment join; train or seed centroids first")
@@ -612,7 +607,6 @@ object Similarity {
     */
   private def assignToCellsUnchecked(vectors: DataFrame, cents: DataFrame)
       : DataFrame = {
-    GraftFunctions.register(vectors.sparkSession)
     val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
     vectors.join(broadcast(cents))
       .withColumn("ccos", cos(col("e"), col("ce")))
@@ -647,7 +641,6 @@ object Similarity {
     * centroids a parameter, for the incremental arms.
     */
   private def probeAssign(vectors: DataFrame, cents: DataFrame): DataFrame = {
-    graft.plans.TopK.installedWithRewrite(vectors.sparkSession)
     val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
     vectors.join(broadcast(cents))
       .withColumn("ccos", cos(col("e"), col("ce")))
@@ -684,7 +677,6 @@ object Similarity {
     * primary-membership pass.
     */
   private def semdedupAssign(s: SparkSession, d: String): DataFrame = {
-    graft.plans.TopK.installedWithRewrite(s)
     val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
     emb(s, d)
       .join(broadcast(centroidsDf(s, d)))
@@ -715,7 +707,6 @@ object Similarity {
     // written as the window formulation; RankLimitRewrite turns it into
     // the two-phase TopKPerKey operator (map-side k-heaps prune before
     // the exchange; the Window above only re-derives rn over ≤ k rows)
-    graft.plans.TopK.installedWithRewrite(scored.sparkSession)
     val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= TOP_K)
@@ -845,7 +836,6 @@ object Similarity {
       .groupBy("src", "dst").agg(max("sim").as("sim"))
 
   private def graphEdgesSym(s: SparkSession, d: String): DataFrame = {
-    graft.plans.TopK.installedWithRewrite(s)
     val sd = semdedupAssign(s, d).filter(col("vec_id") >= N_QUERIES)
     symmetrize(topGEdges(sd, sd))
       .transform(graft.CachePool.persist) // every hop of every search reads it
@@ -1021,6 +1011,7 @@ object Similarity {
     */
   def appendGraphEdges(batch: DataFrame, standingAssign: DataFrame,
                        cents: DataFrame): (DataFrame, DataFrame) = {
+    GraftExtensions.install(batch.sparkSession)
     val bAssign = probeAssign(batch, cents)
     val bTop = topGEdges(bAssign, standingAssign.unionByName(bAssign))
     (bTop.unionByName(bTop.select(col("dst").as("src"),
@@ -1101,8 +1092,6 @@ object Similarity {
       : (DataFrame, DataFrame) = {
     graft.CachePool.shared(s, d,
         s"ann_graph_search/${beams.mkString(",")}/$tag") {
-      graft.plans.TopK.installedWithRewrite(s)
-      GraftFunctions.register(s)
       val edges = edgesFn()
       val corpus = corpusDf(s, d)
       val qs = queriesDf(s, d)
@@ -1214,8 +1203,6 @@ object Similarity {
                                  beams: Seq[Int]): (DataFrame, DataFrame) =
     graft.CachePool.shared(s, d,
       s"ann_graph_search/${beams.mkString(",")}/layered") {
-        graft.plans.TopK.installedWithRewrite(s)
-        GraftFunctions.register(s)
         val corpus = corpusDf(s, d)
         val qs = queriesDf(s, d)
         val mid = graphMidStride(s, d)
@@ -1340,8 +1327,6 @@ object Similarity {
     // the corpus never shuffles; ranks fold in fixed element order so
     // both engines agree exactly.
     "ann_dim_truncation" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
-      GraftFunctions.register(s)
       val q = queriesDf(s, d)
       val c = corpusDf(s, d)
       val full = topK(c.join(broadcast(q))
@@ -1374,8 +1359,6 @@ object Similarity {
     // label inequality pushed below the score; the TopK heap keeps K
     // rows per query before any exchange.
     "ann_hard_negatives" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
-      GraftFunctions.register(s)
       val ev = Tables.embeddings(s, d)
       val q = ev.filter(col("vec_id") < N_QUERIES)
         .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -1397,12 +1380,10 @@ object Similarity {
     "ann_ivf_topk" -> ((s, d) => {
       val cents = centroidsDf(s, d)
       // assignment pass: nearest centroid per corpus vector. Written as
-      // the row_number formulation — RankLimitRewrite (installed by
-      // topK below, same session) turns the arn=1 filter into the
-      // two-phase TopKPerKey operator: per-partition 1-row heaps, no
-      // sort anywhere. (A max_by over the array column would fall back
+      // the row_number formulation — RankLimitRewrite turns the arn=1
+      // filter into the two-phase TopKPerKey operator: per-partition
+      // 1-row heaps, no sort anywhere. (A max_by over the array column would fall back
       // to SortAggregate: immutable aggregation buffers can't hash.)
-      graft.plans.TopK.installedWithRewrite(s)
       val wAssign = Window.partitionBy("vec_id")
         .orderBy(col("ccos").desc, col("cent_id"))
       val assign = corpusDf(s, d)
@@ -1506,7 +1487,6 @@ object Similarity {
     // k·queries rows, and the label lookup broadcasts the tiny top-k
     // side into the corpus scan.
     "ann_knn_classify" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
       val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
       val topk = queries("ann_cosine_topk")(s, d).select("q_id", "vec_id")
       val votes = labels.join(broadcast(topk), "vec_id")
@@ -1578,7 +1558,6 @@ object Similarity {
 
     "ann_label_centroids" -> ((s, d) => {
       import s.implicits._
-      GraftFunctions.register(s)
       val Q = 1073741824.0 // 2^30
       val base = Tables.embeddings(s, d)
         .select(col("label"), VectorOps.asDouble(col("embedding")).as("e"))
@@ -1613,7 +1592,6 @@ object Similarity {
     // integer grid (order-independent sums), max over exact doubles.
     // Per-row work only + one hash agg — scan-scales at any corpus.
     "ann_int8_error" -> ((s, d) => {
-      GraftFunctions.register(s)
       val Q = 1099511627776.0 // 2^40
       val scaled = Tables.embeddings(s, d)
         .select(col("label"), VectorOps.asDouble(col("embedding")).as("e"))
@@ -1645,7 +1623,6 @@ object Similarity {
     // would SortAggregate) with each L2² folded in fixed element order,
     // engine-identical; error means re-quantize through the 2^30 grid.
     "ann_pq_error" -> ((s, d) => {
-      GraftFunctions.register(s)
       val Q = 1073741824.0 // 2^30
       val codebook = pqCodebookDf(s, d)
       val base = Tables.embeddings(s, d)
@@ -1678,7 +1655,6 @@ object Similarity {
     // real codebook training on this corpus. Corpus-only on both axes
     // (codebooks are trained on the corpus; queries are workload).
     "ann_pq_trained_error" -> ((s, d) => {
-      GraftFunctions.register(s)
       val Q = 1073741824.0 // 2^30
       val codebook = pqTrainedDf(s, d)
       def l2(a: Column, b: Column) = GraftFunctions.l2DistSq(a, b)
@@ -1723,7 +1699,6 @@ object Similarity {
     // here via the HOF), codebooks stay O(M·labels) broadcasts, and
     // no shuffle appears beyond the four grid-mean aggregations.
     "ann_opq_rotation" -> ((s, d) => {
-      GraftFunctions.register(s)
       val Q = 1073741824.0 // 2^30
       def l2(a: Column, b: Column) = GraftFunctions.l2DistSq(a, b)
       val rot = expr(
@@ -2027,7 +2002,6 @@ object Similarity {
     // the hub-overload worry shows up as edge volume, not lost recall,
     // which is what the per-arm edge/candidate columns are for.
     "ann_incremental_graph" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
       val exact = topK(corpusDf(s, d).join(broadcast(queriesDf(s, d)))
           .withColumn("cosine", cos(col("qe"), col("e"))))
         .select("q_id", "vec_id")
@@ -2424,7 +2398,6 @@ object Similarity {
     // than ann_ivf_topk itself — this is the cheap experiment you run
     // BEFORE fixing nprobe fleet-wide.
     "ann_ivf_probe_curve" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
       val cents = centroidsDf(s, d)
       val wAssign = Window.partitionBy("vec_id")
         .orderBy(col("ccos").desc, col("cent_id"))
@@ -2545,8 +2518,6 @@ object Similarity {
     // checkpointed per round (it appears twice in the next round's
     // tree — the plan-doubling gotcha).
     "search_mmr_rerank" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s)
-      GraftFunctions.register(s)
       val wS = Window.partitionBy("q_id").orderBy(col("rel").desc, col("vec_id"))
       val short = corpusDf(s, d).join(broadcast(queriesDf(s, d)))
         .withColumn("rel", cos(col("qe"), col("e")))

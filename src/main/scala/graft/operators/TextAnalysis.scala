@@ -778,7 +778,6 @@ object TextAnalysis {
 
     "text_tfidf" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.TopK.installedWithRewrite(s)
       val docs = docsPar(s, d)
       // scalar N (the oracle's COUNT(*) subquery) joined in as a
       // single-row broadcast on a constant key — a BroadcastHashJoin,

@@ -689,7 +689,6 @@ object CdcQueries {
     // broadcast. This is the GC policy that stops a delete-heavy
     // changelog from growing tombstones forever at 100 TB.
     "cdc_tombstone_gc" -> ((s, d) => {
-      graft.plans.TopK.installedWithRewrite(s) // rn=1 → per-key 1-row heaps
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("event_id").desc)
       val latest = Tables.eventsShared(s, d)

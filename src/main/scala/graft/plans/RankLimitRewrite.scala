@@ -69,8 +69,9 @@ object RankLimitRewrite extends Rule[LogicalPlan] with PredicateHelper {
       if (ks.isEmpty || ks.exists(_ < 1) || residual.exists(_.references.contains(rn))) {
         f // not a pure top-k filter on rn — leave it alone
       } else {
-        // if Spark's InferWindowGroupLimit already ran (when this rule is
-        // registered late via experimental.extraOptimizations), its
+        // if Spark's InferWindowGroupLimit already ran (it has when
+        // GraftExtensions.install added this rule, which then runs in the
+        // optimizer's last batch; the extension class runs it earlier), its
         // pruning node is subsumed by the top-k operator — strip it, but
         // ONLY when it provably prunes less than (or exactly) what top-k
         // keeps: same partition/order spec, row_number semantics, and a

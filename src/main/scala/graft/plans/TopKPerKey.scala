@@ -196,23 +196,12 @@ object TopKStrategy extends SparkStrategy {
   }
 }
 
-/** User API: `TopK.perKey(df, Seq("key"), Seq($"x".desc, $"id".asc), 5)`. */
+/** User API: `TopK.perKey(df, Seq("key"), Seq($"x".desc, $"id".asc), 5)`.
+  * Its logical node plans only under [[TopKStrategy]], so `perKey`
+  * installs graft's session set-up itself: the CDC merge reaches it
+  * without any query entry point.
+  */
 object TopK {
-
-  def installed(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-
-  /** Also enable the automatic row_number-filter → top-k rewrite
-    * ([[RankLimitRewrite]]) on an imperatively-built session. Idempotent.
-    */
-  def installedWithRewrite(spark: org.apache.spark.sql.SparkSession): Unit = {
-    installed(spark)
-    if (!spark.experimental.extraOptimizations.contains(RankLimitRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RankLimitRewrite
-  }
 
   def perKey(df: DataFrame, keyCols: Seq[String], orderSpec: Seq[(String, Boolean)],
       k: Int): DataFrame = {
@@ -220,7 +209,7 @@ object TopK {
     require(keyCols.nonEmpty && orderSpec.nonEmpty,
       "top-k per key needs at least one key column and one order column")
     val spark = df.sparkSession
-    installed(spark)
+    graft.functions.GraftExtensions.install(spark)
     val child = GraftShim.analyzed(df)
     def attr(name: String): Attribute =
       child.output.find(_.name == name).getOrElse(

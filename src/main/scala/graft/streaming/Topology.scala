@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
@@ -177,10 +177,12 @@ object Topology {
     case g: GraphIngestConfig => runGraph(spark, g)
   }
 
-  /** Post-run census over the sink directories. Every read has a fixed
-    * schema, so none starts a schema-inference job: the ledgers and the
-    * feed have theirs, and a table store's comes from its parquet
-    * footers, read without a Spark job.
+  /** Post-run census over the sink directories: one aggregate over the
+    * tagged union of the feed, the log, the DLQ, the late ledger and
+    * each published table's store, so two Spark jobs under AQE. Every
+    * read has a fixed schema, so none starts a schema-inference job: the
+    * ledgers and the feed have theirs, and a table store's comes from its
+    * parquet footers, read without a Spark job.
     */
   def census(spark: SparkSession, cfg: Config): Census = {
     // Only the MISSING-STORE case reads as zero (an untouched sink dir
@@ -191,33 +193,41 @@ object Topology {
     def missingPath(e: org.apache.spark.sql.AnalysisException): Boolean =
       e.getCondition == "PATH_NOT_FOUND" ||
         e.getCondition == "UNABLE_TO_INFER_SCHEMA"
-    def orZero[T](zero: T)(read: => T): T =
-      try read
+    def orNone(read: => DataFrame): Option[DataFrame] =
+      try Some(read)
       catch {
-        case e: org.apache.spark.sql.AnalysisException if missingPath(e) => zero
+        case e: org.apache.spark.sql.AnalysisException if missingPath(e) => None
       }
-    def cnt(p: String, schema: StructType): Long =
-      orZero(0L)(spark.read.schema(schema).parquet(p).count())
-    val logged = graft.ops.LogSink.read(spark, s"${cfg.sinkDir}/log")
-      .collect().map(_.nRows).sum
-    val states = cfg.publication.tables.map { t =>
+    // a source's rows as (tag, tombstone, n), tagged with the source's
+    // sink-relative path: n is 1 per row, except for a log record, which
+    // carries its table's row count
+    def tagged(tag: String, df: DataFrame, tomb: Column = lit(false),
+        n: Column = lit(1L)): DataFrame =
+      df.select(lit(tag).as("tag"), tomb.as("tomb"), n.cast("long").as("n"))
+    def sink(path: String) = s"${cfg.sinkDir}/$path"
+    val tables = cfg.publication.tables
+    val sources = Seq(
+      tagged("feed", spark.read.schema(wireSchema).parquet(cfg.feedDir)
+        .filter(publishedFilter(cfg))),
+      tagged("log", graft.ops.LogSink.read(spark, sink("log")).toDF(), n = col("nRows"))) ++
+      Seq("dlq" -> deadLetterSchema, "late" -> graft.model.CdcEvent.envelopeSchema)
+        .flatMap { case (p, schema) =>
+          orNone(tagged(p, spark.read.schema(schema).parquet(sink(p))))
+        } ++
       // a PUBLISHED table the feed never mentioned has no store at all
       // (the sink only writes touched buckets), and a truncated one may
       // have no data file left — that is live=0, not a crash: the
       // operator reading this census needs the zero row to notice the
       // silent table
-      orZero(TableState(t, 0L, 0L)) {
-        val r = ChangeLogStream.readState(spark, s"${cfg.sinkDir}/state/$t")
-          .agg(count(when(!col("tombstone"), 1)), count(when(col("tombstone"), 1)))
-          .head()
-        TableState(t, r.getLong(0), r.getLong(1))
-      }
-    }
-    val consumed = spark.read.schema(wireSchema).parquet(cfg.feedDir)
-      .filter(publishedFilter(cfg)).count()
-    Census(consumed,
-      cnt(s"${cfg.sinkDir}/dlq", deadLetterSchema),
-      cnt(s"${cfg.sinkDir}/late", graft.model.CdcEvent.envelopeSchema),
-      logged, states)
+      tables.flatMap(t => orNone(tagged(s"state/$t",
+        ChangeLogStream.readState(spark, sink(s"state/$t")), col("tombstone"))))
+    val counts = sources.reduce(_ union _).groupBy("tag")
+      .agg(sum(when(!col("tomb"), col("n"))), sum(when(col("tomb"), col("n"))))
+      .collect().map(r => r.getString(0) ->
+        Seq(1, 2).map(i => if (r.isNullAt(i)) 0L else r.getLong(i)))
+      .toMap
+    def n(tag: String, i: Int = 0) = counts.get(tag).fold(0L)(_(i))
+    Census(n("feed"), n("dlq"), n("late"), n("log"),
+      tables.map(t => TableState(t, n(s"state/$t"), n(s"state/$t", 1))))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftFunctions, VectorOps}
+import graft.functions.{GraftExtensions, GraftFunctions, VectorOps}
 import graft.multimodal.{MediaAsset, Multimodal}
 
 class FunctionsSpec extends AnyFunSuite {
@@ -11,7 +11,7 @@ class FunctionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("codegen CosineSimilarity is bitwise-equal to the HOF reference") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f)),
       (Array(0.5f, -0.25f, 8.0f), Array(-1.5f, 0.125f, 2.0f)),
@@ -29,7 +29,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("codegen L2DistanceSq is bitwise-equal to the HOF fold; ragged yields NULL; SQL-callable") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     def hofL2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, v) => acc + v)
@@ -59,7 +59,7 @@ class FunctionsSpec extends AnyFunSuite {
     // would NPE (GenericArrayData) or silently read 0.0
     // (UnsafeArrayData), a latent cross-engine divergence.
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     def hofL2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, v) => acc + v)
@@ -93,14 +93,14 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("cosine_sim returns NULL for ragged (mismatched-length) vectors") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val rows = spark.sql(
       "SELECT cosine_sim(array(1.0d, 2.0d), array(1.0d)) AS c").collect()
     assert(rows.head.isNullAt(0), "length mismatch must yield NULL, not a truncated score")
   }
 
   test("cosine_sim is usable from SQL after registration") {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val v = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
       .as[Double].head()
@@ -109,7 +109,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("array_intersect_size matches the interpreted HOF, incl. nulls/dupes") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq(
       (Seq("a", "b", "c"), Seq("b", "c", "d")),
       (Seq("a", "a", "b"), Seq("a")),          // duplicates in a each count
@@ -140,7 +140,7 @@ class FunctionsSpec extends AnyFunSuite {
     // generics support is partial — a codegen compile failure would fall
     // back to the interpreted path silently. This asserts the fallback did
     // NOT happen: the projection prints as a codegen span ("*(n) Project").
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     // built on range (not a local Seq) so ConvertToLocalRelation cannot
     // evaluate the projection at optimization time and erase the evidence
     val df = spark.range(8).select(GraftFunctions.arrayIntersectSize(
@@ -375,5 +375,33 @@ class FunctionsSpec extends AnyFunSuite {
     }
     assert(wantImg.nonEmpty, "corpus must contain colliding images")
     CachePool.releaseAll()
+  }
+
+  test("one way in: only GraftFunctions.scala touches the planner or the function registry") {
+    // Source audit: a session set-up inside a query or a helper makes a
+    // plan depend on which query ran first, so the strategy, the rule
+    // and the functions reach a session only through GraftExtensions.
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+      }
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    def text(f: java.io.File) = new String(
+      java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val setUp = Seq(".experimental", "extraStrategies", "extraOptimizations",
+      "createOrReplaceTempFunction", "registerFunction")
+    val gone = Seq("installedWithRewrite", "GraftFunctions.register")
+    val offenders = files.flatMap { f =>
+      val words = if (f.getName == "GraftFunctions.scala") gone else setUp ++ gone
+      words.filter(text(f).contains).map(w => s"${f.getPath}: $w")
+    }
+    assert(offenders.isEmpty,
+      s"""session set-up outside GraftExtensions.install:
+         |  ${offenders.mkString("\n  ")}""".stripMargin)
+    // the scan must see the source tree, including the one install
+    val home = files.find(_.getName == "GraftFunctions.scala")
+    assert(files.size > 20 && home.exists(f => text(f).contains("extraStrategies")))
   }
 }

@@ -7,12 +7,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.ChangeLog
 
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The suites call module query maps and operator internals directly,
+    * past the install that `SparkEntry.queries` does, so the shared
+    * session gets graft's set-up once, here. `spark.newSession()` stays
+    * bare.
+    */
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.functions.GraftExtensions.install(s)
+    s
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {

@@ -51,6 +51,37 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("a query plans the same on a session graft never touched") {
+    // agg_mode_per_group installs nothing itself; its row_number filter
+    // takes the top-k rewrite only because SparkEntry.queries installs
+    // graft's set-up before every query
+    val fresh = spark.newSession()
+    try {
+      val df = SparkEntry.queries("agg_mode_per_group")(fresh, sfDir)
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.exists(_.isInstanceOf[graft.plans.TopKPerKeyLogical]), plan.treeString)
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+      val want = rows(SparkEntry.queries("agg_mode_per_group")(spark, sfDir))
+      assert(rows(df) === want)
+      assert(want.nonEmpty)
+    } finally CachePool.releaseAll()
+  }
+
+  test("public operator entry points install graft on a bare session") {
+    import org.apache.spark.sql.functions.col
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val docs = graft.sources.Tables.documents(fresh, sfDir)
+      .select(col("doc_id"), col("text")).limit(20)
+    assert(graft.operators.Dedup.incrementalMatches(docs, docs).count() >= 0L)
+    val cells = graft.operators.Similarity.assignToCells(
+      Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.1, 1.0))).toDF("vec_id", "e"),
+      Seq((10L, Seq(1.0, 0.0)), (20L, Seq(0.0, 1.0))).toDF("cent_id", "ce"))
+    assert(cells.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(1L -> 10L, 2L -> 20L))
+    CachePool.releaseAll()
+  }
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"query $name executes at sf0.001") {
       val n = fn(spark, sfDir).count()

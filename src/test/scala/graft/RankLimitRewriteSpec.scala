@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.TopK
+import graft.functions.GraftExtensions
 
 class RankLimitRewriteSpec extends AnyFunSuite {
   // fresh session state: extraOptimizations must not leak into the other
@@ -22,7 +22,7 @@ class RankLimitRewriteSpec extends AnyFunSuite {
   }
 
   test("row_number filter is rewritten to the top-k operator, rn preserved") {
-    TopK.installedWithRewrite(spark)
+    GraftExtensions.install(spark)
     val df = ranked.filter(col("rn") <= 3)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("FinalTopK"), plan)
@@ -36,18 +36,21 @@ class RankLimitRewriteSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    // reference computed WITHOUT the rewrite, via a plain session
-    val plain = graft.sources.Tables
-      .orders(TestSession.spark, "/root/testdata/sf0.001")
+    // reference computed WITHOUT the rewrite, on a session nothing
+    // installs into
+    val plainDf = graft.sources.Tables
+      .orders(TestSession.spark.newSession(), "/root/testdata/sf0.001")
       .select("o_custkey", "o_orderkey", "o_totalprice")
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .collect().map(_.toSeq).toSet
+    val plainPlan = plainDf.queryExecution.executedPlan.toString
+    assert(!plainPlan.contains("FinalTopK"), plainPlan)
+    val plain = plainDf.collect().map(_.toSeq).toSet
     assert(expected === plain)
     assert(expected.nonEmpty)
   }
 
   test("residual conjuncts survive as a filter above the rewrite") {
-    TopK.installedWithRewrite(spark)
+    GraftExtensions.install(spark)
     val df = ranked.filter(col("rn") <= 2 && col("o_totalprice") > 1000.0)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("FinalTopK"), plan)
@@ -58,7 +61,7 @@ class RankLimitRewriteSpec extends AnyFunSuite {
   }
 
   test("floating-point partition keys are NOT rewritten (0.0/-0.0 grouping)") {
-    TopK.installedWithRewrite(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     val df = Seq((0.0, 1L, 10.0), (-0.0, 2L, 5.0), (1.5, 3L, 7.0))
       .toDF("k", "id", "v")
@@ -113,7 +116,7 @@ class RankLimitRewriteSpec extends AnyFunSuite {
   }
 
   test("non-top-k rank predicates are left alone") {
-    TopK.installedWithRewrite(spark)
+    GraftExtensions.install(spark)
     val df = ranked.filter(col("rn") === 2) // 2nd-best only: not top-k
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("FinalTopK"), plan)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftFunctions, VectorOps}
+import graft.functions.{GraftExtensions, GraftFunctions, VectorOps}
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -63,7 +63,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   private def brutePairs = {
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("e"))
     val a = e.select(col("vec_id").as("va"), col("e").as("ea"))
@@ -282,7 +282,7 @@ class SimilaritySpec extends AnyFunSuite {
     // 1. the cohort itself (the r15 synthesis convention): anchor+e must
     // produce REAL clusters — mean within-label cosine separates from
     // mean cross-label cosine by a wide margin; ids are conserved.
-    GraftFunctions.register(spark)
+    GraftExtensions.install(spark)
     val base = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"),
         VectorOps.asDouble(col("embedding")).as("e0"))
