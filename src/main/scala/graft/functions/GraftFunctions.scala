@@ -61,7 +61,7 @@ object GraftExtensions {
 
   /** Add whatever of graft's set-up the session lacks, counting what the
     * extension class already injected. Idempotent, and safe to call from
-    * the concurrent table merges of one micro-batch.
+    * several threads of one session at once.
     */
   def install(spark: SparkSession): Unit = synchronized {
     val state = spark.sessionState

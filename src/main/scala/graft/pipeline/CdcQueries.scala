@@ -155,11 +155,11 @@ object CdcQueries {
     // LSN, so a tombstone is a fenced key with no live row) + a 1-row
     // head broadcast read off that same relation.
     "cdc_retained_state" -> ((s, d) => {
-      val keys = ChangeLog.carryForwardKeys(cdcEnvToast(s, d))
+      val keys = ChangeLog.carryForwardKeys(cdcEnvToast(s, d), Seq("key"))
       val head = keys.agg(max(greatest(col("del_lsn"), col("state_lsn"))).as("head"))
         .withColumn("__k", lit(1))
       ChangeLog.retainedState(
-          keys.withColumn("__k", lit(1)).join(broadcast(head), "__k"), col("head"))
+          keys.withColumn("__k", lit(1)).join(broadcast(head), "__k"), Seq("key"), col("head"))
         .select(col("key") +: col("state_lsn") +: toastStateCols :+ col("tombstone"): _*)
     }),
 

@@ -61,55 +61,57 @@ object ChangeLog {
     * live key with no surviving cell has a NULL state.
     */
   def latestStateCarryForward(env: DataFrame): DataFrame =
-    carryForwardKeys(env).filter(col("state_lsn").isNotNull)
+    carryForwardKeys(env, Seq("key")).filter(col("state_lsn").isNotNull)
       .select("key", "state_lsn", "state")
 
-  /** The carry-forward law per key: `del_lsn` is the delete fence (NULL
-    * when the key was never deleted), `state_lsn` the latest live event
-    * above it (NULL when the fence is the key's latest event) and
-    * `state` the carried-forward cells (NULL when no cell survives).
+  /** The carry-forward law per `keyCols` (`key` in the reports; (table,
+    * bucket, key) in the sink, whose keys need not name their table):
+    * `del_lsn` is the delete fence (NULL when the key was never deleted),
+    * `state_lsn` the latest live event above it (NULL when the fence is
+    * the key's latest event) and `state` the carried-forward cells (NULL
+    * when no cell survives).
     * A fenced key with no live row is the tombstone the retention sink
     * keeps while [[tombstoneRetained]] holds.
     */
-  def carryForwardKeys(env: DataFrame): DataFrame = {
+  def carryForwardKeys(env: DataFrame, keyCols: Seq[String]): DataFrame = {
     val entries = collect_list(when(col("c").isNotNull, struct(col("c"), col("v"))))
-    carryForwardCells(env).groupBy("key").agg(
+    carryForwardCells(env, keyCols).groupBy(keyCols.map(col): _*).agg(
       max("del_lsn").as("del_lsn"), max("state_lsn").as("state_lsn"),
       when(size(entries) > 0, map_from_entries(array_sort(entries))).as("state"))
   }
 
-  /** The retention store's rows over [[carryForwardKeys]]: each live
-    * key as (key, state_lsn, state, tombstone = false), each fenced key
-    * with no live row as a tombstone at its delete LSN (state NULL)
-    * while [[tombstoneRetained]] holds against `head`. Shared by the
+  /** The retention store's rows over [[carryForwardKeys]] by `keyCols`:
+    * each live key as (keyCols, state_lsn, state, tombstone = false), each
+    * fenced key with no live row as a tombstone at its delete LSN (state
+    * NULL) while [[tombstoneRetained]] holds against `head`. Shared by the
     * streaming sink and the `cdc_retained_state` report.
     */
-  def retainedState(keys: DataFrame, head: Column): DataFrame =
+  def retainedState(keys: DataFrame, keyCols: Seq[String], head: Column): DataFrame =
     keys.filter(col("state_lsn").isNotNull || tombstoneRetained(col("del_lsn"), head))
-      .select(col("key"), coalesce(col("state_lsn"), col("del_lsn")).as("state_lsn"),
-        col("state"), col("state_lsn").isNull.as("tombstone"))
+      .select(keyCols.map(col) ++ Seq(coalesce(col("state_lsn"), col("del_lsn")).as("state_lsn"),
+        col("state"), col("state_lsn").isNull.as("tombstone")): _*)
 
-  /** Steps 1-3 of [[latestStateCarryForward]]: the winning (key, c,
-    * lsn, v) cell per column, each row carrying its key's `del_lsn` and
-    * `state_lsn`, plus one `c` = NULL row per key with a non-shipping
-    * event.
+  /** Steps 1-3 of [[latestStateCarryForward]] per `keyCols`: the winning
+    * (keyCols, c, lsn, v) cell per column, each row carrying its key's
+    * `del_lsn` and `state_lsn`, plus one `c` = NULL row per key with a
+    * non-shipping event.
     */
-  private def carryForwardCells(env: DataFrame): DataFrame = {
-    val byKey = Window.partitionBy("key")
+  private def carryForwardCells(env: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val keys = keyCols.map(col)
+    val byKey = Window.partitionBy(keys: _*)
     val isLive = col("op").isin("insert", "update", "snapshot")
     val unfenced = col("del_lsn").isNull || col("lsn") > col("del_lsn")
     val shipped = map_filter(col("after"), (c, _) => !array_contains(
       coalesce(col("unchangedCols"), array().cast("array<string>")), c))
     val cells = env.filter(isLive || col("op") === "delete")
-      .select(col("key"), col("op"), col("lsn"), col("after"),
-        col("unchangedCols"),
+      .select(keys ++ Seq(col("op"), col("lsn"), col("after"), col("unchangedCols"),
         max(when(col("op") === "delete", col("lsn"))).over(byKey).as("del_lsn"),
-        max(when(isLive, col("lsn"))).over(byKey).as("live_lsn"))
-      .select(col("key"), col("del_lsn"),
+        max(when(isLive, col("lsn"))).over(byKey).as("live_lsn")): _*)
+      .select(keys ++ Seq(col("del_lsn"),
         when(col("del_lsn").isNull || col("live_lsn") > col("del_lsn"),
           col("live_lsn")).as("state_lsn"),
-        col("lsn"), explode_outer(when(isLive && unfenced, shipped)).as(Seq("c", "v")))
-    graft.plans.TopK.perKey(cells, Seq("key", "c"), Seq(("lsn", false)), 1)
+        col("lsn"), explode_outer(when(isLive && unfenced, shipped)).as(Seq("c", "v"))): _*)
+    graft.plans.TopK.perKey(cells, keyCols :+ "c", Seq(("lsn", false)), 1)
   }
 
   /** Cell-level LINEAGE of the carried-forward state: which LSN wrote
@@ -125,7 +127,7 @@ object ChangeLog {
   def cellProvenance(env: DataFrame, payloadCols: Seq[String]): DataFrame = {
     val aggs = payloadCols.map(p =>
       max(when(col("c") === p, col("lsn"))).as(s"lsn_$p"))
-    carryForwardCells(env).groupBy("key")
+    carryForwardCells(env, Seq("key")).groupBy("key")
       .agg(max("state_lsn").as("state_lsn"), aggs: _*)
       .filter(col("state_lsn").isNotNull)
   }

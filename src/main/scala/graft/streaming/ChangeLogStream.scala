@@ -8,7 +8,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftShim, SparkSession, sources}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftShim, SparkSession, sources}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, Cast, EqualTo, EvalMode, Expression, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -138,20 +138,30 @@ object ChangeLogStream {
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (uid: Long, batch: Iterator[RawEvent], state: GroupState[StateOut]) =>
-          val ordered = batch.toSeq.sortBy(_.event_id)
-          var cur = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[StateOut]
-          ordered.foreach { e =>
-            if (!cur.exists(_.event_id >= e.event_id)) {
-              val next = StateOut(uid, e.event_id, e.event_type, e.value,
-                deleted = e.event_type == "error")
-              cur = Some(next)
-              out += next
-            }
-          }
-          cur.foreach(state.update)
+          val (next, out) = latestStateFold(uid, state.getOption, batch.toSeq)
+          next.foreach(state.update)
           out.iterator
       }
+  }
+
+  /** Pure latest-state fold of one key's batch (the [[sessionFold]]
+    * convention), shared by the FMGWS, transformWithState and TTL forms:
+    * events apply in LSN order, one at or below the state's LSN is
+    * ignored. Returns the new state and the emitted transitions.
+    */
+  def latestStateFold(uid: Long, init: Option[StateOut],
+      events: Seq[RawEvent]): (Option[StateOut], Seq[StateOut]) = {
+    var cur = init
+    val out = scala.collection.mutable.ArrayBuffer.empty[StateOut]
+    events.sortBy(_.event_id).foreach { e =>
+      if (!cur.exists(_.event_id >= e.event_id)) {
+        val next = StateOut(uid, e.event_id, e.event_type, e.value,
+          deleted = e.event_type == "error")
+        cur = Some(next)
+        out += next
+      }
+    }
+    (cur, out.toSeq)
   }
 
   /** Streaming SCD Type 2: the batch `cdc_scd2_intervals` history table
@@ -257,18 +267,8 @@ object ChangeLogStream {
         Encoders.product[StateOut], TTLConfig.NONE)
     override def handleInputRows(key: Long, rows: Iterator[RawEvent],
         timerValues: TimerValues): Iterator[StateOut] = {
-      val ordered = rows.toSeq.sortBy(_.event_id)
-      var cur = Option(state.get())
-      val out = scala.collection.mutable.ArrayBuffer.empty[StateOut]
-      ordered.foreach { e =>
-        if (!cur.exists(_.event_id >= e.event_id)) {
-          val next = StateOut(key, e.event_id, e.event_type, e.value,
-            deleted = e.event_type == "error")
-          cur = Some(next)
-          out += next
-        }
-      }
-      cur.foreach(state.update)
+      val (next, out) = latestStateFold(key, Option(state.get()), rows.toSeq)
+      next.foreach(state.update)
       out.iterator
     }
   }
@@ -373,22 +373,11 @@ object ChangeLogStream {
             state.remove()
             Iterator.empty
           } else {
-            val ordered = batch.toSeq.sortBy(_.event_id)
-            var cur = state.getOption
-            val out = scala.collection.mutable.ArrayBuffer.empty[StateOut]
-            ordered.foreach { e =>
-              if (!cur.exists(_.event_id >= e.event_id)) {
-                val next = StateOut(uid, e.event_id, e.event_type, e.value,
-                  deleted = e.event_type == "error")
-                cur = Some(next)
-                out += next
-              }
-            }
-            cur.foreach(state.update)
-            if (ordered.nonEmpty) {
-              val maxTs = ordered.map(_.ts.getTime).max
-              state.setTimeoutTimestamp(maxTs + ttlMs)
-            }
+            val events = batch.toSeq
+            val (next, out) = latestStateFold(uid, state.getOption, events)
+            next.foreach(state.update)
+            if (events.nonEmpty)
+              state.setTimeoutTimestamp(events.map(_.ts.getTime).max + ttlMs)
             out.iterator
           }
       }
@@ -516,76 +505,75 @@ object ChangeLogStream {
     * A pure function of the key columns, so a key lives in exactly one
     * bucket directory for the life of the table.
     */
-  def bucketOf(keyCols: Seq[String], numBuckets: Int): org.apache.spark.sql.Column =
-    GraftShim.column(bucketExpr(keyCols.map(k => GraftShim.expression(col(k))), numBuckets))
+  def bucketOf(keyCols: Seq[String], numBuckets: Int): Column =
+    bucketOf(keyCols, lit(numBuckets.toLong))
+
+  /** [[bucketOf]] with the bucket count as a (long) column: a merge over
+    * several tables looks up each row's count by its table.
+    */
+  private def bucketOf(keyCols: Seq[String], numBuckets: Column): Column =
+    GraftShim.column(bucketExpr(keyCols.map(k => GraftShim.expression(col(k))),
+      GraftShim.expression(numBuckets)))
 
   /** The bucket expression over `keys` (seed 42, the SQL `xxhash64`'s):
     * the merge evaluates it per row through [[bucketOf]], a lookup
     * evaluates it on the driver over typed literals, so the bucket a
     * lookup probes is the bucket the merge wrote to.
     */
-  private def bucketExpr(keys: Seq[Expression], numBuckets: Int): Expression =
-    Cast(Pmod(new XxHash64(keys), Literal(numBuckets.toLong)), IntegerType)
+  private def bucketExpr(keys: Seq[Expression], numBuckets: Expression): Expression =
+    Cast(Pmod(new XxHash64(keys), numBuckets), IntegerType)
 
   /** foreachBatch idempotent keyed upsert into a BUCKETED parquet
     * "latest state" table — the ES-sink analog (K2/A3) with batch
-    * commits instead of one refresh per document.
-    *
-    * Layout: `tableDir/__bucket=<hash(key) mod NB>/part-*.parquet`,
-    * plus a `_graft_buckets` marker pinning NB (the bucket count is a
-    * TABLE constant: changing it would strand old rows in directories
-    * the merge no longer reads, so the marker — not the per-call
-    * parameter — is authoritative once the table exists; `_`-prefixed
-    * files are invisible to Spark's file index).
-    *
-    * Per batch, only buckets CONTAINING BATCH KEYS are read, merged
-    * (union + latest-state) and swapped; every other bucket's files are
-    * not opened, not rewritten, not even listed beyond the directory
-    * prune — write amplification is O(touched state), not O(state).
-    * That is what the reference's per-doc-ID ES upsert
-    * (es_consumer/main.go:77-95) does per document, batched: at 100 TB
-    * of accumulated state a full-table rewrite per micro-batch is the
-    * scale-killer this layout removes. Readers filtering on
-    * [[BucketCol]] (see [[stateForKey]]) prune untouched buckets at the
-    * directory level.
-    *
-    * Crash safety is per bucket, same rename-aside protocol as before:
-    * staging write → move live bucket aside → publish staged bucket →
-    * drop the aside copy, every rename CHECKED. A crash mid-batch
-    * leaves some buckets updated and some not — safe under replay,
-    * because re-merging the same batch into an already-updated bucket
-    * is a no-op (latest-state is idempotent) and the recovery sweep
-    * below restores any bucket caught between the two renames.
-    * (On a real deployment this is a Delta/Iceberg MERGE; plain parquet
-    * keeps this repo dependency-free.)
+    * commits instead of one refresh per document: the one-table,
+    * last-writer-wins case of [[upsertBatchImpl]], which documents the
+    * layout, the per-bucket rewrite and the crash protocol.
     */
   def upsertBatch(tableDir: String, keyCols: Seq[String], versionCol: String,
       numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit =
-    upsertBatchImpl(tableDir, keyCols, versionCol, numBuckets,
-      compact = None)(batch, batchId)
+    lastWriterBatch(tableDir, LastWriter(keyCols, versionCol, None), -1L, numBuckets)(
+      batch, batchId)
 
-  /** The batch's envelope rows plus the touched buckets' prior rows as
-    * synthetic events: live rows re-enter as `snapshot`s, tombstones
-    * (state NULL) as `delete` fences — one scan of the touched buckets.
-    * A store that does not exist yet surfaces as the batch-schema empty
-    * placeholder: there is no prior state.
+  /** A merge row's table: its index in the merge's table list, which
+    * also names its staging directory, so no table name reaches a path.
     */
-  private def withPriorState(existing: DataFrame, batchRows: DataFrame): DataFrame = {
-    val env = batchRows.select(col("key"), col("op"), col("lsn"),
-      col("after"), col("unchangedCols"))
-    if (!existing.columns.contains("state_lsn")) env
-    else env.unionByName(existing.select(col("key"),
-      (if (existing.columns.contains("tombstone"))
-        when(col("tombstone"), "delete").otherwise("snapshot")
-      else lit("snapshot")).as("op"),
-      col("state_lsn").as("lsn"), col("state").as("after"),
-      lit(null).cast("array<string>").as("unchangedCols")))
-  }
+  private val TableCol = "__table"
 
-  /** The max of `versionCol` over `batch` as a long, -1 when empty. */
-  private def maxLsn(batch: DataFrame, versionCol: String): Long = {
-    val row = batch.agg(max(col(versionCol).cast("long"))).head()
-    if (row.isNullAt(0)) -1L else row.getLong(0)
+  /** One table of a merge: its store, its slice's max version and max
+    * truncate LSN (-1 for none), and its touched buckets.
+    */
+  private final case class Target(dir: String, batchMax: Long, truncateMax: Long,
+      touched: Array[Int])
+
+  /** How a merge resolves a key's rows; a law that `retains` keeps a
+    * retention head and may remove a key outright.
+    */
+  private sealed abstract class Law(val keyCols: Seq[String], val retains: Boolean)
+
+  /** The highest `versionCol` wins; with `retain`, a winning delete is
+    * dropped once the retention horizon passes it.
+    */
+  private final case class LastWriter(override val keyCols: Seq[String], versionCol: String,
+      retain: Option[Column]) extends Law(keyCols, retain.isDefined)
+
+  /** [[carryForwardRetentionUpsertBatch]]'s law, behind the TRUNCATE fence. */
+  private case object CarryForward extends Law(Seq("key"), retains = true)
+
+  /** The one-table case of [[upsertBatchImpl]], staged beside the table. */
+  private def upsertOne(t: Target, law: Law, numBuckets: Int)(
+      batch: DataFrame, batchId: Long): Unit =
+    upsertBatchImpl(t.dir, IndexedSeq(t), law, numBuckets)(
+      batch.withColumn(TableCol, lit(0)), batchId)
+
+  /** A one-table last-writer merge. One shuffle-free job finds its
+    * touched buckets: each partition's distinct ones, merged on the driver.
+    */
+  private def lastWriterBatch(tableDir: String, law: LastWriter, batchMax: Long,
+      numBuckets: Int)(batch: DataFrame, batchId: Long): Unit = {
+    val nb = storeLayout(batch.sparkSession, tableDir, numBuckets)._1
+    val touched = batch.select(bucketOf(law.keyCols, nb)).as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt).collect().distinct.sorted
+    upsertOne(Target(tableDir, batchMax, -1L, touched), law, numBuckets)(batch, batchId)
   }
 
   /** Advances the store's monotone persisted head at `tableDir__head`
@@ -627,23 +615,11 @@ object ChangeLogStream {
     * head by a quarter of the log rather than hugging it.
     */
   def retentionUpsertBatch(tableDir: String, keyCols: Seq[String],
-      versionCol: String, isDelete: org.apache.spark.sql.Column,
-      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
-    val head = advanceHead(batch.sparkSession, tableDir, maxLsn(batch, versionCol))
-    upsertBatchImpl(tableDir, keyCols, versionCol, numBuckets,
-      Some(retentionCompact(versionCol, isDelete, head)))(batch, batchId)
-  }
-
-  /** The shared retention filter: drop tombstones at-or-below the
-    * horizon derived from `head`. Used by the per-batch sink and the
-    * standalone cleaner so the policy cannot fork.
-    */
-  private def retentionCompact(versionCol: String,
-      isDelete: org.apache.spark.sql.Column,
-      head: Long): DataFrame => DataFrame =
-    merged => merged.filter(!isDelete ||
-      graft.pipeline.ChangeLog.tombstoneRetained(
-        col(versionCol).cast("long"), lit(head)))
+      versionCol: String, isDelete: Column,
+      numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit =
+    lastWriterBatch(tableDir, LastWriter(keyCols, versionCol, Some(isDelete)),
+      batch.agg(maxOrNone(col(versionCol))).head().getLong(0), numBuckets)(
+      batch, batchId)
 
   /** Standalone log-cleaner pass — the Kafka cleaner visits COLD
     * segments too: [[retentionUpsertBatch]] compacts only buckets its
@@ -652,16 +628,17 @@ object ChangeLogStream {
     * store's own persisted head (no batch required), finds the buckets
     * actually holding expired tombstones with ONE pruned scan
     * (bucket/op/version columns only — payload never reads), and
-    * rewrites ONLY those through the identical staging+publish protocol
-    * (an all-expired bucket publishes as a deletion). Returns the
-    * number of buckets rewritten; 0 = store already clean, nothing
-    * written. Idempotent and crash-safe for the same reasons the batch
-    * path is: re-running re-merges to the same result, and a crash
-    * between renames is restored by the recovery sweep.
+    * rewrites ONLY those through the identical merge with an empty
+    * batch and those buckets as its touched set (an all-expired bucket
+    * publishes as a deletion). Returns the number of buckets rewritten;
+    * 0 = store already clean, nothing written. Idempotent and
+    * crash-safe for the same reasons the batch path is: re-running
+    * re-merges to the same result, and a crash between renames is
+    * restored by the recovery sweep.
     */
   def compactTombstones(spark: org.apache.spark.sql.SparkSession,
       tableDir: String, keyCols: Seq[String], versionCol: String,
-      isDelete: org.apache.spark.sql.Column, numBuckets: Int = 16): Int = {
+      isDelete: Column, numBuckets: Int = 16): Int = {
     val head = graft.pipeline.LsnCheckpoint.read(spark, tableDir + "__head")
     val target = new Path(tableDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -673,141 +650,144 @@ object ChangeLogStream {
         col(versionCol).cast("long"), lit(head)))
       .select(BucketCol).distinct().collect().map(_.getInt(0)).sorted
     if (expired.isEmpty) return 0
-    upsertBatchImpl(tableDir, keyCols, versionCol, numBuckets,
-      Some(retentionCompact(versionCol, isDelete, head)),
-      touchedOverride = expired)(store.drop(BucketCol).limit(0), -1L)
+    upsertOne(Target(tableDir, -1L, -1L, expired),
+      LastWriter(keyCols, versionCol, Some(isDelete)), numBuckets)(
+      store.drop(BucketCol).limit(0), -1L)
     expired.length
   }
 
-  private def upsertBatchImpl(tableDir: String, keyCols: Seq[String],
-      versionCol: String, numBuckets: Int,
-      compact: Option[DataFrame => DataFrame],
-      touchedOverride: Array[Int] = Array.empty,
-      merge: Option[(DataFrame, DataFrame) => DataFrame] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** The one merge of every sink here: each table of `batch` (a row names
+    * its table by its index in `tables`, [[TableCol]]) merged into its
+    * store under `law` — one table for the single-table sinks, every
+    * table of the micro-batch for [[fullProductionBatch]].
+    *
+    * Layout: `<dir>/__bucket=<hash(key) mod NB>/` plus a `_graft_buckets`
+    * marker pinning NB (a TABLE constant: a changed count would strand
+    * rows). Only touched buckets are read, merged and swapped: write
+    * amplification is O(touched state), the reference's per-doc-ID ES
+    * upsert (es_consumer/main.go:77-95) batched.
+    *
+    * Per table, on the driver, in table order: the recovery sweep of
+    * `<dir>__prev`, the pinned count, the fence ([[advanceFence]]), the
+    * head ([[advanceHead]]), and the touched buckets' read with the
+    * footer schema, so a store whose schema does not merge fails the
+    * batch before any job. Then ONE job: the rows above their table's
+    * fence and the prior rows, repartitioned once on (table, bucket),
+    * which meets the law's clustering on (table, bucket, key) and the
+    * `partitionBy(table, bucket)` staging write (each table's count,
+    * fence and head are columns looked up by table). A failed job
+    * publishes nothing. Then per (table, bucket): move the live bucket
+    * aside, rename the staged one in, drop the aside copy, each step
+    * checked ([[CheckedFs]]). A crash mid-publish is safe under replay:
+    * re-merging an updated bucket is a no-op, and the sweep restores a
+    * bucket caught between its renames. (A real deployment would use a
+    * Delta/Iceberg MERGE; plain parquet keeps this repo dependency-free.)
+    */
+  private def upsertBatchImpl(root: String, tables: IndexedSeq[Target], law: Law,
+      numBuckets: Int)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val target = new Path(tableDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backupRoot = new Path(tableDir + "__prev")
-    // crash recovery: restore any bucket a dying batch left moved aside
-    // (target missing, backup present); backups whose target EXISTS are
-    // superseded copies from after a completed publish — drop them
-    if (fs.exists(backupRoot)) {
-      fs.listStatus(backupRoot).foreach { st =>
-        val restored = new Path(target, st.getPath.getName)
-        if (!fs.exists(restored)) {
-          fs.mkdirs(target)
-          if (!fs.rename(st.getPath, restored))
-            throw new java.io.IOException(s"failed to restore ${st.getPath}")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val layouts = tables.map { t =>
+      val target = new Path(t.dir)
+      val backupRoot = new Path(t.dir + "__prev")
+      // crash recovery: restore any bucket a dying batch left moved aside
+      // (target missing, backup present); backups whose target EXISTS are
+      // superseded copies from after a completed publish — drop them
+      if (fs.exists(backupRoot)) {
+        fs.listStatus(backupRoot).foreach { st =>
+          val restored = new Path(target, st.getPath.getName)
+          if (!fs.exists(restored)) {
+            fs.mkdirs(target)
+            CheckedFs.rename(fs, st.getPath, restored)
+          }
         }
+        CheckedFs.delete(fs, backupRoot)
       }
-      fs.delete(backupRoot, true)
+      val nb = readOrPinBucketCount(fs, target, numBuckets)
+      val fence = if (law == CarryForward) advanceFence(spark, t.dir, t.truncateMax) else -1L
+      val head = if (law.retains) advanceHead(spark, t.dir, t.batchMax) else -1L
+      (nb.toLong, fence, head)
     }
-    val nb = readOrPinBucketCount(fs, target, numBuckets)
-    // a custom merge law sees EVERY batch row (a pre-reduction to the
-    // per-key latest would lose the earlier rows a carry-forward merge
-    // heals from); the default last-writer-wins path pre-reduces as
-    // before
-    val batchLatest = merge.fold(
-        ChangeLog.latestState(batch, keyCols, versionCol))(_ => batch)
-      .withColumn(BucketCol, bucketOf(keyCols, nb))
-      .persist()
+    val (nbs, fences, heads) = layouts.unzip3
+    def ofTable(values: Seq[Long]): Column =
+      if (values.distinct.length == 1) lit(values.head)
+      else element_at(typedLit(values), col(TableCol) + 1)
+    val rows = (if (fences.forall(_ < 0)) batch else batch.filter(aboveFence(ofTable(fences))))
+      .withColumn(BucketCol, bucketOf(law.keyCols, ofTable(nbs)))
+    val merging = tables.indices.filter(tables(_).touched.nonEmpty)
+    if (merging.isEmpty) return
+    // the store's merged footer schema + allowMissingColumns: an upstream
+    // ALTER TABLE ADD COLUMN (CDC tables drift over a pipeline's
+    // lifetime) must not kill the sink. Added columns surface as NULL on
+    // the side that lacks them — the Delta/Iceberg MERGE evolution
+    // contract; type CHANGES still refuse loudly (SchemaEvolutionSpec
+    // documents the explicit per-epoch widening path for those).
+    val prior = merging.flatMap { i =>
+      val target = new Path(tables(i).dir)
+      if (!fs.exists(target) || !fs.listStatus(target).exists(_.isDirectory)) None
+      else Some(readStore(spark, tables(i).dir)
+        .filter(col(BucketCol).isin(tables(i).touched.map(Int.box): _*))
+        .withColumn(TableCol, lit(i)))
+    }
+    val keys = TableCol +: BucketCol +: law.keyCols
+    val merged = law match {
+      case LastWriter(_, versionCol, retain) =>
+        val latest = ChangeLog.latestState((prior :+ rows)
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+          .repartition(col(TableCol), col(BucketCol)), keys, versionCol)
+        retain.fold(latest)(isDelete => latest.filter(!isDelete ||
+          ChangeLog.tombstoneRetained(col(versionCol).cast("long"), ofTable(heads))))
+      case CarryForward =>
+        ChangeLog.retainedState(ChangeLog.carryForwardKeys(withPriorState(prior, rows)
+          .repartition(col(TableCol), col(BucketCol)), keys), keys, ofTable(heads))
+    }
+    val stagingRoot = new Path(root + s"__staging_$batchId")
+    merged.write.partitionBy(TableCol, BucketCol).mode("overwrite")
+      .parquet(stagingRoot.toString)
+    // publish concurrently on a bounded pool: the protocol is per
+    // (table, bucket) — only the order WITHIN a bucket is an invariant —
+    // and serial renames dominate a batch against an object store
+    merging.foreach { i =>
+      fs.mkdirs(new Path(tables(i).dir))
+      fs.mkdirs(new Path(tables(i).dir + "__prev"))
+    }
+    val buckets = merging.flatMap(i => tables(i).touched.map(i -> _))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(buckets.length, 16))
     try {
-      // one shuffle-free job: each partition's distinct buckets, merged
-      // on the driver — O(buckets × partitions) values, never O(data)
-      val touched = (batchLatest.select(BucketCol).as(Encoders.scalaInt)
-        .mapPartitions(_.toSet.iterator)(Encoders.scalaInt).collect() ++
-        touchedOverride).distinct.sorted
-      if (touched.isEmpty) return
-      // the store's merged footer schema + allowMissingColumns: an
-      // upstream ALTER TABLE ADD COLUMN (CDC tables drift over a
-      // pipeline's lifetime) must not kill the sink. Added columns
-      // surface as NULL on the side that lacks them — the Delta/Iceberg
-      // MERGE evolution contract; type CHANGES still refuse loudly
-      // (SchemaEvolutionSpec documents the explicit per-epoch widening
-      // path for those).
-      val existingTouched =
-        if (fs.exists(target) && fs.listStatus(target).exists(_.isDirectory))
-          readStore(spark, tableDir)
-            .filter(col(BucketCol).isin(touched.map(Int.box): _*))
-        else batchLatest.limit(0)
-      val latest = merge match {
-        case None => ChangeLog.latestState(
-          existingTouched.unionByName(batchLatest, allowMissingColumns = true),
-          keyCols, versionCol)
-        case Some(m) =>
-          // the merge law owns the row semantics; the bucket column is
-          // the layout's concern — recomputed from the merged keys
-          m(existingTouched.drop(BucketCol), batchLatest.drop(BucketCol))
-            .withColumn(BucketCol, bucketOf(keyCols, nb))
-      }
-      val merged = compact.fold(latest)(f => f(latest))
-      val stagingRoot = new Path(tableDir + s"__staging_$batchId")
-      // repartition on the bucket id so each bucket's rows land in one
-      // task → one file per bucket (not tasks × buckets tiny files)
-      merged.repartition(col(BucketCol))
-        .write.partitionBy(BucketCol).mode("overwrite")
-        .parquet(stagingRoot.toString)
-      fs.mkdirs(target)
-      fs.mkdirs(backupRoot)
-      // Publish buckets CONCURRENTLY: the rename protocol below is
-      // entirely per-bucket (no bucket touches another bucket's paths),
-      // so cross-bucket ordering carries no invariant — only the
-      // aside-before-publish order WITHIN a bucket does, and each task
-      // preserves it. Sequential publishing is O(touched) driver→store
-      // round trips per batch; against an object store at thousands of
-      // buckets that dominates the batch. A bounded pool keeps the
-      // metadata-op fan-out polite. On failure every completed bucket
-      // stays published (replay re-merges it as a no-op) and any bucket
-      // caught between its two renames is restored by the recovery
-      // sweep above — the same partial-batch states a crash can leave.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(touched.length, 16))
-      try {
-        val tasks = touched.map { b =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = {
-              val name = s"$BucketCol=$b"
-              val staged = new Path(stagingRoot, name)
-              val live = new Path(target, name)
-              val aside = new Path(backupRoot, name)
-              // Under the DEFAULT merge a touched bucket has ≥ 1 key ⇒
-              // latest-state has ≥ 1 row, so a missing staged dir is an
-              // invariant violation. WITH compaction — or a custom
-              // merge law whose deletes remove keys outright (the
-              // carry-forward sink) — the bucket can legitimately
-              // empty out: publishing an empty bucket = deleting the
-              // live copy (replay-safe — re-merging re-compacts to the
-              // same empty result).
-              if (!fs.exists(staged)) {
-                if (compact.isEmpty && merge.isEmpty)
-                  throw new IllegalStateException(
-                    s"staging missing touched bucket $name under $stagingRoot")
-                if (fs.exists(aside)) fs.delete(aside, true)
-                if (fs.exists(live)) fs.delete(live, true)
-                return
-              }
-              if (fs.exists(aside)) fs.delete(aside, true)
-              if (fs.exists(live) && !fs.rename(live, aside))
-                throw new java.io.IOException(s"failed to move $live aside to $aside")
+      val tasks = buckets.map { case (i, b) =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            val staged = new Path(stagingRoot, s"$TableCol=$i/$BucketCol=$b")
+            val live = new Path(tables(i).dir, s"$BucketCol=$b")
+            val aside = new Path(tables(i).dir + s"__prev/$BucketCol=$b")
+            // a bucket missing from staging merged to no row: publishing
+            // it deletes the live copy, which only a retaining law may do
+            if (!fs.exists(staged)) {
+              if (!law.retains)
+                throw new IllegalStateException(s"staging missing touched bucket $staged")
+              CheckedFs.delete(fs, aside)
+              CheckedFs.delete(fs, live)
+            } else {
+              CheckedFs.delete(fs, aside) // a rename onto it would nest inside it
+              if (fs.exists(live)) CheckedFs.rename(fs, live, aside)
               if (!fs.rename(staged, live)) {
                 if (fs.exists(aside)) fs.rename(aside, live)
                 throw new java.io.IOException(s"failed to publish $staged to $live")
               }
               if (fs.exists(aside)) fs.delete(aside, true)
             }
-          })
-        }
-        // get() rethrows the task's exception (unwrapped from the
-        // ExecutionException) after every task has been submitted
-        tasks.foreach { t =>
-          try t.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      } finally pool.shutdownNow()
-      fs.delete(stagingRoot, true) // only _SUCCESS & co remain
-      if (fs.exists(backupRoot)) fs.delete(backupRoot, true)
-    } finally batchLatest.unpersist()
+          }
+        })
+      }
+      // get() rethrows the task's exception (unwrapped from the
+      // ExecutionException) after every task has been submitted
+      tasks.foreach { t =>
+        try t.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdownNow()
+    fs.delete(stagingRoot, true) // only _SUCCESS & co remain
+    merging.foreach(i => fs.delete(new Path(tables(i).dir + "__prev"), true))
   }
 
   /** The bucket count is pinned by a `_graft_buckets` marker when the
@@ -894,7 +874,7 @@ object ChangeLogStream {
       val dt = schema(i).dataType
       (i, dt, Cast(Literal(v), dt, tz, EvalMode.TRY).eval())
     }
-    val bucket = bucketExpr(keys.map { case (_, dt, v) => Literal(v, dt) }, nb)
+    val bucket = bucketExpr(keys.map { case (_, dt, v) => Literal(v, dt) }, Literal(nb.toLong))
       .eval().asInstanceOf[Int]
     val isKey = keys.map { case (i, dt, v) =>
       EqualTo(BoundReference(i, dt, nullable = true), Literal(v, dt)): Expression
@@ -1097,12 +1077,13 @@ object ChangeLogStream {
   }
 
   /** Carry-forward merge WITH Kafka-style tombstone retention, behind
-    * the table's TRUNCATE fence: the per-table sink of
-    * [[fullProductionBatch]]. TOASTed updates must heal from prior
-    * state across batch boundaries, a deleted key must leave a
-    * tombstone that protects lagging consumers until the retention
-    * horizon passes, and a truncate clears the table (the fence and its
-    * crash order are documented on [[fullProductionBatch]]).
+    * the table's TRUNCATE fence: the one-table case of the merge
+    * [[fullProductionBatch]] runs over every table of a batch. TOASTed
+    * updates must heal from prior state across batch boundaries, a
+    * deleted key must leave a tombstone that protects lagging consumers
+    * until the retention horizon passes, and a truncate clears the
+    * table (the fence and its crash order are documented on
+    * [[fullProductionBatch]]).
     *
     * Store schema: (key, state_lsn, state, tombstone). Live rows carry
     * the carried-forward state map; tombstone rows carry the delete
@@ -1116,48 +1097,69 @@ object ChangeLogStream {
     * key with a live row is stored live, a fenced key with no live row
     * is a tombstone — RETAINED only while the horizon (from the store's
     * monotone persisted head, the [[retentionUpsertBatch]] protocol)
-    * still protects someone. Same
-    * bucket mechanics, same crash protocol, same idempotency argument
-    * as every other sink here. One aggregate over the batch yields its
-    * max LSN and max truncate LSN; inside [[fullProductionBatch]] both
-    * come from the demux aggregate instead.
+    * still protects someone. Rows at or below the fence are dropped
+    * before the merge; every truncate is among them, since the fence
+    * covers the batch's truncates. One aggregate over the batch yields
+    * its max LSN, its max truncate LSN and its touched buckets.
     */
   def carryForwardRetentionUpsertBatch(tableDir: String,
       numBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
-    val lsn = col("lsn").cast("long")
-    val maxes = batch.agg(max(lsn), max(when(col("op") === "truncate", lsn))).head()
-    def lsnAt(i: Int): Long = if (maxes.isNullAt(i)) -1L else maxes.getLong(i)
-    carryForwardRetentionWithHead(tableDir, numBuckets, lsnAt(0), lsnAt(1))(
-      batch, batchId)
+    val (nb, fence) = storeLayout(batch.sparkSession, tableDir, numBuckets)
+    val r = batch.agg(maxOrNone(col("lsn")), touchAggs(lit(nb.toLong), lit(fence)): _*).head()
+    upsertOne(Target(tableDir, r.getLong(0), r.getLong(1), r.getSeq[Int](2).toArray),
+      CarryForward, numBuckets)(batch, batchId)
   }
 
-  /** [[carryForwardRetentionUpsertBatch]] given the batch's max LSN and
-    * its max truncate LSN (-1 when the batch has no truncate). Rows at
-    * or below the table's fence are dropped before the merge; every
-    * truncate is among them, since the fence covers the batch's
-    * truncates. A table never truncated merges the batch as it is.
+  /** The max of `c` as a long, -1 over no (non-NULL) value. */
+  private def maxOrNone(c: Column): Column = coalesce(max(c.cast("long")), lit(-1L))
+
+  /** A carry-forward batch's max truncate LSN and touched buckets (rows
+    * above the stored fence), given each row's [[storeLayout]]. A bucket
+    * below this batch's own truncate stays in: the clear empties it.
     */
-  private def carryForwardRetentionWithHead(tableDir: String, numBuckets: Int,
-      batchMax: Long, truncateMax: Long)(batch: DataFrame, batchId: Long): Unit = {
-    val fence = advanceFence(batch.sparkSession, tableDir, truncateMax)
-    val head = advanceHead(batch.sparkSession, tableDir, batchMax)
-    upsertBatchImpl(tableDir, Seq("key"), "lsn", numBuckets,
-      compact = None,
-      merge = Some(carryForwardRetentionMerge(head)))(
-      if (fence < 0) batch else batch.filter(col("lsn") > fence), batchId)
+  private def touchAggs(numBuckets: Column, fence: Column): Seq[Column] = Seq(
+    maxOrNone(when(col("op") === "truncate", col("lsn"))),
+    collect_set(when(!(col("op") <=> "truncate") && aboveFence(fence),
+      bucketOf(CarryForward.keyCols, numBuckets))))
+
+  /** True for a row above its table's TRUNCATE fence (-1: never truncated). */
+  private def aboveFence(fence: Column): Column = fence < 0 || col("lsn") > fence
+
+  /** A store's bucket count (`numBuckets` before its first batch) and
+    * TRUNCATE fence (-1 for none), read on the driver.
+    */
+  private def storeLayout(spark: SparkSession, dir: String, numBuckets: Int): (Int, Long) = {
+    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
+    val target = new Path(dir)
+    (readBucketCount(target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
+      .getOrElse(numBuckets),
+      graft.pipeline.LsnCheckpoint.read(spark, dir + "__fence"))
   }
 
-  private def carryForwardRetentionMerge(head: Long)(existing: DataFrame,
-      batchRows: DataFrame): DataFrame =
-    ChangeLog.retainedState(
-      ChangeLog.carryForwardKeys(withPriorState(existing, batchRows)), lit(head))
+  /** The batch's envelope rows plus the touched buckets' `prior` rows as
+    * events: live rows as `snapshot`s, tombstones as `delete` fences.
+    */
+  private def withPriorState(prior: Seq[DataFrame], rows: DataFrame): DataFrame = {
+    val where = Seq(col(TableCol), col(BucketCol), col("key"))
+    prior.foldLeft(rows.select(where ++ Seq(col("op"), col("lsn"), col("after"),
+        col("unchangedCols")): _*)) { (env, store) =>
+      env.unionByName(store.select(where ++ Seq(
+        (if (store.columns.contains("tombstone"))
+          when(col("tombstone"), "delete").otherwise("snapshot")
+        else lit("snapshot")).as("op"),
+        col("state_lsn").as("lsn"), col("state").as("after"),
+        lit(null).cast("array<string>").as("unchangedCols")): _*))
+    }
+  }
 
   /** The table's TRUNCATE fence, persisted at `tableDir__fence`
     * ([[graft.pipeline.LsnCheckpoint]]'s atomic replace), advanced to
     * `truncateMax` when that is newer — after clearing the moved-aside
-    * copies and then every bucket, in that order. Returns the fence, -1
-    * for a table never truncated. Without a newer truncate this costs
-    * one existence check.
+    * copies and then every bucket, in that order, each delete CHECKED:
+    * the fence filters only the batch, never the store, so a fence
+    * written over a bucket that was not cleared would serve the
+    * truncated rows forever. Returns the fence, -1 for a table never
+    * truncated. Without a newer truncate this costs one existence check.
     */
   private def advanceFence(spark: SparkSession, tableDir: String,
       truncateMax: Long): Long = {
@@ -1167,9 +1169,9 @@ object ChangeLogStream {
     else {
       val target = new Path(tableDir)
       val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(tableDir + "__prev"), true)
+      CheckedFs.delete(fs, new Path(tableDir + "__prev"))
       Option(fs.globStatus(new Path(target, s"$BucketCol=*")))
-        .foreach(_.foreach(st => fs.delete(st.getPath, true)))
+        .foreach(_.foreach(st => CheckedFs.delete(fs, st.getPath)))
       graft.pipeline.LsnCheckpoint.write(spark, fencePath, truncateMax)
       truncateMax
     }
@@ -1177,37 +1179,34 @@ object ChangeLogStream {
 
   /** The consumer topology BODY of [[fullProductionBatch]] (decode →
     * dead-letter tee → recorded-watermark admission → late tee →
-    * per-(schema, table) demux → fenced table merges → progress log).
-    * A method of its own so that a stack sample of the batch names it
-    * (perfbench's step sampler attributes batch time by method name).
-    * Decode runs once (persisted). An envelope without an LSN or an
-    * event time is dead-lettered: neither side of the late split could
-    * admit it.
+    * per-(schema, table) demux → one fenced merge of every table →
+    * progress log). A method of its own so that a stack sample of the
+    * batch names it (perfbench's step sampler attributes batch time by
+    * method name). Decode runs once (persisted). An envelope without an
+    * LSN or an event time is dead-lettered: neither side of the late
+    * split could admit it.
     *
     * The demux is ONE aggregate per batch: `groupBy(schema, table)`
     * with the progress aggregate (count, min and max LSN), the max
-    * event time and the max truncate LSN collects O(tables-in-batch)
-    * rows, never payload. It yields the table list, every table's
-    * progress record and truncate max, and the batch's watermark:
-    * `wm-<batchId>` is recorded as max(previous mark, max over the
-    * groups) before any table sink runs. The groups hold only on-time
-    * rows, and that is the same mark as the max over every decoded row:
-    * a late row is older than the previous mark minus a non-negative
-    * delay, so it can never raise the mark.
+    * event time and [[touchAggs]] (each existing store's [[storeLayout]]
+    * read first) collects O(tables × buckets) values, never payload. It
+    * yields every table's progress record, truncate max and touched
+    * buckets, and the batch's watermark: `wm-<batchId>` is recorded as
+    * max(previous mark, max over the groups) before the merge runs. The
+    * groups hold only on-time rows, and that is the same mark as the
+    * max over every decoded row: a late row is older than the previous
+    * mark minus a non-negative delay, so it can never raise the mark.
     *
-    * The table merges ([[carryForwardRetentionWithHead]], component =
-    * "schema.table") run concurrently, each on its own store, with the
-    * caller's job group, job tags and execution id, so cancelling the
-    * caller's jobs cancels theirs. Every merge is waited for; the first
-    * failure in table order is rethrown. The records are written in one
-    * per-batch overwrite only after every table committed: the log never
-    * claims progress the state lost, and a replayed batch rewrites its
-    * records instead of doubling them — the DLQ and late ledgers'
-    * idempotency, so the conservation law survives replay.
+    * Then ONE merge of every table ([[upsertBatchImpl]], store
+    * `state/<schema.table>`). The records are written in one per-batch
+    * overwrite only after it published: the log never claims progress
+    * the state lost, and a replayed batch rewrites its records instead
+    * of doubling them, so the conservation law survives replay.
     */
   private def consumerTopology(baseDir: String, delayUs: Long, numBuckets: Int)(
       wire: DataFrame, batchId: Long): Unit = {
     require(delayUs >= 0, s"the late delay must not be negative, got $delayUs us")
+    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     val spark = wire.sparkSession
     val decoded = wire
       .withColumn("ev", from_json(col("value").cast("string"),
@@ -1223,35 +1222,33 @@ object ChangeLogStream {
       val adm = lateDataSplitTee(rule, decoded.filter(!dead).select("ev.*"),
         s"$baseDir/late/batch_id=$batchId").persist()
       try {
-        val aggs = graft.ops.LogSink.progressAggs("lsn") :+ max(eventMicros) :+
-          max(when(col("op") === "truncate", col("lsn"))).cast("long")
+        val stateRoot = s"$baseDir/state"
+        val table = concat(col("schemaName"), lit("."), col("tableName"))
+        val fs = new Path(stateRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val layouts = Option(fs.globStatus(new Path(stateRoot, "*/_graft_buckets")))
+          .fold(Seq.empty[(String, (Int, Long))])(_.toSeq.map { st =>
+            st.getPath.getParent.getName -> storeLayout(spark, st.getPath.getParent.toString, numBuckets)
+          })
+        def byTable(value: ((Int, Long)) => Long, default: Long): Column = coalesce(element_at(
+          typedLit(layouts.map { case (t, l) => t -> value(l) }.toMap), table), lit(default))
+        val aggs = graft.ops.LogSink.progressAggs("lsn") ++ (max(eventMicros) +:
+          touchAggs(byTable(_._1.toLong, numBuckets), byTable(_._2, -1L)))
         val groups = adm.groupBy("schemaName", "tableName")
           .agg(aggs.head, aggs.tail: _*).collect()
           .sortBy(r => (r.getString(0), r.getString(1)))
-        // field 5 is the group's max event time, field 6 its max truncate LSN
+        // field 5 is the group's max event time, 6 its max truncate LSN,
+        // 7 its touched buckets
         rule.record(groups.filterNot(_.isNullAt(5)).map(_.getLong(5)).maxOption)
         val records = groups.map { r =>
           graft.ops.LogSink.progressFrom(r, 2, batchId, s"${r.getString(0)}.${r.getString(1)}")
         }
-        // a few tables at a time: every merge is a chain of small jobs
-        // on the same executors, so the gain is overlapping their gaps
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(groups.length, 8)))
-        try {
-          val sinks = groups.zip(records).map { case (r, rec) =>
-            val slice = adm.filter(col("schemaName") === r.getString(0) &&
-              col("tableName") === r.getString(1))
-            GraftShim.withThreadLocalCaptured(spark, pool)(
-              carryForwardRetentionWithHead(s"$baseDir/state/${rec.component}", numBuckets,
-                rec.lastLsn, if (r.isNullAt(6)) -1L else r.getLong(6))(slice, batchId))
-          }
-          // get() wraps a sink's failure in an ExecutionException
-          val failures = sinks.flatMap { s =>
-            try { s.get(); None }
-            catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
-          }
-          failures.headOption.foreach(e => throw e)
-        } finally pool.shutdownNow()
+        val targets = groups.zip(records).map { case (r, rec) =>
+          Target(s"$stateRoot/${rec.component}", rec.lastLsn, r.getLong(6), r.getSeq[Int](7).toArray)
+        }
+        upsertBatchImpl(stateRoot, targets.toIndexedSeq, CarryForward, numBuckets)(
+          adm.withColumn(TableCol,
+            element_at(typedLit(records.map(_.component).zipWithIndex.toMap), table)),
+          batchId)
         graft.ops.LogSink.writeBatch(spark, s"$baseDir/log", batchId, records.toSeq)
       } finally { adm.unpersist(); () }
     } finally { decoded.unpersist(); () }
@@ -1268,20 +1265,22 @@ object ChangeLogStream {
     *             → event-time admission (recorded watermark; too-late
     *               rows → late ledger)
     *             → per-(schema, table) demux, one aggregate that also
-    *               yields the batch's watermark (recorded before any
-    *               table sink runs), each table's retention head and
-    *               its max truncate LSN
-    *             → per table, the TRUNCATE fence: a truncate newer than
-    *               the table's fence clears the table; rows at or below
-    *               the fence, truncates included, are dropped
-    *             → each slice through the CARRY-FORWARD + TOMBSTONE-
-    *               RETENTION merge ([[carryForwardRetentionUpsertBatch]]:
-    *               TOASTed cells heal from prior batches, deletes leave
-    *               horizon-guarded tombstones), the tables' merges
-    *               running concurrently
+    *               yields the batch's watermark (recorded before the
+    *               merge runs), each table's retention head, its max
+    *               truncate LSN and its touched buckets
+    *             → per table, on the driver, the TRUNCATE fence: a
+    *               truncate newer than the table's fence clears the
+    *               table; rows at or below the fence, truncates
+    *               included, are dropped
+    *             → ONE CARRY-FORWARD + TOMBSTONE-RETENTION merge of
+    *               every table ([[carryForwardRetentionUpsertBatch]]'s
+    *               law: TOASTed cells heal from prior batches, deletes
+    *               leave horizon-guarded tombstones): one shuffle on
+    *               (table, bucket), one staged write, then a publish
+    *               per (table, bucket)
     *             → one progress record per (table, batch), computed in
     *               the demux aggregate and written once per batch,
-    *               after every table committed.
+    *               after the merge published.
     *
     * A truncate is a TABLE-level operation, so it belongs at the
     * table's commit point, not inside the per-key merge: a key's group
@@ -1292,7 +1291,8 @@ object ChangeLogStream {
     *     (`state/<schema>.<table>__fence`) first deletes the moved-aside
     *     copies (`__prev`, which the merge's recovery sweep would
     *     otherwise restore after the clear), then every `__bucket=*`
-    *     directory, and only then writes the fence. A crash before the
+    *     directory, and only then writes the fence; a delete that fails
+    *     fails the batch before the fence is written. A crash before the
     *     write re-runs the clear on replay (the truncate is still ahead
     *     of the stored fence); the reverse order could persist a fence
     *     over uncleared state.
@@ -1301,6 +1301,14 @@ object ChangeLogStream {
     *     truncate in the middle of a batch keeps only that table's
     *     events above it.
     *  3. the surviving rows merge as usual (idempotent, bucketed).
+    *
+    * Failure contract: the merge stages every table in one write, so a
+    * batch whose merge fails — a store whose schema does not merge fails
+    * it on the driver, before any job — publishes no table and logs
+    * nothing; the driver steps it already took (a fence's clear, a
+    * head's advance) are the ones a replay repeats as no-ops. A failure
+    * during the publish leaves some (table, bucket)s published, behind
+    * the recovery sweep, as a crash does; a replay completes the batch.
     *
     * Conservation law (asserted by the spec): every wire message is in
     * exactly one of {dead ledger, late ledger, Σ logged per-table rows}

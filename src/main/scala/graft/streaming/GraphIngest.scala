@@ -79,23 +79,6 @@ object GraphIngest {
         "restore the pre-compaction copy before reading or appending.")
   }
 
-  // Hadoop FileSystem mutators report failure by RETURNING FALSE, not
-  // throwing (and RawLocalFileSystem.rename onto an existing directory
-  // NESTS the source inside it) — every return value is checked so a
-  // failed step aborts the swap instead of cascading into the delete
-  // below it (r16 advice: an unchecked rename + the trailing delete
-  // could silently discard the only complete copy).
-  private def renameOrFail(fs: FileSystem, src: Path, dst: Path): Unit =
-    require(fs.rename(src, dst),
-      s"GraphIngest: rename $src -> $dst failed (returned false) — " +
-        "aborting; no data has been deleted")
-  private def mkdirsOrFail(fs: FileSystem, p: Path): Unit =
-    require(fs.mkdirs(p),
-      s"GraphIngest: mkdirs $p failed (returned false) — aborting")
-  private def deleteOrFail(fs: FileSystem, p: Path): Unit =
-    require(!fs.exists(p) || fs.delete(p, true),
-      s"GraphIngest: delete $p failed (returned false)")
-
   /** The standing assignment a microbatch builds edges against: the
     * seed (the index's trained standing corpus assignment) plus every
     * batch appended so far. O(ingested) parquet rows, read with
@@ -207,9 +190,9 @@ object GraphIngest {
     * `_precompact`/`_compacting` marker that [[standingAssign]] /
     * [[edges]] / this method REFUSE to operate through. Recovery is
     * [[recover]], which restores the aside copy; it is no longer an
-    * operator-judgment comment. Every FileSystem mutation checks its
-    * Boolean result (Hadoop reports failure by returning false), so a
-    * half-failed swap aborts instead of deleting the aside copy.
+    * operator-judgment comment. Every FileSystem mutation goes through
+    * [[CheckedFs]], so a half-failed swap aborts instead of deleting the
+    * aside copy.
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
     val fs = fsFor(spark, new Path(storeDir))
@@ -222,10 +205,10 @@ object GraphIngest {
       val tmp = compactingPath(storeDir, sub)
       val old = precompactPath(storeDir, sub)
       write(spark.read.parquet(dir.toString), tmp.toString)
-      renameOrFail(fs, dir, old)
-      mkdirsOrFail(fs, dir)
-      renameOrFail(fs, tmp, new Path(s"$storeDir/$sub/batch=-1"))
-      deleteOrFail(fs, old)
+      CheckedFs.rename(fs, dir, old)
+      CheckedFs.mkdirs(fs, dir)
+      CheckedFs.rename(fs, tmp, new Path(s"$storeDir/$sub/batch=-1"))
+      CheckedFs.delete(fs, old)
     }
     fold("assign", (df, out) => df
       .select("vec_id", "e", "cent_id")
@@ -260,10 +243,10 @@ object GraphIngest {
       val tmp = compactingPath(storeDir, sub)
       val old = precompactPath(storeDir, sub)
       if (fs.exists(old)) {
-        deleteOrFail(fs, dir)
-        deleteOrFail(fs, tmp)
-        renameOrFail(fs, old, dir)
-      } else deleteOrFail(fs, tmp)
+        CheckedFs.delete(fs, dir)
+        CheckedFs.delete(fs, tmp)
+        CheckedFs.rename(fs, old, dir)
+      } else CheckedFs.delete(fs, tmp)
     }
   }
 }

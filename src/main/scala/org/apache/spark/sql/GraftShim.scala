@@ -34,12 +34,4 @@ object GraftShim {
 
   /** `schema` with every field nullable, nested ones too — as a file read types it. */
   def asNullable(schema: types.StructType): types.StructType = schema.asNullable
-
-  /** Spark's `SQLExecution.withThreadLocalCaptured`: `body` runs on `exec`
-    * with the caller's active session and local properties (job group,
-    * job tags, execution id).
-    */
-  def withThreadLocalCaptured[T](spark: SparkSession, exec: java.util.concurrent.ExecutorService)(
-      body: => T): java.util.concurrent.CompletableFuture[T] =
-    execution.SQLExecution.withThreadLocalCaptured(castToImpl(spark), exec)(body)
 }

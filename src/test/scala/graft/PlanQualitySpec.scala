@@ -147,6 +147,57 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("production merge: one shuffle, on (table, bucket), serves every table of a batch") {
+    // the micro-batch merges all its tables at once: one repartition on
+    // (table, bucket) meets the law's window, cell top-k and aggregate
+    // clustering and the partitioned staging write. A second exchange
+    // means a step re-shuffles, one per table means the merge forked
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, concat, lit, pmod, struct, to_json}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val env = graft.pipeline.Envelope.toCdcEventsToast(
+        graft.sources.Tables.events(spark, sfDir)).toDF()
+      .withColumn("tableName", concat(lit("t"), pmod(col("lsn"), lit(3L))))
+    def wire(from: Long, to: Long) = env.filter(col("lsn") >= from && col("lsn") < to)
+      .select(col("key").cast("binary").as("key"),
+        to_json(struct(env.columns.map(col): _*)).cast("binary").as("value"))
+    val half = env.agg(org.apache.spark.sql.functions.max("lsn")).head().getLong(0) / 2
+    val base = java.nio.file.Files.createTempDirectory("graft_planmerge").toString
+    val sink = graft.streaming.ChangeLogStream.fullProductionBatch(base, Long.MaxValue / 4) _
+    sink(wire(0L, half), 0L) // cold: the warm batch merges prior rows too
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qe.logical match {
+        case c: InsertIntoHadoopFsRelationCommand
+            if c.outputPath.getName.startsWith("state__staging_") => writes.add(qe)
+        case _ =>
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      sink(wire(half, Long.MaxValue), 1L)
+      var tries = 0
+      while (writes.isEmpty && tries < 100) { Thread.sleep(100); tries += 1 }
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size === 1, "one staged merge write per batch")
+    val p = writes.peek().executedPlan
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(p) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+    val onTableBucket = shuffles.collect {
+      case HashPartitioning(Seq(t: Attribute, b: Attribute), _)
+          if t.name == "__table" && b.name == "__bucket" => t
+    }
+    assert(shuffles.size === 1 && onTableBucket.size === 1,
+      s"expected exactly one shuffle, on (__table, __bucket):\n$p")
+  }
+
   test("unique-id replay dedup never sorts (DistinctByKey fast path)") {
     // dedup on a globally-unique id with k=1 takes the hash final pass:
     // the old FinalTopKExec form forced a full (key)-sort of every

@@ -1433,10 +1433,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("production topology: one failing table merge fails the batch, logs nothing, and replays clean") {
-    // the tables of a batch merge concurrently: a conflicting file in one
-    // table's store must still fail the whole batch before its progress
-    // records are written, and a replay once the file is gone must leave
-    // exactly what a clean run leaves
+    // the tables of a batch merge in one staged write: a conflicting file
+    // in one table's store must fail the whole batch before any table is
+    // published or its progress records are written, and a replay once
+    // the file is gone must leave exactly what a clean run leaves
     val (bad, clean) = (java.nio.file.Files.createTempDirectory("graft_prodfail").toString,
       java.nio.file.Files.createTempDirectory("graft_prodclean").toString)
     val batches = Seq(prodBatch(1L, 200, 2), prodBatch(201L, 200, 2))
@@ -1448,10 +1448,13 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.split('=')(1).toInt).min
     val planted = SinkSpec.plant(Seq(("public.t0:99", "not-a-long")).toDF("key", "state_lsn"),
       t0, bucket)
+    def t1Store() = spark.read.parquet(s"$bad/state/public.t1").collect().toSet
+    val t1AfterBatch0 = t1Store()
     val e = intercept[org.apache.spark.SparkException](run(bad, 1))
     assert(e.getMessage.contains("CANNOT_MERGE_SCHEMAS"), e.getMessage)
     assert(!new java.io.File(s"$bad/log/batch_id=1").exists(),
       "a failed batch must not log progress")
+    assert(t1Store() === t1AfterBatch0, "a failed batch must publish no table")
     assert(planted.delete())
     run(bad, 1); run(clean, 1)
     val consumed = batches.map(_.count()).sum
@@ -1462,8 +1465,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("production topology: every job of a warm batch carries the caller's job group") {
-    // the table merges run on pool threads; their jobs must still carry
-    // the caller's job group, so cancelling it cancels them
+    // every job of the batch, the merge's included, must carry the
+    // caller's job group, so cancelling it cancels them
     val base = java.nio.file.Files.createTempDirectory("graft_prodgroup").toString
     val sink = ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000) _
     sink(prodBatch(1L, 200, 2), 0L)
@@ -1477,29 +1480,87 @@ class StreamingSpec extends AnyFunSuite {
     assert(groups.forall(_ == "graft-warm-batch"), s"job groups: $groups")
   }
 
-  test("production topology: a warm micro-batch over two tables runs at most 16 Spark jobs") {
-    // the per-batch fixed cost is jobs, not data: decode + ledgers, one
-    // demux aggregate that also yields the progress records and the
-    // watermark, and per table merge one touched-bucket job and one
-    // keyed carry-forward pass, whose store schema comes from the footers
-    // on the driver. A law that re-derives the fence, a per-table
-    // progress scan, a watermark scan, a shuffled touched-bucket distinct
-    // or a footer-merge job shows up here first.
-    val base = java.nio.file.Files.createTempDirectory("graft_prodjobs").toString
-    val sink = ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000) _
-    sink(prodBatch(1L, 200, 2), 0L) // cold: creates the stores
-    for (b <- 1 to 2) {
-      val wire = prodBatch(1L + 200L * b, 200, 2)
-      val jobs = SparkJobs.during(spark)(sink(wire, b.toLong))
-      info(s"warm batch $b: $jobs jobs")
-      assert(jobs <= 16, s"warm batch $b ran $jobs jobs")
+  test("production topology: a warm micro-batch runs at most 8 Spark jobs, at 2 and at 8 tables") {
+    // the per-batch fixed cost is jobs, not data, and not tables: decode
+    // + ledgers, one demux aggregate that also yields the progress
+    // records, the watermark and every table's touched buckets, and ONE
+    // merge of every table — one shuffle on (table, bucket) and one
+    // staged write — whose store schemas come from the footers on the
+    // driver. A per-table job, a law that re-derives the fence, a
+    // progress or watermark scan, a touched-bucket job or a footer-merge
+    // job shows up here first.
+    val jobsAt = Seq(2, 8).map { tables =>
+      val base = java.nio.file.Files.createTempDirectory(s"graft_prodjobs$tables").toString
+      val sink = ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000) _
+      sink(prodBatch(1L, 200, tables), 0L) // cold: creates the stores
+      val warm = (1 to 2).map { b =>
+        val wire = prodBatch(1L + 200L * b, 200, tables)
+        val jobs = SparkJobs.during(spark)(sink(wire, b.toLong))
+        info(s"$tables tables, warm batch $b: $jobs jobs")
+        assert(jobs <= 8, s"$tables tables: warm batch $b ran $jobs jobs")
+        jobs
+      }
+      // a truncate of t0 (LSN 701, user 8, t0 at 2 and at 8 tables) rides
+      // the demux aggregate: the fence clears t0 with file-system calls
+      // and adds no job
+      val truncating = prodWire(truncateAt(prodEnv(601L, 200, tables), 701L))
+      val jobs = SparkJobs.during(spark)(sink(truncating, 3L))
+      info(s"$tables tables, warm batch 3 with a truncate: $jobs jobs")
+      assert(jobs <= 8, s"$tables tables: warm batch 3 with a truncate ran $jobs jobs")
+      warm
     }
-    // a truncate of t0 (LSN 701, user 8) rides the demux aggregate: the
-    // fence clears t0 with file-system calls and adds no job
-    val truncating = prodWire(truncateAt(prodEnv(601L, 200, 2), 701L))
-    val jobs = SparkJobs.during(spark)(sink(truncating, 3L))
-    info(s"warm batch 3 with a truncate: $jobs jobs")
-    assert(jobs <= 16, s"warm batch 3 with a truncate ran $jobs jobs")
+    assert(jobsAt(0) === jobsAt(1), s"jobs per warm batch at 2 and 8 tables: $jobsAt")
+  }
+
+  test("production topology: two tables whose envelopes share a key each keep their own row") {
+    // the merge keys by (table, bucket, key): an envelope key need not
+    // name its table, and one table's row must never overwrite another's
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = java.nio.file.Files.createTempDirectory("graft_prodsharedkey").toString
+    val env = prodEnv(1L, 40, 2).withColumn("key", lit("shared"))
+    ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000)(prodWire(env), 0L)
+    val admitted = env.filter(col("lsn") % 7 =!= 0)
+    val got = prodStore(base).map { case (t, k, lsn, _, tomb) => (t, k, lsn, tomb) }
+    val want = Seq("t0", "t1").map { t =>
+      val last = admitted.filter(col("tableName") === t)
+        .select(org.apache.spark.sql.functions.max("lsn")).as[Long].head()
+      val op = admitted.filter(col("lsn") === last).select("op").as[String].head()
+      (t, "shared", last, op == "delete")
+    }.toSet
+    assert(got === want, s"each table keeps its own row of key 'shared': $got")
+  }
+
+  test("production topology: a truncate whose bucket delete fails fails the batch; a replay clears the table") {
+    // the fence filters only the batch, never the store: a fence written
+    // over a bucket the truncate did not clear would serve the truncated
+    // rows forever. The fault file system reports a failed `__bucket=`
+    // delete by returning false, as Hadoop's mutators do
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfault.impl", classOf[FaultFs].getName)
+    conf.setBoolean("fs.graftfault.impl.disable.cache", true)
+    val base = "graftfault://" +
+      java.nio.file.Files.createTempDirectory("graft_prodfault").toString
+    // the fixture of the truncate test above: batch 1 truncates t0 at LSN
+    // 114, and only t0's three decodable events above it survive
+    import org.apache.spark.sql.functions.col
+    val fence = 114L
+    val (env0, env1) = (prodEnv(1L, 60, 2), prodEnv(61L, 60, 2))
+    val sink = ChangeLogStream.fullProductionBatch(base, 60L * 60 * 1000000) _
+    sink(prodWire(env0), 0L)
+    val truncating = prodWire(truncateAt(env1, fence))
+    def t0Keys() = prodStore(base).collect { case ("t0", k, _, _, _) => k }
+    val postFence = env1.filter(col("tableName") === "t0" && col("lsn") > fence &&
+      col("lsn") % 7 =!= 0).select("key").as[String].collect().toSet
+    assert(postFence.size === 3 && !t0Keys().subsetOf(postFence),
+      s"fixture: t0 holds ${t0Keys()}, post-fence keys $postFence")
+    FaultFs.failBucketDeletes = true
+    try intercept[java.io.IOException](sink(truncating, 1L))
+    finally FaultFs.failBucketDeletes = false
+    assert(!new java.io.File(new java.net.URI(base).getPath + "/log/batch_id=1").exists(),
+      "a failed batch must not log progress")
+    sink(truncating, 1L)
+    assert(t0Keys() === postFence,
+      "the replay must clear t0 down to the rows above its truncate")
   }
 
   test("production topology: a truncate clears its table only and fences stale replays, also through Topology.run") {
@@ -2088,4 +2149,20 @@ class StreamingSpec extends AnyFunSuite {
       "a failed-validation appendBatch must write nothing")
     CachePool.releaseAll()
   }
+}
+
+/** A local file system under its own scheme whose delete of a
+  * `__bucket=` path returns false while [[FaultFs.failBucketDeletes]] is
+  * set — a fault that needs no permissions, since the tests run as root.
+  */
+class FaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfault:///")
+  override def getScheme: String = "graftfault"
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (FaultFs.failBucketDeletes && p.getName.startsWith("__bucket=")) false
+    else super.delete(p, recursive)
+}
+
+object FaultFs {
+  @volatile var failBucketDeletes = false
 }
