@@ -16,9 +16,10 @@ import org.apache.spark.storage.StorageLevel
   * [[shared]] memoizes a built value per (session, dir, name) so every
   * consumer in the window gets the same instance. Neither may live
   * forever: a long-running session that touches many sfDirs would
-  * accumulate one entry per distinct plan. Entry points (Verify, Bench,
-  * user sessions via [[GraftSession]]) call [[releaseAll]] when a batch
-  * of work is done. Unpersisting an already-released DataFrame is a
+  * accumulate one entry per distinct plan. [[SparkEntry.walk]] (which
+  * Verify, Bench and the test suite's catalog sweep walk the catalog
+  * with) and user sessions via [[GraftSession]] call [[releaseAll]] when
+  * a batch of work is done. Unpersisting an already-released DataFrame is a
   * no-op, so double-release is safe.
   */
 object CachePool {
@@ -57,7 +58,7 @@ object CachePool {
     *
     * The memoized values are pure functions of the data at `dir`, so
     * reuse is safe within a release window, which is the only place it
-    * matters (Verify and Bench release at family boundaries). Keying by
+    * matters (SparkEntry.walk releases at family boundaries). Keying by
     * session means a second SparkSession never receives a DataFrame
     * bound to the first; keying by dir bounds the entries to the corpora
     * touched. Clearing on release drops every layer coherently: a memo

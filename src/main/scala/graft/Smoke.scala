@@ -193,8 +193,8 @@ object Smoke {
       CachePool.releaseAll()
     } else if (args.headOption.contains("time")) {
       // Isolation timing: runMain graft.Smoke time <q1>[,<q2>...] [sfDir]
-      // Bench-identical protocol (warmup, min of two passes, adaptive
-      // third) over ONLY the named queries in the given order, sharing
+      // Bench's protocol (warmup, Bench.passes, reported as their min)
+      // over ONLY the named queries in the given order, sharing
       // the CachePool — the tool for settling bench-order cache
       // effects: time a query alone, then prefixed by its family
       // siblings, and diff. SPARK_GRAFT_CPUS matches Bench's core count.
@@ -205,8 +205,7 @@ object Smoke {
       spark.sparkContext.setLogLevel("ERROR")
       val sfDir = if (args.length > 2) args(2)
         else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      spark.range(1 << 20).selectExpr("sum(id)", "count(distinct id % 7)").collect()
-      sources.Tables.lineitem(spark, sfDir).limit(1).collect()
+      Bench.warmup(spark, sfDir)
       // The SAME load-calibration micro-task Bench runs (pure codegen
       // range sum): printed before the set and after EVERY timed query
       // (r16 verdict #4 — a single global probe pair over-corrected
@@ -216,23 +215,11 @@ object Smoke {
       // check_bench.py scales it by the BRACKET's min — the same
       // window-local rule the bench's calib_fams families use. A
       // `Smoke time` transcript is a first-class comparison artifact.
-      def calibPass(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(1L << 24).selectExpr("sum(id * 3)").collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      calibPass(); calibPass() // JIT-warm the probe task itself (Bench's rule)
-      println(f"[time] calib ${math.round(calibPass() * 1000)}%d ms (before)")
+      println(f"[time] calib ${math.round(Bench.calibPass(spark) * 1000)}%d ms (before)")
       args(1).split(',').foreach { name =>
-        def pass(): Double = {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val m2 = math.min(pass(), pass())
-        val t = if (m2 > 1.5) math.min(m2, pass()) else m2
+        val t = Bench.passes(() => SparkEntry.queries(name)(spark, sfDir).count()).min
         println(f"[time] $name%-28s ${t}%.3f s")
-        println(f"[time] calib ${math.round(calibPass() * 1000)}%d ms (after)")
+        println(f"[time] calib ${math.round(Bench.calibPass(spark) * 1000)}%d ms (after)")
       }
       CachePool.releaseAll()
     } else if (args.headOption.contains("plan")) {

@@ -20,22 +20,13 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Name order groups each family's queries contiguously (shared
-    // persisted intermediates get reused while hot), and the family
-    // boundary release bounds the peak cache footprint to one family —
-    // the same policy Bench uses, for the same reason: carrying every
-    // family's MEMORY_AND_DISK blocks to the end raises the late-run
-    // memory floor for no reuse benefit.
-    var prevFamily: String = null
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      val fam = SparkEntry.family(name)
-      if (prevFamily != null && fam != prevFamily) CachePool.releaseAll()
-      prevFamily = fam
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    SparkEntry.walk(SparkEntry.queries) { (_, window) =>
+      window.filter(q => only(q._1)).foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -53,7 +44,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    CachePool.releaseAll()
     spark.stop()
   }
 }

@@ -6,43 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * 100 TB, empty partitions, empty days, and freshly-truncated tables
   * are routine inputs, and an operator that NPEs on SUM-of-nothing or
   * head()-of-nothing takes the whole pipeline down. Zero rows out is
-  * fine; an exception is not.
+  * fine; an exception is not. Each query's empty-corpus run is the one
+  * that CatalogSweep makes on its walk of the catalog (SparkEntry.walk).
   */
 class EmptyCorpusSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
-  /** Zero-row copies of every table, preserving physical schemas —
-    * events is copied in its raw nanos-as-long shape so
-    * `Tables.events`' ns→µs conversion still applies to the copy.
-    */
-  private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
-    val src = "/root/testdata/sf0.001"
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet").limit(0)
-        .write.parquet(s"$dir/$t.parquet")
-    }
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try spark.read.parquet(s"$src/events.parquet").limit(0)
-      .write.parquet(s"$dir/events.parquet")
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    dir
-  }
-
   test("every query executes on an empty corpus (0 rows ok, exceptions not)") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, emptyDir).count(); None }
-      catch { case e: Throwable =>
-        Some(s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
-      }
-    }
-    CachePool.releaseAll()
+    val failures = CatalogSweep.catalog.emptyFailures
     assert(failures.isEmpty, s"queries failing on empty input:\n${failures.mkString("\n")}")
   }
 

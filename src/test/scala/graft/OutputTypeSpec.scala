@@ -36,20 +36,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * CANNOT reproduce it — so the class ban here (mirrored by
   * check_oracle.py's decimal-schema FAIL) is the actual defense.
   * INTERVAL, BINARY, and nested types are rejected as before.
+  *
+  * The schemas checked are those of the one build of each query that
+  * CatalogSweep makes on its walk of the catalog (SparkEntry.walk).
   */
 class OutputTypeSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
-  private val sfDir = "/root/testdata/sf0.001"
 
-  private def allowed(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case FloatType | DoubleType                        => true
-    case StringType                                    => true
-    case DateType | TimestampType | TimestampNTZType   => true
-    case BooleanType                                   => true
-    case _: DecimalType                                => false // r12: every DECIMAL shipper hashed red
-    case _                                             => false
-  }
+  import OutputTypeSpec.allowed
 
   test("decimal canary: a deliberately DECIMAL-shipping schema is rejected") {
     import org.apache.spark.sql.functions.expr
@@ -63,15 +57,7 @@ class OutputTypeSpec extends AnyFunSuite {
   }
 
   test("every query ships only driver-hash-proven column types") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        // Schema resolution only — the plan is built, never executed.
-        val schema = fn(spark, sfDir).schema
-        schema.fields.collect {
-          case f if !allowed(f.dataType) =>
-            s"$name.${f.name}: ${f.dataType.sql}"
-        }
-    }
+    val offenders = CatalogSweep.catalog.typeOffenders
     assert(
       offenders.isEmpty,
       s"""Queries ship driver-hash-FRAGILE output column types:
@@ -84,5 +70,18 @@ class OutputTypeSpec extends AnyFunSuite {
          |Keep wide-decimal ACCUMULATORS, but cast the shipped cell to
          |BIGINT (exact cents/grid) or DOUBLE in BOTH the Spark select
          |and the oracle's outer SELECT.""".stripMargin)
+  }
+}
+
+object OutputTypeSpec {
+  /** The output column types allowed (see the class doc). */
+  def allowed(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case FloatType | DoubleType                        => true
+    case StringType                                    => true
+    case DateType | TimestampType | TimestampNTZType   => true
+    case BooleanType                                   => true
+    case _: DecimalType                                => false // r12: every DECIMAL shipper hashed red
+    case _                                             => false
   }
 }

@@ -6,12 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * cartesian. Queries that are brute-force BY DESIGN (documented pair
   * scans over the small embeddings/simhash spaces, with blocked scale
   * paths alongside) are whitelisted explicitly — additions to this list
-  * should hurt a little.
+  * should hurt a little. Each plan audited is the one that CatalogSweep
+  * records on its walk of the catalog (SparkEntry.walk).
   */
 class PlanAuditSpec extends AnyFunSuite {
-  lazy val spark = TestSession.spark
-  private val sfDir = "/root/testdata/sf0.001"
-
   /** intentional cross/pair scans (each has a blocked scale path). */
   private val intentionallyUnbounded = Set(
     "ann_cosine_topk",      // broadcast query set × corpus scan
@@ -239,7 +237,7 @@ class PlanAuditSpec extends AnyFunSuite {
                             // the O(types) state roll-up — bounded
   )
 
-  SparkEntry.queries.foreach { case (name, fn) =>
+  GraftSession.catalog.foreach { name =>
     if (!intentionallyUnbounded(name) && !name.endsWith("_clusters") &&
         name != "agg_cms_heavy_hitters" && name != "dedup_keep_canonical" &&
         name != "dedup_cluster_sizes") { // composes dedup_clusters
@@ -248,10 +246,9 @@ class PlanAuditSpec extends AnyFunSuite {
       // their component joins are key-equi by construction (covered by
       // their own oracle + spec). agg_cms_heavy_hitters builds its sketch
       // with driver-side actions at construction — its final plan is a
-      // LocalTableScan that can never contain a join, so auditing it
-      // would execute two full scans to check nothing.
+      // LocalTableScan that can never contain a join.
       test(s"plan audit: $name has no unintended cartesian") {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val plan = CatalogSweep.catalog.plan(name)
         assert(!plan.contains("CartesianProduct"),
           s"$name plans a CartesianProduct:\n$plan")
         assert(!plan.contains("BroadcastNestedLoopJoin"),

@@ -6,13 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * but "the plan you'd WANT at 100 TB": filters reach the parquet scan,
   * projections prune columns, dimension joins broadcast, aggregations
   * hash (not sort), and global top-k fuses into TakeOrdered.
+  *
+  * `plan(name)` and the two whole-catalog sweeps read the plans that
+  * CatalogSweep records on its walk of the catalog (SparkEntry.walk);
+  * a test that needs a live plan object builds its own query.
   */
 class PlanQualitySpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+  private def plan(name: String): String = CatalogSweep.catalog.plan(name)
 
   /** The plan text with every InMemoryRelation's cached-build subtree
     * removed. The r18 family-window shared relations (Tables.*Shared,
@@ -112,10 +115,9 @@ class PlanQualitySpec extends AnyFunSuite {
     // demonstrates the BUILT-IN max_by (string buffer → SortAggregate);
     // collect_list in agg_string_concat is inherently object-based.
     val allow = Set("agg_argmax", "agg_string_concat")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
+    val offenders = CatalogSweep.catalog.sortAggregates
       .filterNot(allow)
       .filterNot(n => n == "dedup_clusters") // driver-side loop at construction
-      .filter(n => plan(n).contains("SortAggregate"))
     assert(offenders.isEmpty, s"SortAggregate fallback in: $offenders")
   }
 
@@ -482,7 +484,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // Mirror of the no-SortAggregate sweep: every query either has zero
     // partitionless windows, or appears here with the reason its
     // windowed relation is bounded. Additions should hurt a little.
-    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    // (the sweep reads the WindowExec/WindowGroupLimitExec nodes of each
+    // query's initial adaptive plan)
     val bounded = Map(
       "events_cum_users" -> "O(days): first-activity day roll-up",
       "events_changepoint" -> "O(days): daily counts (cusum + argmax pass)",
@@ -505,34 +508,19 @@ class PlanQualitySpec extends AnyFunSuite {
         "O(10): first-seen decile census cumulative",
       "events_ab_holm" ->
         "O(metrics): rank + step-down over the 4-row metric relation")
-    val c = spark.conf
-    val saved = c.get("spark.sql.adaptive.enabled")
-    try {
-      c.set("spark.sql.adaptive.enabled", "false")
-      val skip = Set("agg_cms_heavy_hitters", "dedup_keep_canonical",
-        "dedup_cluster_sizes") // composes dedup_clusters
-      val names = SparkEntry.queries.keys.toSeq.sorted
-        .filterNot(skip).filterNot(_.endsWith("_clusters"))
-      val offenders = names.filterNot(bounded.contains).filter { name =>
-        SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.collect {
-            case w: WindowExec if w.partitionSpec.isEmpty => w
-            case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w
-          }.nonEmpty
-      }
-      assert(offenders.isEmpty,
-        s"undocumented partitionless window (single-task funnel) in: $offenders")
-      // keep the whitelist honest: an entry whose query no longer plans
-      // a partitionless window must be deleted, not left to rot
-      val stale = bounded.keys.toSeq.sorted.filter { name =>
-        SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.collect {
-            case w: WindowExec if w.partitionSpec.isEmpty => w
-            case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w
-          }.isEmpty
-      }
-      assert(stale.isEmpty, s"whitelist entries with no partitionless window: $stale")
-    } finally c.set("spark.sql.adaptive.enabled", saved)
+    val sweep = CatalogSweep.catalog
+    val skip = Set("agg_cms_heavy_hitters", "dedup_keep_canonical",
+      "dedup_cluster_sizes") // composes dedup_clusters
+    val offenders = sweep.partitionlessWindows
+      .filterNot(skip).filterNot(_.endsWith("_clusters"))
+      .filterNot(bounded.contains)
+    assert(offenders.isEmpty,
+      s"undocumented partitionless window (single-task funnel) in: $offenders")
+    // keep the whitelist honest: an entry whose query no longer plans
+    // a partitionless window must be deleted, not left to rot
+    val stale = bounded.keys.toSeq.sorted
+      .filter(sweep.facts(_).partitionlessWindows.isEmpty)
+    assert(stale.isEmpty, s"whitelist entries with no partitionless window: $stale")
   }
 
   test("every registered boundary-sample rate stays under the 1/32 ceiling") {
