@@ -25,13 +25,17 @@ object LsnCheckpoint {
   /** Last committed LSN, or -1 when no checkpoint exists yet (the
     * reference returns 0 and streams from the slot's start).
     */
-  def read(spark: SparkSession, path: String): Long = {
+  def read(spark: SparkSession, path: String): Long =
+    readText(spark, path).fold(-1L)(_.trim.toLong)
+
+  /** The text of a small metadata file, or None when it does not exist. */
+  private[graft] def readText(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
+    if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim.toLong
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
       finally in.close()
     }
   }
@@ -44,13 +48,17 @@ object LsnCheckpoint {
     * single NameNode operation. A crash at any instant leaves either the
     * previous or the new value readable — never neither.
     */
-  def write(spark: SparkSession, path: String, lsn: Long): Unit = {
+  def write(spark: SparkSession, path: String, lsn: Long): Unit =
+    replace(spark, path, lsn.toString)
+
+  /** [[write]]'s atomic replace, of any text (a store's schema marker). */
+  private[graft] def replace(spark: SparkSession, path: String, text: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val tmp = new Path(path + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write(lsn.toString.getBytes(StandardCharsets.UTF_8))
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     fs match {
       case _: org.apache.hadoop.fs.LocalFileSystem |

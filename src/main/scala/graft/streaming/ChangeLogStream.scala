@@ -1,25 +1,31 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.api.InitContext
 import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftShim, SparkSession, sources}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, Cast, EqualTo, EvalMode, Expression, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.DataSourceUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
+import graft.functions.expressions.BatchLong
 import graft.pipeline.ChangeLog
 
 /** A raw change event as it arrives on the stream (the `events` corpus
@@ -669,19 +675,27 @@ object ChangeLogStream {
     *
     * Per table, on the driver, in table order: the recovery sweep of
     * `<dir>__prev`, the pinned count, the fence ([[advanceFence]]), the
-    * head ([[advanceHead]]), and the touched buckets' read with the
-    * footer schema, so a store whose schema does not merge fails the
-    * batch before any job. Then ONE job: the rows above their table's
-    * fence and the prior rows, repartitioned once on (table, bucket),
-    * which meets the law's clustering on (table, bucket, key) and the
-    * `partitionBy(table, bucket)` staging write (each table's count,
-    * fence and head are columns looked up by table). A failed job
-    * publishes nothing. Then per (table, bucket): move the live bucket
-    * aside, rename the staged one in, drop the aside copy, each step
-    * checked ([[CheckedFs]]). A crash mid-publish is safe under replay:
-    * re-merging an updated bucket is a no-op, and the sweep restores a
-    * bucket caught between its renames. (A real deployment would use a
-    * Delta/Iceberg MERGE; plain parquet keeps this repo dependency-free.)
+    * head ([[advanceHead]]), and the touched buckets' read: each touched
+    * bucket directory is listed, and its files are read as explicit
+    * paths under the store's base path, in the store's schema
+    * ([[storeSchema]]: the `_graft_schema` marker merged with those
+    * files' footers), so a store whose schema does not merge fails the
+    * batch before any job. No untouched bucket is listed or opened.
+    * Then ONE job: the rows above their table's fence and the prior
+    * rows, repartitioned once on (table, bucket), which meets the law's
+    * clustering on (table, bucket, key) and the `partitionBy(table,
+    * bucket)` staging write (each table's count, fence and head are
+    * columns looked up by table, and reach generated code by reference,
+    * so a warm batch compiles nothing). A failed job publishes nothing.
+    * Then each table's schema marker is replaced atomically by its merge
+    * with the staged schema, when that widens it, so the marker only
+    * ever widens and covers every file before the file publishes. Then
+    * per (table, bucket): move the live bucket aside, rename the staged
+    * one in, drop the aside copy, each step checked ([[CheckedFs]]). A
+    * crash mid-publish is safe under replay: re-merging an updated
+    * bucket is a no-op, and the sweep restores a bucket caught between
+    * its renames. (A real deployment would use a Delta/Iceberg MERGE;
+    * plain parquet keeps this repo dependency-free.)
     */
   private def upsertBatchImpl(root: String, tables: IndexedSeq[Target], law: Law,
       numBuckets: Int)(batch: DataFrame, batchId: Long): Unit = {
@@ -703,30 +717,35 @@ object ChangeLogStream {
         }
         CheckedFs.delete(fs, backupRoot)
       }
-      val nb = readOrPinBucketCount(fs, target, numBuckets)
+      val nb = readOrPinBucketCount(spark, fs, t.dir, numBuckets)
       val fence = if (law == CarryForward) advanceFence(spark, t.dir, t.truncateMax) else -1L
       val head = if (law.retains) advanceHead(spark, t.dir, t.batchMax) else -1L
       (nb.toLong, fence, head)
     }
     val (nbs, fences, heads) = layouts.unzip3
     def ofTable(values: Seq[Long]): Column =
-      if (values.distinct.length == 1) lit(values.head)
+      if (values.distinct.length == 1) GraftShim.column(BatchLong(values.head))
       else element_at(typedLit(values), col(TableCol) + 1)
     val rows = (if (fences.forall(_ < 0)) batch else batch.filter(aboveFence(ofTable(fences))))
       .withColumn(BucketCol, bucketOf(law.keyCols, ofTable(nbs)))
     val merging = tables.indices.filter(tables(_).touched.nonEmpty)
     if (merging.isEmpty) return
-    // the store's merged footer schema + allowMissingColumns: an upstream
-    // ALTER TABLE ADD COLUMN (CDC tables drift over a pipeline's
-    // lifetime) must not kill the sink. Added columns surface as NULL on
-    // the side that lacks them — the Delta/Iceberg MERGE evolution
-    // contract; type CHANGES still refuse loudly (SchemaEvolutionSpec
-    // documents the explicit per-epoch widening path for those).
-    val prior = merging.flatMap { i =>
-      val target = new Path(tables(i).dir)
-      if (!fs.exists(target) || !fs.listStatus(target).exists(_.isDirectory)) None
-      else Some(readStore(spark, tables(i).dir)
-        .filter(col(BucketCol).isin(tables(i).touched.map(Int.box): _*))
+    // the store's schema + allowMissingColumns: an upstream ALTER TABLE
+    // ADD COLUMN (CDC tables drift over a pipeline's lifetime) must not
+    // kill the sink. Added columns surface as NULL on the side that lacks
+    // them — the Delta/Iceberg MERGE evolution contract; type CHANGES
+    // still refuse loudly (SchemaEvolutionSpec documents the explicit
+    // per-epoch widening path for those). Only the touched buckets are
+    // listed, and only their footers read.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val marked = merging.map(i => markedSchema(spark, tables(i).dir))
+    val recorded = merging.zip(marked).map { case (i, m) => m.orElse(globbedSchema(spark, tables(i).dir)) }
+    val prior = merging.zip(recorded).flatMap { case (i, schema) =>
+      val dir = tables(i).dir
+      val files = tables(i).touched.toSeq.flatMap(bucketFiles(fs, dir, _))
+      if (files.isEmpty) None
+      else Some(readFiles(spark, dir, files,
+          storeSchema(spark, dir, schema.toSeq ++ files.map(f => sparkSchema(footer(conf, f)))))
         .withColumn(TableCol, lit(i)))
     }
     val keys = TableCol +: BucketCol +: law.keyCols
@@ -744,6 +763,14 @@ object ChangeLogStream {
     val stagingRoot = new Path(root + s"__staging_$batchId")
     merged.write.partitionBy(TableCol, BucketCol).mode("overwrite")
       .parquet(stagingRoot.toString)
+    // widen each store's schema marker by what was staged, before any of
+    // its buckets publishes
+    val stagedSchema = StructType(merged.schema.filterNot(f => f.name == TableCol || f.name == BucketCol))
+    merging.lazyZip(marked).lazyZip(recorded).foreach { (i, marker, schema) =>
+      val widened = storeSchema(spark, tables(i).dir, schema.toSeq :+ stagedSchema)
+      if (!marker.contains(widened))
+        graft.pipeline.LsnCheckpoint.replace(spark, s"${tables(i).dir}/$SchemaMarker", widened.json)
+    }
     // publish concurrently on a bounded pool: the protocol is per
     // (table, bucket) — only the order WITHIN a bucket is an invariant —
     // and serial renames dominate a batch against an object store
@@ -794,12 +821,12 @@ object ChangeLogStream {
     * table is created; later batches use the PINNED value so a changed
     * default can never silently split keys across layouts.
     */
-  private def readOrPinBucketCount(fs: org.apache.hadoop.fs.FileSystem,
-      target: Path, numBuckets: Int): Int = {
+  private def readOrPinBucketCount(spark: SparkSession, fs: FileSystem,
+      tableDir: String, numBuckets: Int): Int = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    readBucketCount(fs, target).getOrElse {
-      fs.mkdirs(target)
-      val out = fs.create(new Path(target, "_graft_buckets"), true)
+    readBucketCount(spark, tableDir).getOrElse {
+      fs.mkdirs(new Path(tableDir))
+      val out = fs.create(new Path(tableDir, "_graft_buckets"), true)
       try out.write(numBuckets.toString.getBytes("UTF-8"))
       finally out.close()
       numBuckets
@@ -807,15 +834,31 @@ object ChangeLogStream {
   }
 
   /** The pinned bucket count, if the table has been created. */
-  private def readBucketCount(fs: org.apache.hadoop.fs.FileSystem,
-      target: Path): Option[Int] = {
-    val marker = new Path(target, "_graft_buckets")
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try Some(scala.io.Source.fromInputStream(in).mkString.trim.toInt)
-      finally in.close()
-    }
+  private def readBucketCount(spark: SparkSession, tableDir: String): Option[Int] =
+    graft.pipeline.LsnCheckpoint.readText(spark, s"$tableDir/_graft_buckets").map(_.trim.toInt)
+
+  /** The schema marker beside `_graft_buckets`: the store's Spark schema
+    * as JSON. [[upsertBatchImpl]] widens it with every schema it stages,
+    * so it covers every data file of the store, and a reader needs no
+    * footer beyond those of the files it reads. A TRUNCATE's clear
+    * deletes it with the buckets ([[advanceFence]]).
+    */
+  private val SchemaMarker = "_graft_schema"
+
+  /** The store's [[SchemaMarker]], if it has one. */
+  private def markedSchema(spark: SparkSession, tableDir: String): Option[StructType] =
+    graft.pipeline.LsnCheckpoint.readText(spark, s"$tableDir/$SchemaMarker")
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** The merged footers of every data file of the store, which is what
+    * its [[SchemaMarker]] caches: a reader's stand-in for the marker of
+    * a store written before the marker. None without a data file.
+    */
+  private def globbedSchema(spark: SparkSession, tableDir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = storeFiles(spark, tableDir)
+    if (files.isEmpty) None
+    else Some(storeSchema(spark, tableDir, files.map(f => sparkSchema(footer(conf, f)))))
   }
 
   /** The latest-state table without the layout's partition column,
@@ -829,11 +872,14 @@ object ChangeLogStream {
 
   /** Point lookup served on the driver: it reads the one bucket the key
     * can live in and returns a local DataFrame, so neither the lookup
-    * nor a `collect` of its result starts a Spark job. The rows come
-    * from the `__bucket=<b>/` data files through Spark's parquet row
-    * reader, with the key equality pushed down as a row-group filter;
-    * other buckets' files are never opened. The result has the
-    * store's merged schema ([[storeSchema]]) plus [[BucketCol]], like a
+    * nor a `collect` of its result starts a Spark job. It opens the
+    * table's two markers, lists the key's `__bucket=<b>/` directory and
+    * opens each of its data files once: one open reads the footer and
+    * then the rows, through Spark's parquet row materializer, with the
+    * key equality pushed down as a row-group filter. No other bucket is
+    * listed or opened, so a lookup costs the same at 4 buckets as at
+    * 1,024. The result has the store's schema ([[storeSchema]]: the
+    * marker merged with the bucket's footers) plus [[BucketCol]], like a
     * Spark read of the store filtered on the key.
     *
     * Each key value is cast to its key column's type in the store
@@ -856,119 +902,192 @@ object ChangeLogStream {
       keyCols: Seq[String], keyValues: Seq[Any], numBuckets: Int = -1): DataFrame = {
     require(keyCols.nonEmpty && keyCols.length == keyValues.length,
       "at least one key column, and one value per key column")
-    val target = new Path(tableDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val nb = readBucketCount(target.getFileSystem(conf), target).getOrElse {
+    val nb = readBucketCount(spark, tableDir).getOrElse {
       require(numBuckets > 0,
         s"$tableDir has no _graft_buckets marker and no explicit bucket count was given")
       numBuckets
     }
-    val footers = storeFooters(spark, tableDir)
-    val schema = storeSchema(spark, tableDir, footers)
     val caseSensitive = spark.conf.get(SQLConf.CASE_SENSITIVE.key).toBoolean
     val tz = Some(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
     // (ordinal, type, value cast to the column type — null if it cannot)
-    val keys: Seq[(Int, DataType, Any)] = keyCols.zip(keyValues).map { case (k, v) =>
+    def keysIn(schema: StructType): Seq[(Int, DataType, Any)] = keyCols.zip(keyValues).map { case (k, v) =>
       val i = schema.fieldNames.indexWhere(n => n == k || !caseSensitive && n.equalsIgnoreCase(k))
       require(i >= 0, s"key column $k is not in the schema of $tableDir: ${schema.simpleString}")
       val dt = schema(i).dataType
       (i, dt, Cast(Literal(v), dt, tz, EvalMode.TRY).eval())
     }
-    val bucket = bucketExpr(keys.map { case (_, dt, v) => Literal(v, dt) }, Literal(nb.toLong))
-      .eval().asInstanceOf[Int]
-    val isKey = keys.map { case (i, dt, v) =>
-      EqualTo(BoundReference(i, dt, nullable = true), Literal(v, dt)): Expression
-    }.reduce(And)
-    val pushed = keys.map { case (i, dt, v) =>
-      (schema(i).name, CatalystTypeConverters.convertToScala(v, dt)) }
-    val rows = footers.filter(_._1.getPath.getParent.getName == s"$BucketCol=$bucket")
-      .flatMap { case (file, meta) =>
-        matchingRows(spark, file, meta, schema, pushed, isKey.eval(_) == true) }
-      .map(r => InternalRow.fromSeq(r.toSeq(schema) :+ bucket))
-    val local = GraftShim.ofRows(spark, LocalRelation(
-      DataTypeUtils.toAttributes(schema.add(BucketCol, IntegerType)), rows))
-    keyCols.zip(keyValues).foldLeft(local) {
-      case (df, (k, v)) => df.filter(col(k) === lit(v))
-    }
+    // the recorded schema types the key; a bucket file cannot retype it
+    val recorded = markedSchema(spark, tableDir).orElse(globbedSchema(spark, tableDir))
+      .getOrElse(storeSchema(spark, tableDir, Nil))
+    val bucket = bucketExpr(keysIn(recorded).map { case (_, dt, v) => Literal(v, dt) },
+      Literal(nb.toLong)).eval().asInstanceOf[Int]
+    val files = scala.collection.mutable.ArrayBuffer.empty[ParquetFileReader]
+    try {
+      bucketFiles(new Path(tableDir).getFileSystem(conf), tableDir, bucket).foreach { f =>
+        files += ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+          HadoopReadOptions.builder(conf, f.getPath).build())
+      }
+      val schema = storeSchema(spark, tableDir,
+        recorded +: files.toSeq.map(f => sparkSchema(f.getFooter.getFileMetaData)))
+      val keys = keysIn(schema)
+      val isKey = keys.map { case (i, dt, v) =>
+        EqualTo(BoundReference(i, dt, nullable = true), Literal(v, dt)): Expression
+      }.reduce(And)
+      val pushed = keys.map { case (i, dt, v) =>
+        (schema(i).name, CatalystTypeConverters.convertToScala(v, dt)) }
+      val readConf = rowReaderConf(spark, schema)
+      val rows = files.toSeq.flatMap(matchingRows(spark, readConf, _, pushed, isKey.eval(_) == true))
+        .map(r => InternalRow.fromSeq(r.toSeq(schema) :+ bucket))
+      val local = GraftShim.ofRows(spark, LocalRelation(
+        DataTypeUtils.toAttributes(schema.add(BucketCol, IntegerType)), rows))
+      keyCols.zip(keyValues).foldLeft(local) {
+        case (df, (k, v)) => df.filter(col(k) === lit(v))
+      }
+    } finally files.foreach(_.close())
   }
 
-  /** Every data file of the store with its parquet footer, read on the
-    * driver (row groups skipped), in path order. Names starting with
-    * `_` or `.` are not data, as for Spark's file index.
+  /** Names starting with `_` or `.` are not data, as for Spark's file index. */
+  private def isData(st: FileStatus): Boolean =
+    st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
+
+  /** Every data file of the store, in path order: one glob over every
+    * bucket, so only the readers of the whole store (and a store without
+    * a [[SchemaMarker]]) call it.
     */
-  private def storeFooters(spark: SparkSession,
-      tableDir: String): Seq[(FileStatus, FileMetaData)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = new Path(tableDir, s"$BucketCol=*/*")
-    Option(files.getFileSystem(conf).globStatus(files,
-        (p: Path) => !p.getName.startsWith("_") && !p.getName.startsWith(".")))
-      .fold(Seq.empty[FileStatus])(_.toSeq.filter(_.isFile).sortBy(_.getPath.toString))
-      .map(f => f -> ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
-        ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData)
+  private def storeFiles(spark: SparkSession, tableDir: String): Seq[FileStatus] = {
+    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(fs.makeQualified(new Path(tableDir, s"$BucketCol=*/*"))))
+      .fold(Seq.empty[FileStatus])(_.toSeq.filter(isData).sortBy(_.getPath.toString))
   }
 
-  /** The store's data schema: Spark's schema of each data file (the row
-    * metadata Spark writes into the footer, else the converted parquet
-    * schema), folded with Spark's own `StructType.merge` — what a
-    * `mergeSchema` read infers, without the Spark job that read runs
-    * over the footers. A conflicting column type fails with the same
-    * `CANNOT_MERGE_SCHEMAS` error. A store with no data file fails as a
-    * plain read of it does (`UNABLE_TO_INFER_SCHEMA`); no schema is
-    * guessed. Every store reader takes its schema from here.
+  /** The data files of bucket `b`, in path order; none when the bucket
+    * has no directory. One listing of that directory only.
+    */
+  private def bucketFiles(fs: FileSystem, tableDir: String, b: Int): Seq[FileStatus] =
+    try fs.listStatus(fs.makeQualified(new Path(tableDir, s"$BucketCol=$b")))
+      .toSeq.filter(isData).sortBy(_.getPath.toString)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** A data file's parquet footer, read on the driver (row groups skipped). */
+  private def footer(conf: Configuration, file: FileStatus): FileMetaData =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+
+  /** Spark's schema of a data file: the row metadata Spark writes into
+    * the footer, else the converted parquet schema.
+    */
+  private def sparkSchema(meta: FileMetaData): StructType =
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+
+  /** The store's data schema, as a reader sees it: the schemas it was
+    * given — the store's [[SchemaMarker]] and the footers of the files
+    * the reader opens — folded with Spark's own `StructType.merge`, what
+    * a `mergeSchema` read infers, without the Spark job that read runs
+    * over the footers. A lookup merges the marker with its bucket's
+    * footers, the merge with its touched buckets' footers, and
+    * [[readState]] with every footer of the store. A conflicting column
+    * type fails with the same `CANNOT_MERGE_SCHEMAS` error. A store with
+    * no marker and no data file fails as a plain read of it does
+    * (`UNABLE_TO_INFER_SCHEMA`); no schema is guessed.
     */
   private def storeSchema(spark: SparkSession, tableDir: String,
-      footers: Seq[(FileStatus, FileMetaData)]): StructType = {
+      schemas: Seq[StructType]): StructType = {
     val caseSensitive = spark.conf.get(SQLConf.CASE_SENSITIVE.key).toBoolean
-    val schemas = footers.map { case (_, meta) =>
-      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
-    }
     if (schemas.isEmpty) spark.read.parquet(tableDir).schema // raises Spark's inference error
     else GraftShim.asNullable(schemas.reduceLeft(GraftShim.mergeSchemas(_, _, caseSensitive)))
   }
 
-  /** The store as a Spark read with its merged schema ([[storeSchema]])
-    * and the [[BucketCol]] partition column.
+  /** The whole store as a Spark read with its merged schema
+    * ([[storeSchema]] over the marker and every footer) and the
+    * [[BucketCol]] partition column.
     */
-  private def readStore(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.schema(storeSchema(spark, tableDir, storeFooters(spark, tableDir)))
-      .parquet(tableDir)
+  private def readStore(spark: SparkSession, tableDir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = storeFiles(spark, tableDir)
+    readFiles(spark, tableDir, files, storeSchema(spark, tableDir,
+      markedSchema(spark, tableDir).toSeq ++ files.map(f => sparkSchema(footer(conf, f)))))
+  }
 
-  /** The rows of one data file that satisfy `keep`, read on the driver
-    * in `schema` through Spark's parquet row reader — columns the file
-    * lacks read as NULL — with the `keys` equalities (column name, value
-    * as Spark's filter API types it) pushed down as a row-group filter.
+  /** `files` of the store at `tableDir` as a Spark read in `schema`, with
+    * the [[BucketCol]] partition column: their bucket directories are
+    * the read's paths, `tableDir` its base path, and the listing is the
+    * one the caller already made, so the read lists no directory (and
+    * starts no listing job, however many buckets it covers).
     */
-  private def matchingRows(spark: SparkSession, file: FileStatus,
-      meta: FileMetaData, schema: StructType, keys: Seq[(String, Any)],
-      keep: InternalRow => Boolean): Seq[InternalRow] = {
-    def conf(key: String): String = spark.conf.get(key)
-    val hadoopConf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
-    // the session flags Spark's parquet schema converter reads
+  private def readFiles(spark: SparkSession, tableDir: String, files: Seq[FileStatus],
+      schema: StructType): DataFrame = {
+    val listed = files.groupBy(_.getPath.getParent)
+    val known = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path).map(_.toArray)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, listed.keys.toSeq.sortBy(_.toString),
+      Map("basePath" -> tableDir), Some(schema), known)
+    GraftShim.ofRows(spark, LogicalRelation(HadoopFsRelation(index, index.partitionSchema,
+      schema, None, new ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** The configuration of [[matchingRows]]: the session's, with the
+    * requested row schema and the session flags Spark's parquet schema
+    * converter reads. A copy of an already-loaded configuration, made
+    * once per lookup: it parses no resource file.
+    */
+  private def rowReaderConf(spark: SparkSession, schema: StructType): Configuration = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
     Seq(SQLConf.PARQUET_BINARY_AS_STRING.key, SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
         SQLConf.CASE_SENSITIVE.key, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
         SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key)
-      .foreach(k => hadoopConf.set(k, conf(k)))
+      .foreach(k => conf.set(k, spark.conf.get(k)))
+    conf
+  }
+
+  /** The rows of one open data file that satisfy `keep`, read on the
+    * driver in the requested schema of `conf` ([[rowReaderConf]])
+    * through Spark's parquet row materializer — columns the file lacks
+    * read as NULL — from the row groups the `keys` equalities (column
+    * name, value as Spark's filter API types it) do not rule out by
+    * their statistics. The file is read through the reader that already
+    * holds its footer: it is not opened again.
+    */
+  private def matchingRows(spark: SparkSession, conf: Configuration, file: ParquetFileReader,
+      keys: Seq[(String, Any)], keep: InternalRow => Boolean): Seq[InternalRow] = {
+    def session(key: String): String = spark.conf.get(key)
+    val meta = file.getFooter.getFileMetaData
     val kv = meta.getKeyValueMetaData
-    val rebase = DataSourceUtils.datetimeRebaseSpec(k => kv.get(k), conf(SQLConf.PARQUET_REBASE_MODE_IN_READ.key))
+    val rebase = DataSourceUtils.datetimeRebaseSpec(k => kv.get(k), session(SQLConf.PARQUET_REBASE_MODE_IN_READ.key))
     val filters = new ParquetFilters(meta.getSchema,
-      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_DATE_ENABLED.key).toBoolean,
-      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_TIMESTAMP_ENABLED.key).toBoolean,
-      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_DECIMAL_ENABLED.key).toBoolean,
-      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_STRING_PREDICATE_ENABLED.key).toBoolean,
-      conf(SQLConf.PARQUET_FILTER_PUSHDOWN_INFILTERTHRESHOLD.key).toInt,
-      conf(SQLConf.CASE_SENSITIVE.key).toBoolean, rebase)
+      session(SQLConf.PARQUET_FILTER_PUSHDOWN_DATE_ENABLED.key).toBoolean,
+      session(SQLConf.PARQUET_FILTER_PUSHDOWN_TIMESTAMP_ENABLED.key).toBoolean,
+      session(SQLConf.PARQUET_FILTER_PUSHDOWN_DECIMAL_ENABLED.key).toBoolean,
+      session(SQLConf.PARQUET_FILTER_PUSHDOWN_STRING_PREDICATE_ENABLED.key).toBoolean,
+      session(SQLConf.PARQUET_FILTER_PUSHDOWN_INFILTERTHRESHOLD.key).toInt,
+      session(SQLConf.CASE_SENSITIVE.key).toBoolean, rebase)
     val pushed = keys.collect { case (k, v) if v != null => filters.createFilter(sources.EqualTo(k, v)) }
       .flatten.reduceOption(FilterApi.and)
     val support = new ParquetReadSupport(None, false, rebase,
-      DataSourceUtils.int96RebaseSpec(k => kv.get(k), conf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key)))
-    val reader = ParquetReader.builder(support, file.getPath).withConf(hadoopConf)
-      .withFilter(pushed.fold(FilterCompat.NOOP)(FilterCompat.get)).build()
-    // the reader reuses its row object: copy what is kept
-    try Iterator.continually(reader.read()).takeWhile(_ != null).filter(keep).map(_.copy()).toList
-    finally reader.close()
+      DataSourceUtils.int96RebaseSpec(k => kv.get(k), session(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key)))
+    // what parquet's own record reader does per file: the requested
+    // schema, its materializer, then one record reader per row group
+    val context = support.init(new InitContext(conf,
+      kv.asScala.map { case (k, v) => k -> java.util.Collections.singleton(v) }.asJava, meta.getSchema))
+    file.setRequestedSchema(context.getRequestedSchema)
+    val materializer = support.prepareForRead(conf, kv, meta.getSchema, context)
+    val io = new ColumnIOFactory(meta.getCreatedBy)
+      .getColumnIO(context.getRequestedSchema, meta.getSchema, true)
+    val groups = file.getRowGroups
+    val kept = pushed.fold(groups)(p => RowGroupFilter.filterRowGroups(FilterCompat.get(p), groups, meta.getSchema))
+      .asScala.toSet
+    groups.asScala.indices.filter(i => kept(groups.get(i))).flatMap { i =>
+      val pages = file.readRowGroup(i)
+      val records = io.getRecordReader(pages, materializer, FilterCompat.NOOP)
+      // the materializer reuses its row object: copy what is kept
+      Iterator.fill(pages.getRowCount.toInt)(records.read()).filter(keep).map(_.copy()).toList
+    }
   }
 
   /** D12 index routing as physical layout: the reference routes each
@@ -1053,7 +1172,7 @@ object ChangeLogStream {
     /** True for a row the mark admits, else false — never null. */
     val onTime: org.apache.spark.sql.Column =
       if (prev < 0) lit(true)
-      else coalesce(eventMicros >= prev - delayUs, lit(false))
+      else coalesce(eventMicros >= GraftShim.column(BatchLong(prev - delayUs)), lit(false))
 
     /** Records this batch's mark, max(prev, batch max): monotone, and
       * deterministic on replay because the same inputs give the same
@@ -1130,9 +1249,7 @@ object ChangeLogStream {
     */
   private def storeLayout(spark: SparkSession, dir: String, numBuckets: Int): (Int, Long) = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    val target = new Path(dir)
-    (readBucketCount(target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
-      .getOrElse(numBuckets),
+    (readBucketCount(spark, dir).getOrElse(numBuckets),
       graft.pipeline.LsnCheckpoint.read(spark, dir + "__fence"))
   }
 
@@ -1155,10 +1272,11 @@ object ChangeLogStream {
   /** The table's TRUNCATE fence, persisted at `tableDir__fence`
     * ([[graft.pipeline.LsnCheckpoint]]'s atomic replace), advanced to
     * `truncateMax` when that is newer — after clearing the moved-aside
-    * copies and then every bucket, in that order, each delete CHECKED:
-    * the fence filters only the batch, never the store, so a fence
-    * written over a bucket that was not cleared would serve the
-    * truncated rows forever. Returns the fence, -1 for a table never
+    * copies, then every bucket, then the [[SchemaMarker]] (a cleared
+    * store has no schema, as before its first batch), in that order,
+    * each delete CHECKED: the fence filters only the batch, never the
+    * store, so a fence written over a bucket that was not cleared would
+    * serve the truncated rows forever. Returns the fence, -1 for a table never
     * truncated. Without a newer truncate this costs one existence check.
     */
   private def advanceFence(spark: SparkSession, tableDir: String,
@@ -1172,6 +1290,7 @@ object ChangeLogStream {
       CheckedFs.delete(fs, new Path(tableDir + "__prev"))
       Option(fs.globStatus(new Path(target, s"$BucketCol=*")))
         .foreach(_.foreach(st => CheckedFs.delete(fs, st.getPath)))
+      CheckedFs.delete(fs, new Path(target, SchemaMarker))
       graft.pipeline.LsnCheckpoint.write(spark, fencePath, truncateMax)
       truncateMax
     }
@@ -1291,7 +1410,8 @@ object ChangeLogStream {
     *     (`state/<schema>.<table>__fence`) first deletes the moved-aside
     *     copies (`__prev`, which the merge's recovery sweep would
     *     otherwise restore after the clear), then every `__bucket=*`
-    *     directory, and only then writes the fence; a delete that fails
+    *     directory and the schema marker, and only then writes the
+    *     fence; a delete that fails
     *     fails the batch before the fence is written. A crash before the
     *     write re-runs the clear on replay (the truncate is still ahead
     *     of the stored fence); the reverse order could persist a fence
@@ -1309,6 +1429,16 @@ object ChangeLogStream {
     * head's advance) are the ones a replay repeats as no-ops. A failure
     * during the publish leaves some (table, bucket)s published, behind
     * the recovery sweep, as a crash does; a replay completes the batch.
+    *
+    * Schema marker crash order: each store's `_graft_schema` (its Spark
+    * schema, which readers merge with the footers they open instead of
+    * reading every footer) is widened after the staging write and
+    * before the publish. A crash between the two leaves a marker wider
+    * than any published file: a column the batch added reads as NULL
+    * everywhere until the replay publishes the batch. The reverse order
+    * could publish a file whose column no marker names, and a lookup of
+    * another bucket would not see that column. The TRUNCATE clear
+    * deletes the marker with the buckets (step 1 below).
     *
     * Conservation law (asserted by the spec): every wire message is in
     * exactly one of {dead ledger, late ledger, Σ logged per-table rows}

@@ -10,7 +10,8 @@ object TestSession {
   /** The suites call module query maps and operator internals directly,
     * past the install that `SparkEntry.queries` does, so the shared
     * session gets graft's set-up once, here. `spark.newSession()` stays
-    * bare.
+    * bare. Spark logs at WARN, as under Verify: no assertion reads the
+    * log, and INFO wrote about half a million lines per full test run.
     */
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -19,6 +20,7 @@ object TestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.install(s)
     s
   }

@@ -349,6 +349,99 @@ class SinkSpec extends AnyFunSuite {
     assert(streaming.ChangeLogStream.readTable(spark, dir, "public", "users")
       .count() === before + 5)
   }
+
+  test("a point lookup lists and opens one bucket; a warm batch lists and reads only its touched buckets") {
+    // the schema marker makes the store's schema table metadata: without
+    // it a lookup globbed every bucket and read every footer, and the
+    // merge listed the whole store, so both grew with the store
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftcount.impl", classOf[CountingFs].getName)
+    conf.setBoolean("fs.graftcount.impl.disable.cache", true)
+    val dir = "graftcount://" +
+      java.nio.file.Files.createTempDirectory("graft_count").toString + "/state"
+    val local = new java.net.URI(dir).getPath
+    val nb = 64
+    val sink = streaming.ChangeLogStream.upsertBatch(dir, Seq("key"), "lsn", nb) _
+    sink((1L to 2000L).map(k => (k, k, s"v$k")).toDF("key", "lsn", "v"), 0L)
+    def bucket(k: Long) = spark.range(1).select(lit(k).as("key"))
+      .select(streaming.ChangeLogStream.bucketOf(Seq("key"), nb)).head.getInt(0)
+    assert((1L to 2000L).map(bucket).toSet.size === nb, "fixture: every bucket holds data")
+    def dataFiles(b: Int) = new java.io.File(s"$local/__bucket=$b").list()
+      .filter(n => !n.startsWith(".") && !n.startsWith("_")).map(n => s"$local/__bucket=$b/$n").toSeq
+    val markers = Set(s"$local/_graft_buckets", s"$local/_graft_schema")
+
+    val b7 = bucket(7L)
+    CountingFs.reset()
+    val hit = streaming.ChangeLogStream.stateForKey(spark, dir, Seq("key"), Seq(7L))
+      .select($"v").as[String].collect().toSeq
+    assert(hit === Seq("v7"))
+    assert(CountingFs.listed === Seq(s"$local/__bucket=$b7"), "a lookup lists its bucket only")
+    val opened = CountingFs.opened
+    assert(opened.toSet === markers ++ dataFiles(b7), "a lookup opens its bucket's files and the markers")
+    assert(dataFiles(b7).forall(f => opened.count(_ == f) == 1), s"each data file once: $opened")
+
+    val keys = Seq(3L, 50L, 99L, 400L, 777L, 1200L, 1500L, 1999L)
+    val touched = keys.map(bucket).toSet
+    CountingFs.reset()
+    sink(keys.map(k => (k, 5000L + k, s"w$k")).toDF("key", "lsn", "v"), 1L)
+    def inStore(p: String) = p.startsWith(s"$local/")
+    def inTouched(p: String) = touched.exists(b => p == s"$local/__bucket=$b" || p.startsWith(s"$local/__bucket=$b/"))
+    val strayListed = CountingFs.listed.filter(p => inStore(p) && !inTouched(p))
+    val strayOpened = CountingFs.opened.filter(p => inStore(p) && !inTouched(p) && !markers(p))
+    assert(strayListed.isEmpty, s"a warm batch listed untouched paths of the store: $strayListed")
+    assert(strayOpened.isEmpty, s"a warm batch opened untouched files of the store: $strayOpened")
+    assert(CountingFs.opened.exists(p => inStore(p) && inTouched(p)), "the merge reads its touched buckets")
+    val state = streaming.ChangeLogStream.readState(spark, dir)
+      .select($"key", $"v").as[(Long, String)].collect().toMap
+    assert(state.size === 2000 && keys.forall(k => state(k) == s"w$k") && state(7L) === "v7")
+  }
+
+  test("source audit: no parquet reader builder and no configuration parse in src/main") {
+    // `ParquetReader.builder(support, path)` and `new Configuration()`
+    // both parse Hadoop's default resources: a point lookup paid 10 ms
+    // for it on every call
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+      }
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    val banned = Seq("ParquetReader.builder(", "new Configuration()",
+      "new org.apache.hadoop.conf.Configuration()")
+    val offenders = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      banned.filter(text.contains).map(w => s"${f.getPath}: $w")
+    }
+    assert(offenders.isEmpty, s"""configuration parse in src/main:
+         |  ${offenders.mkString("\n  ")}""".stripMargin)
+    assert(files.exists(_.getName == "ChangeLogStream.scala"), "the scan must see the source tree")
+  }
+}
+
+/** A local file system under its own scheme that records the paths of
+  * its `listStatus` and `open` calls, in call order.
+  */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftcount:///")
+  override def getScheme: String = "graftcount"
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingFs.listedQ.add(p.toUri.getPath)
+    super.listStatus(p)
+  }
+  override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    CountingFs.openedQ.add(p.toUri.getPath)
+    super.open(p, bufferSize)
+  }
+}
+
+object CountingFs {
+  private val listedQ = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val openedQ = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { listedQ.clear(); openedQ.clear() }
+  def listed: Seq[String] = listedQ.toArray(Array.empty[String]).toSeq
+  def opened: Seq[String] = openedQ.toArray(Array.empty[String]).toSeq
 }
 
 object SinkSpec {
