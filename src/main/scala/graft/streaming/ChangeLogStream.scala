@@ -18,14 +18,13 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, Cast, EqualTo, EvalMode, Expression, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-import graft.functions.expressions.BatchLong
 import graft.pipeline.ChangeLog
 
 /** A raw change event as it arrives on the stream (the `events` corpus
@@ -676,8 +675,9 @@ object ChangeLogStream {
     * Per table, on the driver, in table order: the recovery sweep of
     * `<dir>__prev`, the pinned count, the fence ([[advanceFence]]), the
     * head ([[advanceHead]]), and the touched buckets' read: each touched
-    * bucket directory is listed, and its files are read as explicit
-    * paths under the store's base path, in the store's schema
+    * bucket directory is listed for its footers, and the directories
+    * that hold files are read as explicit paths under the store's base
+    * path, in the store's schema
     * ([[storeSchema]]: the `_graft_schema` marker merged with those
     * files' footers), so a store whose schema does not merge fails the
     * batch before any job. No untouched bucket is listed or opened.
@@ -685,8 +685,7 @@ object ChangeLogStream {
     * rows, repartitioned once on (table, bucket), which meets the law's
     * clustering on (table, bucket, key) and the `partitionBy(table,
     * bucket)` staging write (each table's count, fence and head are
-    * columns looked up by table, and reach generated code by reference,
-    * so a warm batch compiles nothing). A failed job publishes nothing.
+    * columns looked up by table). A failed job publishes nothing.
     * Then each table's schema marker is replaced atomically by its merge
     * with the staged schema, when that widens it, so the marker only
     * ever widens and covers every file before the file publishes. Then
@@ -724,7 +723,7 @@ object ChangeLogStream {
     }
     val (nbs, fences, heads) = layouts.unzip3
     def ofTable(values: Seq[Long]): Column =
-      if (values.distinct.length == 1) GraftShim.column(BatchLong(values.head))
+      if (values.distinct.length == 1) lit(values.head)
       else element_at(typedLit(values), col(TableCol) + 1)
     val rows = (if (fences.forall(_ < 0)) batch else batch.filter(aboveFence(ofTable(fences))))
       .withColumn(BucketCol, bucketOf(law.keyCols, ofTable(nbs)))
@@ -739,13 +738,13 @@ object ChangeLogStream {
     // listed, and only their footers read.
     val conf = spark.sparkContext.hadoopConfiguration
     val marked = merging.map(i => markedSchema(spark, tables(i).dir))
-    val recorded = merging.zip(marked).map { case (i, m) => m.orElse(globbedSchema(spark, tables(i).dir)) }
-    val prior = merging.zip(recorded).flatMap { case (i, schema) =>
+    val prior = merging.zip(marked).flatMap { case (i, marker) =>
       val dir = tables(i).dir
       val files = tables(i).touched.toSeq.flatMap(bucketFiles(fs, dir, _))
       if (files.isEmpty) None
-      else Some(readFiles(spark, dir, files,
-          storeSchema(spark, dir, schema.toSeq ++ files.map(f => sparkSchema(footer(conf, f)))))
+      else Some(spark.read.schema(storeSchema(spark, dir,
+          marker.toSeq ++ files.map(f => sparkSchema(footer(conf, f)))))
+        .option("basePath", dir).parquet(files.map(_.getPath.getParent.toString).distinct: _*)
         .withColumn(TableCol, lit(i)))
     }
     val keys = TableCol +: BucketCol +: law.keyCols
@@ -766,8 +765,8 @@ object ChangeLogStream {
     // widen each store's schema marker by what was staged, before any of
     // its buckets publishes
     val stagedSchema = StructType(merged.schema.filterNot(f => f.name == TableCol || f.name == BucketCol))
-    merging.lazyZip(marked).lazyZip(recorded).foreach { (i, marker, schema) =>
-      val widened = storeSchema(spark, tables(i).dir, schema.toSeq :+ stagedSchema)
+    merging.zip(marked).foreach { case (i, marker) =>
+      val widened = storeSchema(spark, tables(i).dir, marker.toSeq :+ stagedSchema)
       if (!marker.contains(widened))
         graft.pipeline.LsnCheckpoint.replace(spark, s"${tables(i).dir}/$SchemaMarker", widened.json)
     }
@@ -850,17 +849,6 @@ object ChangeLogStream {
     graft.pipeline.LsnCheckpoint.readText(spark, s"$tableDir/$SchemaMarker")
       .map(DataType.fromJson(_).asInstanceOf[StructType])
 
-  /** The merged footers of every data file of the store, which is what
-    * its [[SchemaMarker]] caches: a reader's stand-in for the marker of
-    * a store written before the marker. None without a data file.
-    */
-  private def globbedSchema(spark: SparkSession, tableDir: String): Option[StructType] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = storeFiles(spark, tableDir)
-    if (files.isEmpty) None
-    else Some(storeSchema(spark, tableDir, files.map(f => sparkSchema(footer(conf, f)))))
-  }
-
   /** The latest-state table without the layout's partition column,
     * read with the store's merged schema ([[storeSchema]]): after a
     * schema-evolving batch, rewritten buckets carry the new column
@@ -918,8 +906,7 @@ object ChangeLogStream {
       (i, dt, Cast(Literal(v), dt, tz, EvalMode.TRY).eval())
     }
     // the recorded schema types the key; a bucket file cannot retype it
-    val recorded = markedSchema(spark, tableDir).orElse(globbedSchema(spark, tableDir))
-      .getOrElse(storeSchema(spark, tableDir, Nil))
+    val recorded = markedSchema(spark, tableDir).getOrElse(storeSchema(spark, tableDir, Nil))
     val bucket = bucketExpr(keysIn(recorded).map { case (_, dt, v) => Literal(v, dt) },
       Literal(nb.toLong)).eval().asInstanceOf[Int]
     val files = scala.collection.mutable.ArrayBuffer.empty[ParquetFileReader]
@@ -952,8 +939,7 @@ object ChangeLogStream {
     st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
 
   /** Every data file of the store, in path order: one glob over every
-    * bucket, so only the readers of the whole store (and a store without
-    * a [[SchemaMarker]]) call it.
+    * bucket, so only the reader of the whole store ([[readStore]]) calls it.
     */
   private def storeFiles(spark: SparkSession, tableDir: String): Seq[FileStatus] = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1006,29 +992,8 @@ object ChangeLogStream {
     */
   private def readStore(spark: SparkSession, tableDir: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = storeFiles(spark, tableDir)
-    readFiles(spark, tableDir, files, storeSchema(spark, tableDir,
-      markedSchema(spark, tableDir).toSeq ++ files.map(f => sparkSchema(footer(conf, f)))))
-  }
-
-  /** `files` of the store at `tableDir` as a Spark read in `schema`, with
-    * the [[BucketCol]] partition column: their bucket directories are
-    * the read's paths, `tableDir` its base path, and the listing is the
-    * one the caller already made, so the read lists no directory (and
-    * starts no listing job, however many buckets it covers).
-    */
-  private def readFiles(spark: SparkSession, tableDir: String, files: Seq[FileStatus],
-      schema: StructType): DataFrame = {
-    val listed = files.groupBy(_.getPath.getParent)
-    val known = new FileStatusCache {
-      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path).map(_.toArray)
-      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = ()
-    }
-    val index = new InMemoryFileIndex(spark, listed.keys.toSeq.sortBy(_.toString),
-      Map("basePath" -> tableDir), Some(schema), known)
-    GraftShim.ofRows(spark, LogicalRelation(HadoopFsRelation(index, index.partitionSchema,
-      schema, None, new ParquetFileFormat, Map.empty)(spark)))
+    spark.read.schema(storeSchema(spark, tableDir, markedSchema(spark, tableDir).toSeq ++
+      storeFiles(spark, tableDir).map(f => sparkSchema(footer(conf, f))))).parquet(tableDir)
   }
 
   /** The configuration of [[matchingRows]]: the session's, with the
@@ -1172,7 +1137,7 @@ object ChangeLogStream {
     /** True for a row the mark admits, else false — never null. */
     val onTime: org.apache.spark.sql.Column =
       if (prev < 0) lit(true)
-      else coalesce(eventMicros >= GraftShim.column(BatchLong(prev - delayUs)), lit(false))
+      else coalesce(eventMicros >= prev - delayUs, lit(false))
 
     /** Records this batch's mark, max(prev, batch max): monotone, and
       * deterministic on replay because the same inputs give the same

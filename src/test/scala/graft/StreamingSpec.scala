@@ -1512,22 +1512,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(jobsAt(0) === jobsAt(1), s"jobs per warm batch at 2 and 8 tables: $jobsAt")
   }
 
-  test("production topology: warm micro-batches compile no code") {
-    // a per-batch value (the watermark threshold, the retention head)
-    // inlined as a literal made whole-stage codegen compile new classes
-    // for every batch; read by reference, warm batches reuse the cache
-    import org.apache.spark.metrics.source.CodegenMetrics
-    val base = java.nio.file.Files.createTempDirectory("graft_prodcodegen").toString
-    val sink = ChangeLogStream.fullProductionBatch(base, 10L * 60 * 1000000) _
-    val wires = (0 to 3).map(b => prodBatch(1L + 200L * b, 200, 2))
-    sink(wires(0), 0L) // cold: creates the stores
-    sink(wires(1), 1L) // first warm batch: the merge reads prior rows
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    (2 to 3).foreach(b => sink(wires(b), b.toLong))
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    assert(compiled === 0, s"two warm batches compiled $compiled classes")
-  }
-
   test("production topology: two tables whose envelopes share a key each keep their own row") {
     // the merge keys by (table, bucket, key): an envelope key need not
     // name its table, and one table's row must never overwrite another's
