@@ -1032,84 +1032,76 @@ object Similarity {
         .transform(graft.CachePool.persist)
     }
 
-  /** [[GRAPH_HOPS]] unrolled best-first rounds at the given beam width.
-    * Returns (visited, trace): visited = (q_id, vec_id, cosine) — every
-    * vector ever scored, deduped; trace = one (hop, q_id) row per
-    * scored candidate, the curve's exact cost ledger. Each round's
-    * relations are localCheckpoint'ed LAZILY (the graph_pagerank
-    * convention): visited_{h−1} appears TWICE in visited_h's analyzed
-    * tree (the union AND the beam cut), so without lineage truncation
-    * the plan doubles per round — 2^HOPS copies of the whole
-    * construction chain by the last hop (measured: an 8 GB driver heap
-    * OOMs at sf0.001). Lazy (eager = false) because the checkpoint is
-    * for PLAN truncation, not durability — `Dataset.localCheckpoint`
-    * rewrites the logical plan to a LogicalRDD either way, and eager
-    * would run one extra job per relation per round before the query
-    * even executes. All joins are equi-joins on vec_id/src against the
-    * persisted edge/corpus relations; the per-round frontier is
-    * O(queries · beam · degree) rows — broadcastable at any corpus
-    * size.
+  /** One arm of [[graphWalk]]: its tag, hop-0 entry stride, beam widths
+    * and edge segments as (first hop, (src, dst) edges) in hop order,
+    * the first starting at hop 1.
     */
-  private def graphBeamSearch(s: SparkSession, d: String, beam: Int,
-                              pruned: Boolean = false)
-      : (DataFrame, DataFrame) =
-    graphBeamSearchOver(s, d, beam,
-      if (pruned) "pruned" else "plain",
-      () => if (pruned) graphEdgesPruned(s, d) else graphEdges(s, d))
+  private case class WalkArm(name: String, stride: Long, beams: Seq[Int],
+                             segments: Seq[(Int, DataFrame)])
 
-  /** The per-width view the consumers keep reading: filter the shared
-    * multi-width walk to one beam width and drop the width column. A
-    * width in [[GRAPH_BEAMS]] shares the curve's one memoized chain;
-    * any other width walks alone (same machinery, singleton width set).
+  /** Every arm some walk query reads on this corpus (a constant list;
+    * the bridged arm is read only on the clustered cohort):
+    *  - plain, pruned, bridged: one segment over their edge relation,
+    *    entries at the derived stride, the [[GRAPH_BEAMS]] curve widths;
+    *  - layered (the HNSW hierarchy): entries at mid² (so every entry
+    *    is a middle member — without nesting the first segment has no
+    *    edges), [[GRAPH_MID_HOPS]] rounds over [[midEdges]], then the
+    *    remaining rounds over the base graph; same total hop budget as
+    *    the flat walk, so the curves diff column-wise;
+    *  - inc_append, inc_rebuild: the incremental A/B graphs at the
+    *    shipped [[GRAPH_BEAM]] only.
     */
-  private def graphBeamSearchOver(s: SparkSession, d: String, beam: Int,
-                                  tag: String, edgesFn: () => DataFrame)
-      : (DataFrame, DataFrame) = {
-    val beams = if (GRAPH_BEAMS.contains(beam)) GRAPH_BEAMS else Seq(beam)
-    val (visited, trace) = multiBeamSearchOver(s, d, beams, tag, edgesFn)
-    (visited.filter(col("bw") === beam).drop("bw"),
-      trace.filter(col("bw") === beam).drop("bw"))
+  private def walkArms(s: SparkSession, d: String): Seq[WalkArm] = {
+    val stride = graphStride(s, d)
+    val mid = graphMidStride(s, d)
+    val arms = Seq(
+      WalkArm("plain", stride, GRAPH_BEAMS, Seq(1 -> graphEdges(s, d))),
+      WalkArm("pruned", stride, GRAPH_BEAMS, Seq(1 -> graphEdgesPruned(s, d))),
+      WalkArm("layered", mid * mid, GRAPH_BEAMS, Seq(1 -> midEdges(s, d),
+        (GRAPH_MID_HOPS + 1) -> graphEdges(s, d))),
+      WalkArm("inc_append", stride, Seq(GRAPH_BEAM),
+        Seq(1 -> incAppendedEdges(s, d))),
+      WalkArm("inc_rebuild", stride, Seq(GRAPH_BEAM),
+        Seq(1 -> incRebuiltEdges(s, d))))
+    if (d.endsWith(CLUSTERED_SFX))
+      arms :+ WalkArm("bridged", stride, GRAPH_BEAMS,
+        Seq(1 -> graphEdgesBridged(s, d)))
+    else arms
   }
 
-  /** The search over an arbitrary (src, dst) edge relation, shared per
-    * `tag` (a pure function of dir + construction recipe, like the
-    * pruned flag it generalizes) + the width set. `edgesFn` is by-name
-    * so a memo hit never constructs the edge relation at all. ONE
-    * [[GRAPH_HOPS]]-round chain carries every requested width (r17,
-    * guide §1.2: the hop-round JOB chain — not the per-row work — is
-    * the dominant cost of a walk over any corpus, and the four-point
-    * curve used to run it four times; the `bw`-tagged walk runs it
-    * once for row-identical per-width results). Sharing the walk saves
-    * three queries plus every bench pass from re-running the 8-round
-    * chain (15.5 s for the 4-width curve at sf0.1 before). The visited
-    * set and cost ledger stay DISTRIBUTED, lazily-checkpointed
-    * DataFrames: collecting them to the driver grew with the corpus
-    * through the hop-0 scan.
+  /** The one graph walk of a corpus dir, shared by every walk query:
+    * (visited, trace) for every (arm, bw) pair of [[walkArms]], walked
+    * by ONE [[GRAPH_HOPS]]-round chain: the hop-round jobs, not the
+    * per-row work, dominate a walk at any corpus size, so the arms and
+    * widths share them. Each (arm, bw) seeds from its arm's entry scan
+    * (one scan per distinct stride); each query filters its own
+    * (arm, bw). The visited set and the trace stay distributed, lazily
+    * checkpointed DataFrames: collected to the driver they would grow
+    * with the corpus through the hop-0 scan.
     */
-  private def multiBeamSearchOver(s: SparkSession, d: String,
-                                  beams: Seq[Int], tag: String,
-                                  edgesFn: () => DataFrame)
-      : (DataFrame, DataFrame) = {
-    graft.CachePool.shared(s, d,
-        s"ann_graph_search/${beams.mkString(",")}/$tag") {
-      val edges = edgesFn()
-      val corpus = corpusDf(s, d)
-      val qs = queriesDf(s, d)
-      val seed = withWidths(entryScan(s, d, graphStride(s, d)), beams)
-      val (visited, traces) =
-        beamWalkRounds(qs, corpus, edges, seed, GRAPH_HOPS, 0)
-      val trace = (seedTrace(seed) +: traces).reduce(_ unionByName _)
-        .select(col("hop").cast("int").as("hop"), col("q_id"), col("bw"))
-        .localCheckpoint(eager = false) // flatten the 9-way union too
-      (visited.select("bw", "q_id", "vec_id", "cosine"), trace)
+  private def graphWalk(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    graft.CachePool.shared(s, d, "ann_graph_walk") {
+      val arms = walkArms(s, d)
+      val scans = arms.map(_.stride).distinct
+        .map(st => st -> entryScan(s, d, st)).toMap
+      val seed = arms.map { a =>
+        scans(a.stride).select(lit(a.name).as("arm"),
+          explode(array(a.beams.map(b => lit(b)): _*)).as("bw"),
+          col("q_id"), col("vec_id"), col("cosine"))
+      }.reduce(_ unionByName _)
+      beamWalkRounds(queriesDf(s, d), corpusDf(s, d),
+        arms.map(a => a.name -> a.segments), seed, GRAPH_HOPS)
     }
-  }
 
-  /** Replicate a relation once per beam width — the multi-width walk's
-    * seed: every width starts from the identical hop-0 entry scan.
+  /** One arm's slice of [[graphWalk]]: visited (bw, q_id, vec_id,
+    * cosine) and trace (hop, q_id, bw).
     */
-  private def withWidths(df: DataFrame, beams: Seq[Int]): DataFrame =
-    df.withColumn("bw", explode(array(beams.map(b => lit(b)): _*)))
+  private def walkOf(s: SparkSession, d: String, arm: String)
+      : (DataFrame, DataFrame) = {
+    val (visited, trace) = graphWalk(s, d)
+    (visited.filter(col("arm") === arm).drop("arm"),
+      trace.filter(col("arm") === arm).drop("arm"))
+  }
 
   /** hop 0 — the coarse entry layer: brute-scan the given-stride
     * sample, keep everything scored (the ledger charges it as hop 0).
@@ -1122,105 +1114,106 @@ object Similarity {
       .select("q_id", "vec_id", "cosine")
       .localCheckpoint(eager = false)
 
-  private def seedTrace(seed: DataFrame): DataFrame =
-    seed.select(lit(0).cast("int").as("hop"), col("q_id"), col("bw"))
-
-  /** One greedy walk SEGMENT: `hops` frontier-disciplined rounds over
-    * `edges` starting from `visited0`, trace hops labeled
-    * hopBase+1..hopBase+hops. The expanded set starts EMPTY per segment
-    * — each layer restarts its discipline, exactly as HNSW restarts the
-    * candidate list per level (a node expanded over the MIDDLE layer's
-    * edges has never explored its base-layer edges). HNSW's ef-search
-    * discipline: each round expands the best beam-width nodes NOT YET
-    * EXPANDED — naive best-first over the whole visited set was
-    * measured first: the beam stabilizes after ~3 rounds and the
-    * remaining hops re-expand the same nodes for zero new candidates
-    * (sf0.1 recall 0.44 at beam 8 vs 0.72 with the discipline).
+  /** The greedy beam walk of many (arm, bw) pairs in one chain of `hops`
+    * rounds. `visited0` is the hop-0 seed (arm, bw, q_id, vec_id,
+    * cosine); `corpus` is (vec_id, e) and `qs` (q_id, qe). Returns
+    * (visited, trace): visited = (arm, bw, q_id, vec_id, cosine), every
+    * vector ever scored, deduped; trace = (hop, arm, bw, q_id), one row
+    * per scored candidate with the seed as hop 0 — the curves' exact
+    * cost ledger.
     *
-    * MULTI-WIDTH (r17): every relation carries a `bw` column and the
-    * per-round window partitions by (bw, q_id), so each width's
-    * frontier, visited set and ledger are ROW-IDENTICAL to the
-    * single-width walk's (widths never mix inside a window partition,
-    * a join key, or a group) while the round chain — the hop-round
-    * JOBS that dominate walk cost at any scale — runs once for the
-    * whole width set instead of once per width (the 4-point curves
-    * ran 4 × [[GRAPH_HOPS]] rounds; now [[GRAPH_HOPS]]).
+    * Keys: every window, anti-join, edge join and group is keyed by
+    * (arm, bw, q_id), so each pair's frontier, visited set and trace
+    * are row-identical to that pair walked alone: pairs never mix in a
+    * window partition, a join key or a group.
+    *
+    * Edges: `arms` gives each arm its segments (first hop, (src, dst)
+    * edges). Round h joins one arm-tagged relation holding, per arm,
+    * the segment with the largest first hop ≤ h.
+    *
+    * Segment restart: at a segment's first hop after hop 1, that arm's
+    * expanded set restarts EMPTY, exactly as HNSW restarts the
+    * candidate list per level (a node expanded over the middle layer's
+    * edges has never explored its base-layer edges); its visited set
+    * carries over. HNSW's ef-search discipline: each round expands the
+    * best beam-width nodes NOT YET EXPANDED — naive best-first over the
+    * whole visited set was measured first: the beam stabilizes after ~3
+    * rounds and the remaining hops re-expand the same nodes for zero
+    * new candidates (sf0.1 recall 0.44 at beam 8 vs 0.72 with the
+    * discipline).
+    *
+    * Each round's frontier, scored set and visited set are
+    * localCheckpoint'ed LAZILY (the graph_pagerank convention):
+    * visited_{h−1} appears TWICE in visited_h's analyzed tree (the
+    * union AND the beam cut), so without lineage truncation the plan
+    * doubles per round — 2^HOPS copies of the whole construction chain
+    * by the last hop (measured: an 8 GB driver heap OOMs at sf0.001).
+    * Lazy (eager = false) because the checkpoint is for PLAN
+    * truncation, not durability; eager would run one extra job per
+    * relation per round. All joins are equi-joins against the edge and
+    * corpus relations; the per-round frontier is O(pairs · queries ·
+    * beam · degree) rows — broadcastable at any corpus size.
     */
-  private def beamWalkRounds(qs: DataFrame, corpus: DataFrame,
-      edges: DataFrame, visited0: DataFrame, hops: Int,
-      hopBase: Int): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def beamWalkRounds(qs: DataFrame, corpus: DataFrame,
+      arms: Seq[(String, Seq[(Int, DataFrame)])], visited0: DataFrame,
+      hops: Int): (DataFrame, DataFrame) = {
+    val key = Seq("arm", "bw", "q_id")
     var visited = visited0
     val traces = Seq.newBuilder[DataFrame]
+    traces += visited0.select(lit(0).as("hop"), col("arm"), col("bw"),
+      col("q_id"))
     var expanded: DataFrame = null
-    val wB = Window.partitionBy("bw", "q_id")
+    val wB = Window.partitionBy(key.map(col): _*)
       .orderBy(col("cosine").desc, col("vec_id"))
     for (h <- 1 to hops) {
+      val restart = arms.collect {
+        case (arm, segs) if h > 1 && segs.exists(_._1 == h) => arm }
+      if (expanded != null && restart.nonEmpty)
+        expanded = expanded.filter(!col("arm").isin(restart: _*))
+      val edges = arms.map { case (arm, segs) =>
+        segs.filter(_._1 <= h).last._2
+          .select(lit(arm).as("arm"), col("src"), col("dst"))
+      }.reduce(_ unionByName _)
       val unexpanded =
         if (expanded == null) visited
-        else visited.join(expanded, Seq("bw", "q_id", "vec_id"), "left_anti")
+        else visited.join(expanded, key :+ "vec_id", "left_anti")
       val frontier = unexpanded.withColumn("brn", row_number().over(wB))
         .filter(col("brn") <= col("bw")).drop("brn")
         .localCheckpoint(eager = false) // expansion + expanded set
       val expand = frontier
-        .select(col("bw"), col("q_id"), col("vec_id").as("src"))
-        .join(edges, "src")
-        .select(col("bw"), col("q_id"), col("dst").as("vec_id")).distinct()
+        .select(col("arm"), col("bw"), col("q_id"), col("vec_id").as("src"))
+        .join(edges, Seq("arm", "src"))
+        .select(col("arm"), col("bw"), col("q_id"), col("dst").as("vec_id"))
+        .distinct()
       val scoredNew = expand.join(broadcast(qs), "q_id")
         .join(corpus, "vec_id")
         .withColumn("cosine", cos(col("qe"), col("e")))
-        .select("bw", "q_id", "vec_id", "cosine")
+        .select("arm", "bw", "q_id", "vec_id", "cosine")
         .localCheckpoint(eager = false) // visited + the trace ledger
-      traces += scoredNew
-        .select(lit(hopBase + h).cast("int").as("hop"), col("q_id"),
-          col("bw"))
+      traces += scoredNew.select(lit(h).as("hop"), col("arm"), col("bw"),
+        col("q_id"))
       expanded = {
-        val f = frontier.select("bw", "q_id", "vec_id")
+        val f = frontier.select("arm", "bw", "q_id", "vec_id")
         if (expanded == null) f else expanded.unionByName(f)
       }
       visited = visited.unionByName(scoredNew)
-        .groupBy("bw", "q_id", "vec_id").agg(max("cosine").as("cosine"))
+        .groupBy("arm", "bw", "q_id", "vec_id").agg(max("cosine").as("cosine"))
         .localCheckpoint(eager = false)
     }
-    (visited, traces.result())
+    val trace = traces.result().reduce(_ unionByName _)
+      .localCheckpoint(eager = false) // flatten the (hops + 1)-way union
+    (visited.select("arm", "bw", "q_id", "vec_id", "cosine"), trace)
   }
 
-  /** The two-layer walk (r14 verdict #6 — the actual HNSW hierarchy):
-    * with the entry stride derived, a 10⁹-vector corpus still scans
-    * only ≈32 entries at hop 0, but those entries are then far from
-    * everything — the walk crosses the whole base graph on a fixed hop
-    * budget. The middle layer is the stride^(1/2) convention: members
-    * are every [[graphMidStride]]-th vector (mid = ceil(√stride)), the
-    * entry layer RE-DERIVES as mid² so the hierarchy NESTS (every entry
-    * is a middle member — without nesting the entries have no middle
-    * edges and the first segment is dead). Search: hop-0 scan of the
-    * mid²-stride entries, [[GRAPH_MID_HOPS]] rounds over the
-    * middle-member graph (edge volume O(n/mid · G)), then the
-    * remaining rounds over the base graph — same total hop budget as
-    * the flat walk, so `ann_graph_layered_curve` is a fair column-wise
-    * A/B against `ann_graph_beam_curve`.
-    */
-  private def graphLayeredSearch(s: SparkSession, d: String,
-                                 beams: Seq[Int]): (DataFrame, DataFrame) =
-    graft.CachePool.shared(s, d,
-      s"ann_graph_search/${beams.mkString(",")}/layered") {
-        val corpus = corpusDf(s, d)
-        val qs = queriesDf(s, d)
-        val mid = graphMidStride(s, d)
-        val seed = withWidths(entryScan(s, d, mid * mid), beams)
-        val (v1, t1) = beamWalkRounds(qs, corpus, midEdges(s, d), seed,
-          GRAPH_MID_HOPS, 0)
-        val (v2, t2) = beamWalkRounds(qs, corpus, graphEdges(s, d), v1,
-          GRAPH_HOPS - GRAPH_MID_HOPS, GRAPH_MID_HOPS)
-        val trace = ((seedTrace(seed) +: t1) ++ t2).reduce(_ unionByName _)
-          .select(col("hop").cast("int").as("hop"), col("q_id"), col("bw"))
-          .localCheckpoint(eager = false)
-        (v2.select("bw", "q_id", "vec_id", "cosine"), trace)
-      }
-
-  /** mid = ceil(√stride): the middle layer keeps ≈ n/√stride members —
-    * the geometric mean between the full corpus and the ≈32-row entry
+  /** The two-layer walk's middle layer (r14 verdict #6 — the actual HNSW
+    * hierarchy): with the entry stride derived, a 10⁹-vector corpus
+    * still scans only ≈32 entries at hop 0, but those entries are then
+    * far from everything — the walk crosses the whole base graph on a
+    * fixed hop budget. The middle layer is the stride^(1/2) convention:
+    * members are every mid-th vector, mid = ceil(√stride) — the
+    * geometric mean between the full corpus and the ≈32-row entry
     * layer, which is what collapsing HNSW's log-many levels into one
-    * middle level costs.
+    * middle level costs. Its edge volume is O(n/mid · G).
     */
   private[graft] def graphMidStride(s: SparkSession, d: String): Long =
     math.max(1L,
@@ -1239,34 +1232,22 @@ object Similarity {
         .transform(graft.CachePool.persist)
     }
 
-  /** Shared operating-point curve (the ann_ivf_probe_curve convention):
-    * recall vs candidates-scored at beam ∈ [[GRAPH_BEAMS]], over the
-    * plain or hub-pruned edge relation — `ann_graph_beam_curve` and
-    * `ann_graph_prune_curve` are this builder's two arms, so the A/B
-    * cannot drift apart structurally.
+  /** Operating-point curve of one walk arm (the ann_ivf_probe_curve
+    * convention): recall vs candidates-scored at beam ∈ [[GRAPH_BEAMS]].
+    * Every curve query is this builder over its arm, so the A/B arms
+    * cannot drift apart structurally. ONE window + ONE hit-join + ONE
+    * ledger aggregation grouped by bw. The width spine LEFT-joins the
+    * grouped counts so an empty corpus still reports every operating
+    * point with zero counts; the final ascending sort orders the rows
+    * by width.
     */
-  private def graphCurve(s: SparkSession, d: String, pruned: Boolean)
-      : DataFrame =
-    graphCurveOver(s, d, multiBeamSearchOver(s, d, GRAPH_BEAMS,
-      if (pruned) "pruned" else "plain",
-      () => if (pruned) graphEdgesPruned(s, d) else graphEdges(s, d)))
-
-  /** The curve report over a multi-width (bw-tagged) search pair: ONE
-    * window + ONE hit-join + ONE ledger aggregation grouped by bw (r17
-    * — previously each width ran its own topK + three aggregates: 4×
-    * the jobs over the same cached rows). The width spine LEFT-joins
-    * the grouped counts so an empty corpus still reports every
-    * operating point with zero counts, exactly as the per-width
-    * aggregates did; the final ascending sort reproduces the old
-    * union-in-width-order row order.
-    */
-  private def graphCurveOver(s: SparkSession, d: String,
-      searchAll: (DataFrame, DataFrame)): DataFrame = {
+  private def graphCurveOver(s: SparkSession, d: String, arm: String)
+      : DataFrame = {
     import s.implicits._
-    // hit-join per beam width; shared memo (r17) — the five
-    // curve arms and the IVFADC knob read one persisted ground truth
+    // shared memo: the curve arms and the IVFADC knob read one
+    // persisted ground truth
     val exact = annExactTopK(s, d)
-    val (visitedAll, traceAll) = searchAll
+    val (visitedAll, traceAll) = walkOf(s, d, arm)
     val wB = Window.partitionBy("bw", "q_id")
       .orderBy(col("cosine").desc, col("vec_id"))
     val approx = visitedAll.withColumn("rn", row_number().over(wB))
@@ -1784,10 +1765,8 @@ object Similarity {
     // flat / IVF / IVFADC / LSH: the deterministic small-world layer
     // (see [[GRAPH_DEGREE]] scaladoc). Ships the standard top-k shape
     // at the [[GRAPH_BEAM]] operating point.
-    "ann_graph_topk" -> ((s, d) => {
-      val (visited, _) = graphBeamSearch(s, d, GRAPH_BEAM)
-      topK(visited)
-    }),
+    "ann_graph_topk" -> ((s, d) =>
+      topK(walkOf(s, d, "plain")._1.filter(col("bw") === GRAPH_BEAM))),
 
     // Measured recall of the graph tier against the brute-force ground
     // truth (the ann_ivf_recall convention) — what the fixed entry +
@@ -1812,7 +1791,7 @@ object Similarity {
     // knob buys recall with; this table next to the IVF curve and the
     // IVFADC recall is what a 100 TB index owner reads before choosing
     // a tier.
-    "ann_graph_beam_curve" -> ((s, d) => graphCurve(s, d, pruned = false)),
+    "ann_graph_beam_curve" -> ((s, d) => graphCurveOver(s, d, "plain")),
 
     // The hub-prune A/B arm of the curve above: the IDENTICAL search at
     // the identical operating points over [[graphEdgesPruned]] (per-node
@@ -1835,10 +1814,10 @@ object Similarity {
     // one relation fewer to build), but the clustered arm is the
     // evidence that a deployment on real embeddings should turn the
     // prune ON; both curves keep that decision measured.
-    "ann_graph_prune_curve" -> ((s, d) => graphCurve(s, d, pruned = true)),
+    "ann_graph_prune_curve" -> ((s, d) => graphCurveOver(s, d, "pruned")),
 
     // The HIERARCHY arm of the curve A/B (r14 verdict #6 — see
-    // [[graphLayeredSearch]]): hop-0 scan of the mid²-stride entries,
+    // [[walkArms]]' layered arm): hop-0 scan of the mid²-stride entries,
     // GRAPH_MID_HOPS rounds over the √stride middle-member graph, the
     // remaining rounds over the base graph — the same total hop budget
     // as ann_graph_beam_curve, so the two tables diff column-wise.
@@ -1858,8 +1837,7 @@ object Similarity {
     // where 32 flat entries are ~7 hops from anywhere and the middle
     // segment is what makes the walk start close. Kept as a standing
     // curve so that regime's decision is a re-measure, not a rebuild.
-    "ann_graph_layered_curve" -> ((s, d) =>
-      graphCurveOver(s, d, graphLayeredSearch(s, d, GRAPH_BEAMS))),
+    "ann_graph_layered_curve" -> ((s, d) => graphCurveOver(s, d, "layered")),
 
     // The BUILD half of the graph tier's cost story (the search half is
     // ann_graph_beam_curve): the one-off construction price a 100 TB
@@ -2002,23 +1980,14 @@ object Similarity {
     // the hub-overload worry shows up as edge volume, not lost recall,
     // which is what the per-arm edge/candidate columns are for.
     "ann_incremental_graph" -> ((s, d) => {
-      val exact = topK(corpusDf(s, d).join(broadcast(queriesDf(s, d)))
-          .withColumn("cosine", cos(col("qe"), col("e"))))
-        .select("q_id", "vec_id")
-        .transform(graft.CachePool.persist) // hit-join per arm
-      def armRow(arm: String, tag: String, edgesFn: () => DataFrame)
-          : DataFrame = {
-        // singleton width set: these arms only ever search the shipped
-        // beam, so the multi-width chain would walk three widths nobody
-        // reads (r17 — the curve tags share their 4-width chain instead)
-        val (visitedW, traceW) =
-          multiBeamSearchOver(s, d, Seq(GRAPH_BEAM), tag, edgesFn)
-        val (visited, trace) =
-          (visitedW.filter(col("bw") === GRAPH_BEAM).drop("bw"),
-            traceW.filter(col("bw") === GRAPH_BEAM).drop("bw"))
-        val approx = topK(visited).select("q_id", "vec_id")
-        val ne = edgesFn().agg(count(lit(1)).as("n_edges"))
-        val cand = trace.agg(count(lit(1)).as("candidates_scored"))
+      val exact = annExactTopK(s, d)
+      def armRow(arm: String, tag: String, edges: DataFrame): DataFrame = {
+        val (visited, trace) = walkOf(s, d, tag)
+        val approx = topK(visited.filter(col("bw") === GRAPH_BEAM))
+          .select("q_id", "vec_id")
+        val ne = edges.agg(count(lit(1)).as("n_edges"))
+        val cand = trace.filter(col("bw") === GRAPH_BEAM)
+          .agg(count(lit(1)).as("candidates_scored"))
         val hit = exact.join(approx, Seq("q_id", "vec_id"))
           .agg(count(lit(1)).as("total_hits"))
         val ex = exact.agg(count(lit(1)).as("exact_rows"))
@@ -2029,9 +1998,8 @@ object Similarity {
             (col("total_hits").cast("double") /
               col("exact_rows").cast("double")).as("recall"))
       }
-      armRow("appended", "inc_append", () => incAppendedEdges(s, d))
-        .unionByName(armRow("rebuilt", "inc_rebuild",
-          () => incRebuiltEdges(s, d)))
+      armRow("appended", "inc_append", incAppendedEdges(s, d))
+        .unionByName(armRow("rebuilt", "inc_rebuild", incRebuiltEdges(s, d)))
     }),
 
     // ── Clustered-cohort arms (r14 verdict #1) ─────────────────────────
@@ -2052,10 +2020,10 @@ object Similarity {
     // clusters align with Voronoi cells, the regime the method was
     // designed for, vs 0.868 uniform).
     "ann_clustered_beam_curve" -> ((s, d) =>
-      graphCurve(s, clusteredDir(d), pruned = false)),
+      graphCurveOver(s, clusteredDir(d), "plain")),
 
     "ann_clustered_prune_curve" -> ((s, d) =>
-      graphCurve(s, clusteredDir(d), pruned = true)),
+      graphCurveOver(s, clusteredDir(d), "pruned")),
 
     "ann_clustered_incremental_graph" -> ((s, d) =>
       queries("ann_incremental_graph")(s, clusteredDir(d))),
@@ -2137,8 +2105,7 @@ object Similarity {
     // matches recall at lower cost, large-stride (~3·10⁷ at 10⁹
     // vectors) = the regime it exists for, still a re-measure.
     "ann_clustered_layered_curve" -> ((s, d) =>
-      graphCurveOver(s, clusteredDir(d),
-        graphLayeredSearch(s, clusteredDir(d), GRAPH_BEAMS))),
+      graphCurveOver(s, clusteredDir(d), "layered")),
 
     // The BRIDGE arm (r16 verdict #1 — see [[graphEdgesBridged]]): the
     // identical walk at the identical operating points over the base
@@ -2165,9 +2132,7 @@ object Similarity {
     // crossings that cap sparse-cell recall, at noise-level cost where
     // the graph is already navigable.
     "ann_clustered_bridge_curve" -> ((s, d) =>
-      graphCurveOver(s, clusteredDir(d),
-        multiBeamSearchOver(s, clusteredDir(d), GRAPH_BEAMS, "bridged",
-          () => graphEdgesBridged(s, clusteredDir(d))))),
+      graphCurveOver(s, clusteredDir(d), "bridged")),
 
     // The ROTATION arm of the cohort A/B: ann_opq_rotation's honest
     // expectation on uniform data was ≈ 0 (OPQ wins by equalizing
@@ -3356,7 +3321,7 @@ object Similarity {
        |  GROUP BY 1, 2)""".stripMargin
 
   /** Shared curve oracle over either edge relation and either cohort
-    * base — the SQL mirror of [[graphCurve]]'s arms. `extraCtes`
+    * base — the SQL mirror of [[graphWalk]]'s flat arms. `extraCtes`
     * appends an arm-specific edge-relation chain (the bridge arm).
     */
   private def graphCurveSql(edgesCte: String,
@@ -3396,7 +3361,7 @@ object Similarity {
   private lazy val annGraphBeamCurveSql = graphCurveSql("gedges")
   private lazy val annGraphPruneCurveSql = graphCurveSql("gpruned")
 
-  /** The layered-walk curve oracle — mirror of [[graphLayeredSearch]]:
+  /** The layered-walk curve oracle — mirror of [[walkArms]]' layered arm:
     * the √stride middle-member graph, the mid²-stride entry layer, and
     * per beam width one GRAPH_MID_HOPS segment over the middle edges
     * chained into a (GRAPH_HOPS − GRAPH_MID_HOPS) segment over the base
